@@ -4988,6 +4988,20 @@ def _q_tile_pyramid(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+def _customer_points(spark, sf_dir: str) -> DataFrame:
+    """Customer point layer behind the point-format fixtures: geometry
+    from the shared scatter SQL plus custkey, name and nation key.
+    The ST_ functions must already be registered."""
+    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    return c.select(
+        F.expr(f"ST_MakePoint({synth.POINT_LON_SQL}, "
+               f"{synth.POINT_LAT_SQL})").alias("geom"),
+        F.col("c_custkey").cast("long").alias("custkey"),
+        F.col("c_name").alias("name"),
+        F.col("c_nationkey").cast("long").alias("nat"),
+    )
+
+
 def _shp_fixture_base(spark, sf_dir: str, kind: str) -> str:
     """Deterministic shapefile fixture derived from the driver parquet
     tables (written once per sf_dir; .shp stores IEEE doubles directly
@@ -5003,14 +5017,7 @@ def _shp_fixture_base(spark, sf_dir: str, kind: str) -> str:
         return base
     register_st_functions(spark)
     if kind == "shp_pts":
-        c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-        df = c.select(
-            F.expr(f"ST_MakePoint({synth.POINT_LON_SQL}, "
-                   f"{synth.POINT_LAT_SQL})").alias("geom"),
-            F.col("c_custkey").cast("long").alias("custkey"),
-            F.col("c_name").alias("name"),
-            F.col("c_nationkey").cast("long").alias("nat"),
-        )
+        df = _customer_points(spark, sf_dir)
     else:  # shp_aoi: polygon layer
         df = synth.aoi(spark, sf_dir, with_wkb=True).select(
             "geom", "poly_id", "category", "population")
@@ -5133,14 +5140,7 @@ def _fgb_fixture_path(spark, sf_dir):
     tag = _os.path.basename(_os.path.normpath(sf_dir))
     path = _os.path.join(tempfile.gettempdir(), f"gdal_spark_fgb_{tag}_v1.fgb")
     if not _os.path.exists(path):
-        c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-        df = c.select(
-            F.expr(f"ST_MakePoint({synth.POINT_LON_SQL}, "
-                   f"{synth.POINT_LAT_SQL})").alias("geom"),
-            F.col("c_custkey").cast("long").alias("custkey"),
-            F.col("c_name").alias("name"),
-            F.col("c_nationkey").cast("long").alias("nat"),
-        )
+        df = _customer_points(spark, sf_dir)
         FGB.write_fgb(df, path, geometry_type=FGB.GT_POINT)
     return path
 
@@ -5200,14 +5200,7 @@ def _q_gpkg_roundtrip(spark, sf_dir):
     tag = _os.path.basename(_os.path.normpath(sf_dir))
     path = _os.path.join(tempfile.gettempdir(), f"gdal_spark_gpkg_{tag}_v1.gpkg")
     if not _os.path.exists(path):
-        c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-        df = c.select(
-            F.expr(f"ST_MakePoint({synth.POINT_LON_SQL}, "
-                   f"{synth.POINT_LAT_SQL})").alias("geom"),
-            F.col("c_custkey").cast("long").alias("custkey"),
-            F.col("c_name").alias("name"),
-            F.col("c_nationkey").cast("long").alias("nat"),
-        )
+        df = _customer_points(spark, sf_dir)
         GP.write_gpkg(df, path, "customer_pts")
     got = GP.read_gpkg(spark, path, "customer_pts")
     return got.select(
@@ -5233,14 +5226,7 @@ def _q_csv_wkt_roundtrip(spark, sf_dir):
     tag = _os.path.basename(_os.path.normpath(sf_dir))
     path = _os.path.join(tempfile.gettempdir(), f"gdal_spark_csvf_{tag}_v1")
     if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-        df = c.select(
-            F.expr(f"ST_MakePoint({synth.POINT_LON_SQL}, "
-                   f"{synth.POINT_LAT_SQL})").alias("geom"),
-            F.col("c_custkey").cast("long").alias("custkey"),
-            F.col("c_name").alias("name"),
-            F.col("c_nationkey").cast("long").alias("nat"),
-        )
+        df = _customer_points(spark, sf_dir)
         CSVF.write_csv_features(df, path)
     got = CSVF.read_csv_features(spark, path)
     # %.15g WKT keeps 15 significant digits (the reference's print
@@ -5262,37 +5248,53 @@ FROM customer
 """
 
 
+# ---------------------------------------------------------------------------
+# Per-order codec round trips: one closed-form fixture per sampled order,
+# encoded and decoded inside Arrow batches; each oracle regenerates the
+# per-order stats row in SQL
+# ---------------------------------------------------------------------------
+
+
+def _per_order(spark, sf_dir, residue, schema, row):
+    """One stats row per order with ``o_orderkey % 200 = residue``:
+    ``row(okey)`` builds, encodes and decodes that order's fixture and
+    returns a tuple in the column order of the DDL ``schema``."""
+    import pandas as _pd
+
+    columns = [field.split()[0] for field in schema.split(",")]
+    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    okeys = o.filter(f"o_orderkey % 200 = {residue}").select(
+        F.col("o_orderkey").cast("long").alias("okey"))
+
+    def run(batches):
+        for pdf in batches:
+            yield _pd.DataFrame(
+                [row(int(okey)) for okey in pdf["okey"]], columns=columns)
+
+    return okeys.repartition(32).mapInPandas(run, schema=schema)
+
+
 def _q_aaigrid_roundtrip(spark, sf_dir):
     """AAIGrid (Arc/Info ASCII Grid, frmts/aaigrid/aaigriddataset.cpp)
     encode→decode round-trip, one 16×16 closed-form DEM per sampled
     order: grid v=(3r+7c+okey)%97 renders to the 6-line-header text
     form and back inside Arrow batches; per-image stats prove every
     cell survived. Oracle regenerates the formula in SQL."""
-    import pandas as _pd
-
     from gdal_spark.raster import simple_formats as SFMT
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ids = o.filter("o_orderkey % 200 = 0").select(
-        F.col("o_orderkey").cast("long").alias("okey"))
+    r, c = _np.meshgrid(_np.arange(16), _np.arange(16), indexing="ij")
 
-    def run(batches):
-        r, c = _np.meshgrid(_np.arange(16), _np.arange(16), indexing="ij")
-        for pdf in batches:
-            outs = []
-            for okey in pdf["okey"]:
-                a = ((3 * r + 7 * c + int(okey)) % 97).astype(_np.int32)
-                back, hdr = SFMT.aaigrid_decode(
-                    SFMT.aaigrid_encode(a, xll=float(okey), cellsize=0.5,
-                                        nodata=-9999))
-                assert hdr["xllcorner"] == float(okey)
-                outs.append((int(okey), int(back.min()), int(back.max()),
-                             float(back.sum()), int(back.size)))
-            yield _pd.DataFrame(
-                outs, columns=["okey", "vmin", "vmax", "vsum", "n"])
+    def row(okey):
+        a = ((3 * r + 7 * c + okey) % 97).astype(_np.int32)
+        back, hdr = SFMT.aaigrid_decode(
+            SFMT.aaigrid_encode(a, xll=float(okey), cellsize=0.5,
+                                nodata=-9999))
+        assert hdr["xllcorner"] == float(okey)
+        return (okey, int(back.min()), int(back.max()),
+                float(back.sum()), int(back.size))
 
-    return ids.repartition(32).mapInPandas(
-        run, schema="okey long, vmin long, vmax long, vsum double, n long")
+    schema = "okey long, vmin long, vmax long, vsum double, n long"
+    return _per_order(spark, sf_dir, 0, schema, row)
 
 
 AAIGRID_ORACLE = """
@@ -5316,47 +5318,33 @@ def _q_gif_roundtrip(spark, sf_dir):
     stats over the decoded indices AND the palette-expanded red plane
     prove LZW, interlace, palette, and transparency all survived. The
     oracle regenerates both formulas in SQL."""
-    import pandas as _pd
-
     from gdal_spark.raster import gif as GIF
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ids = o.filter("o_orderkey % 200 = 100").select(
-        F.col("o_orderkey").cast("long").alias("okey"))
+    r, c = _np.meshgrid(_np.arange(24), _np.arange(32), indexing="ij")
+    pal = _np.stack(
+        [(_np.arange(16) * 37) % 256,
+         (_np.arange(16) * 59) % 256,
+         (_np.arange(16) * 83) % 256], axis=1
+    ).astype(_np.uint8)
 
-    def run(batches):
-        r, c = _np.meshgrid(_np.arange(24), _np.arange(32), indexing="ij")
-        pal = _np.stack(
-            [(_np.arange(16) * 37) % 256,
-             (_np.arange(16) * 59) % 256,
-             (_np.arange(16) * 83) % 256], axis=1
-        ).astype(_np.uint8)
-        for pdf in batches:
-            outs = []
-            for okey in pdf["okey"]:
-                okey = int(okey)
-                idx = ((5 * r + 11 * c + okey) % 16).astype(_np.uint8)
-                buf = GIF.encode(
-                    idx, pal, transparent=okey % 16,
-                    interlace=bool(okey % 2),
-                )
-                g = GIF.decode_indices(buf)
-                rgba = GIF.decode(buf)
-                outs.append((
-                    okey, int(g.index.min()), int(g.index.max()),
-                    float(g.index.sum()), int(g.transparent),
-                    float(rgba[..., 0].astype(_np.int64).sum()),
-                    float((rgba[..., 3] == 0).sum()),
-                ))
-            yield _pd.DataFrame(
-                outs, columns=["okey", "vmin", "vmax", "vsum",
-                               "transp", "red_sum", "n_transparent"])
+    def row(okey):
+        idx = ((5 * r + 11 * c + okey) % 16).astype(_np.uint8)
+        buf = GIF.encode(
+            idx, pal, transparent=okey % 16,
+            interlace=bool(okey % 2),
+        )
+        g = GIF.decode_indices(buf)
+        rgba = GIF.decode(buf)
+        return (
+            okey, int(g.index.min()), int(g.index.max()),
+            float(g.index.sum()), int(g.transparent),
+            float(rgba[..., 0].astype(_np.int64).sum()),
+            float((rgba[..., 3] == 0).sum()),
+        )
 
-    return ids.repartition(32).mapInPandas(
-        run,
-        schema=("okey long, vmin long, vmax long, vsum double,"
-                " transp long, red_sum double, n_transparent double"),
-    )
+    schema = ("okey long, vmin long, vmax long, vsum double,"
+              " transp long, red_sum double, n_transparent double")
+    return _per_order(spark, sf_dir, 100, schema, row)
 
 
 GIF_ORACLE = """
@@ -5383,41 +5371,28 @@ def _q_bmp_roundtrip(spark, sf_dir):
     palette green[i]=(i*53)%256 writes an 8-bit palette BMP and reads
     it back inside Arrow batches; index stats plus the palette-expanded
     green plane regenerate closed-form in DuckDB."""
-    import pandas as _pd
-
     from gdal_spark.raster import bmp as BMP
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ids = o.filter("o_orderkey % 200 = 50").select(
-        F.col("o_orderkey").cast("long").alias("okey"))
+    r, c = _np.meshgrid(_np.arange(20), _np.arange(28), indexing="ij")
+    pal = _np.stack(
+        [(_np.arange(256) * 29) % 256,
+         (_np.arange(256) * 53) % 256,
+         (_np.arange(256) * 71) % 256], axis=1
+    ).astype(_np.uint8)
 
-    def run(batches):
-        r, c = _np.meshgrid(_np.arange(20), _np.arange(28), indexing="ij")
-        pal = _np.stack(
-            [(_np.arange(256) * 29) % 256,
-             (_np.arange(256) * 53) % 256,
-             (_np.arange(256) * 71) % 256], axis=1
-        ).astype(_np.uint8)
-        for pdf in batches:
-            outs = []
-            for okey in pdf["okey"]:
-                okey = int(okey)
-                idx = ((7 * r + 13 * c + okey) % 256).astype(_np.uint8)
-                g = BMP.decode_full(BMP.encode(idx, pal))
-                rgb = g.palette[g.index]
-                outs.append((
-                    okey, int(g.index.min()), int(g.index.max()),
-                    float(g.index.sum()),
-                    float(rgb[..., 1].astype(_np.int64).sum()),
-                ))
-            yield _pd.DataFrame(
-                outs, columns=["okey", "vmin", "vmax", "vsum", "green_sum"])
+    def row(okey):
+        idx = ((7 * r + 13 * c + okey) % 256).astype(_np.uint8)
+        g = BMP.decode_full(BMP.encode(idx, pal))
+        rgb = g.palette[g.index]
+        return (
+            okey, int(g.index.min()), int(g.index.max()),
+            float(g.index.sum()),
+            float(rgb[..., 1].astype(_np.int64).sum()),
+        )
 
-    return ids.repartition(32).mapInPandas(
-        run,
-        schema=("okey long, vmin long, vmax long, vsum double,"
-                " green_sum double"),
-    )
+    schema = ("okey long, vmin long, vmax long, vsum double,"
+              " green_sum double")
+    return _per_order(spark, sf_dir, 50, schema, row)
 
 
 BMP_ORACLE = """
@@ -5441,42 +5416,28 @@ def _q_tga_roundtrip(spark, sf_dir):
     encodes as TGA (RLE when okey%2=1, uncompressed otherwise) and
     decodes back inside Arrow batches; per-channel stats regenerate
     closed-form in DuckDB.  Both paths are lossless."""
-    import pandas as _pd
-
     from gdal_spark.raster import tga as TGA
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ids = o.filter("o_orderkey % 200 = 25").select(
-        F.col("o_orderkey").cast("long").alias("okey"))
+    r, c = _np.meshgrid(_np.arange(26), _np.arange(30), indexing="ij")
 
-    def run(batches):
-        r, c = _np.meshgrid(_np.arange(26), _np.arange(30), indexing="ij")
-        for pdf in batches:
-            outs = []
-            for okey in pdf["okey"]:
-                okey = int(okey)
-                rgb = _np.stack([
-                    (2 * r + 9 * c + okey) % 256,
-                    (5 * r + c + 3 * okey) % 256,
-                    (r + r * c + okey) % 256,
-                ], axis=-1).astype(_np.uint8)
-                g = TGA.decode_full(TGA.encode(rgb, rle=bool(okey % 2)))
-                outs.append((
-                    okey, int(g["bands"]),
-                    float(g["pixels"][..., 0].astype(_np.int64).sum()),
-                    float(g["pixels"][..., 1].astype(_np.int64).sum()),
-                    int(g["pixels"][..., 2].min()),
-                    int(g["pixels"][..., 2].max()),
-                ))
-            yield _pd.DataFrame(
-                outs, columns=["okey", "bands", "red_sum", "green_sum",
-                               "blue_min", "blue_max"])
+    def row(okey):
+        rgb = _np.stack([
+            (2 * r + 9 * c + okey) % 256,
+            (5 * r + c + 3 * okey) % 256,
+            (r + r * c + okey) % 256,
+        ], axis=-1).astype(_np.uint8)
+        g = TGA.decode_full(TGA.encode(rgb, rle=bool(okey % 2)))
+        return (
+            okey, int(g["bands"]),
+            float(g["pixels"][..., 0].astype(_np.int64).sum()),
+            float(g["pixels"][..., 1].astype(_np.int64).sum()),
+            int(g["pixels"][..., 2].min()),
+            int(g["pixels"][..., 2].max()),
+        )
 
-    return ids.repartition(32).mapInPandas(
-        run,
-        schema=("okey long, bands long, red_sum double, green_sum double,"
-                " blue_min long, blue_max long"),
-    )
+    schema = ("okey long, bands long, red_sum double, green_sum double,"
+              " blue_min long, blue_max long")
+    return _per_order(spark, sf_dir, 25, schema, row)
 
 
 TGA_ORACLE = """
@@ -5503,43 +5464,29 @@ def _q_dted_roundtrip(spark, sf_dir):
     elevation stats and the area-convention geotransform origin
     regenerate closed-form in DuckDB.  The codec is lossless int16,
     so the roundtrip is exact."""
-    import pandas as _pd
-
     from gdal_spark.raster import dted as DTED
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ids = o.filter("o_orderkey % 200 = 77").select(
-        F.col("o_orderkey").cast("long").alias("okey"))
+    r, c = _np.meshgrid(_np.arange(121), _np.arange(121), indexing="ij")
 
-    def run(batches):
-        r, c = _np.meshgrid(_np.arange(121), _np.arange(121), indexing="ij")
-        for pdf in batches:
-            outs = []
-            for okey in pdf["okey"]:
-                okey = int(okey)
-                elev = (((7 * r + 11 * c + okey) % 4000) - 500).astype(
-                    _np.int16)
-                lon = -float(okey % 180)
-                lat = float(okey % 80) - 40.0
-                arr, info = DTED.read_dted(
-                    DTED.write_dted(elev, ll_lon=lon, ll_lat=lat),
-                    verify_checksum=True)
-                gt = info["geotransform"]
-                outs.append((
-                    okey,
-                    float(arr.astype(_np.int64).sum()),
-                    int(arr.min()), int(arr.max()),
-                    float(gt[0]), float(gt[3]),
-                ))
-            yield _pd.DataFrame(
-                outs, columns=["okey", "elev_sum", "elev_min", "elev_max",
-                               "origin_x", "origin_y"])
+    def row(okey):
+        elev = (((7 * r + 11 * c + okey) % 4000) - 500).astype(
+            _np.int16)
+        lon = -float(okey % 180)
+        lat = float(okey % 80) - 40.0
+        arr, info = DTED.read_dted(
+            DTED.write_dted(elev, ll_lon=lon, ll_lat=lat),
+            verify_checksum=True)
+        gt = info["geotransform"]
+        return (
+            okey,
+            float(arr.astype(_np.int64).sum()),
+            int(arr.min()), int(arr.max()),
+            float(gt[0]), float(gt[3]),
+        )
 
-    return ids.repartition(32).mapInPandas(
-        run,
-        schema=("okey long, elev_sum double, elev_min long, elev_max long,"
-                " origin_x double, origin_y double"),
-    )
+    schema = ("okey long, elev_sum double, elev_min long, elev_max long,"
+              " origin_x double, origin_y double")
+    return _per_order(spark, sf_dir, 77, schema, row)
 
 
 DTED_ORACLE = """
@@ -5573,13 +5520,7 @@ def _q_terrain_grid_roundtrip(spark, sf_dir):
     stats and the recovered geotransform origin regenerate
     closed-form in DuckDB.  All four paths are lossless for
     integer-valued grids."""
-    import pandas as _pd
-
     from gdal_spark.raster import terrain as TERRAIN
-
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ids = o.filter("o_orderkey % 200 = 33").select(
-        F.col("o_orderkey").cast("long").alias("okey"))
 
     pairs = [
         (TERRAIN.write_gsbg, TERRAIN.read_gsbg, "gsbg"),
@@ -5588,34 +5529,26 @@ def _q_terrain_grid_roundtrip(spark, sf_dir):
         (TERRAIN.write_bt, TERRAIN.read_bt, "bt"),
     ]
 
-    def run(batches):
-        r, c = _np.meshgrid(_np.arange(30), _np.arange(40), indexing="ij")
-        for pdf in batches:
-            outs = []
-            for okey in pdf["okey"]:
-                okey = int(okey)
-                elev = (((3 * r + 13 * c + okey) % 2000) - 300).astype(
-                    _np.int16)
-                gt = (float(okey % 100), 2.0, 0.0,
-                      float(okey % 50), 0.0, -1.5)
-                writer, reader, fmt = pairs[okey % 4]
-                arr, info = reader(writer(elev, gt))
-                g = info["geotransform"]
-                outs.append((
-                    okey, fmt,
-                    float(_np.asarray(arr, _np.float64).sum()),
-                    int(arr.min()), int(arr.max()),
-                    float(g[0]), float(g[3]),
-                ))
-            yield _pd.DataFrame(
-                outs, columns=["okey", "fmt", "elev_sum", "elev_min",
-                               "elev_max", "origin_x", "origin_y"])
+    r, c = _np.meshgrid(_np.arange(30), _np.arange(40), indexing="ij")
 
-    return ids.repartition(32).mapInPandas(
-        run,
-        schema=("okey long, fmt string, elev_sum double, elev_min long,"
-                " elev_max long, origin_x double, origin_y double"),
-    )
+    def row(okey):
+        elev = (((3 * r + 13 * c + okey) % 2000) - 300).astype(
+            _np.int16)
+        gt = (float(okey % 100), 2.0, 0.0,
+              float(okey % 50), 0.0, -1.5)
+        writer, reader, fmt = pairs[okey % 4]
+        arr, info = reader(writer(elev, gt))
+        g = info["geotransform"]
+        return (
+            okey, fmt,
+            float(_np.asarray(arr, _np.float64).sum()),
+            int(arr.min()), int(arr.max()),
+            float(g[0]), float(g[3]),
+        )
+
+    schema = ("okey long, fmt string, elev_sum double, elev_min long,"
+              " elev_max long, origin_x double, origin_y double")
+    return _per_order(spark, sf_dir, 33, schema, row)
 
 
 TERRAIN_ORACLE = """
@@ -5646,42 +5579,28 @@ def _q_usgsdem_roundtrip(spark, sf_dir):
     geographic cell (B-record profiles, 1024-byte records) and reads
     back inside Arrow batches; stats and the node-registered
     geotransform origin regenerate closed-form in DuckDB."""
-    import pandas as _pd
-
     from gdal_spark.raster import usgsdem as USGSDEM
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ids = o.filter("o_orderkey % 200 = 121").select(
-        F.col("o_orderkey").cast("long").alias("okey"))
+    r, c = _np.meshgrid(_np.arange(25), _np.arange(20), indexing="ij")
 
-    def run(batches):
-        r, c = _np.meshgrid(_np.arange(25), _np.arange(20), indexing="ij")
-        for pdf in batches:
-            outs = []
-            for okey in pdf["okey"]:
-                okey = int(okey)
-                elev = (((5 * r + 17 * c + okey) % 3000) - 400).astype(
-                    _np.int16)
-                lon = -float(okey % 90)
-                lat = float(okey % 60) - 30.0
-                arr, info = USGSDEM.read_usgsdem(
-                    USGSDEM.write_usgsdem(elev, sw_lon=lon, sw_lat=lat))
-                gt = info["geotransform"]
-                outs.append((
-                    okey,
-                    float(arr.astype(_np.int64).sum()),
-                    int(arr.min()), int(arr.max()),
-                    float(gt[0]), float(gt[3]),
-                ))
-            yield _pd.DataFrame(
-                outs, columns=["okey", "elev_sum", "elev_min", "elev_max",
-                               "origin_x", "origin_y"])
+    def row(okey):
+        elev = (((5 * r + 17 * c + okey) % 3000) - 400).astype(
+            _np.int16)
+        lon = -float(okey % 90)
+        lat = float(okey % 60) - 30.0
+        arr, info = USGSDEM.read_usgsdem(
+            USGSDEM.write_usgsdem(elev, sw_lon=lon, sw_lat=lat))
+        gt = info["geotransform"]
+        return (
+            okey,
+            float(arr.astype(_np.int64).sum()),
+            int(arr.min()), int(arr.max()),
+            float(gt[0]), float(gt[3]),
+        )
 
-    return ids.repartition(32).mapInPandas(
-        run,
-        schema=("okey long, elev_sum double, elev_min long, elev_max long,"
-                " origin_x double, origin_y double"),
-    )
+    schema = ("okey long, elev_sum double, elev_min long, elev_max long,"
+              " origin_x double, origin_y double")
+    return _per_order(spark, sf_dir, 121, schema, row)
 
 
 USGSDEM_ORACLE = """
@@ -5708,46 +5627,32 @@ def _q_ehdr_roundtrip(spark, sf_dir):
     3-band 22x18 int16 cube round-trips through BIL data + .hdr text
     inside Arrow batches; per-band stats and the center-registered
     geotransform origin regenerate closed-form in DuckDB."""
-    import pandas as _pd
-
     from gdal_spark.raster import ehdr as EHDR
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ids = o.filter("o_orderkey % 200 = 188").select(
-        F.col("o_orderkey").cast("long").alias("okey"))
+    r, c = _np.meshgrid(_np.arange(22), _np.arange(18), indexing="ij")
 
-    def run(batches):
-        r, c = _np.meshgrid(_np.arange(22), _np.arange(18), indexing="ij")
-        for pdf in batches:
-            outs = []
-            for okey in pdf["okey"]:
-                okey = int(okey)
-                cube = _np.stack([
-                    ((2 * r + 7 * c + okey) % 1000) - 100,
-                    ((9 * r + c + 2 * okey) % 1000) - 100,
-                    ((r * c + 3 * okey) % 1000) - 100,
-                ], axis=-1).astype(_np.int16)
-                gt = (float(okey % 1000), 30.0, 0.0,
-                      float(okey % 500), 0.0, -30.0)
-                data, hdr = EHDR.write_ehdr(cube, gt, nodata=-9999.0)
-                arr, info = EHDR.read_ehdr(data, hdr)
-                g = info["geotransform"]
-                outs.append((
-                    okey,
-                    float(arr[:, :, 0].astype(_np.int64).sum()),
-                    float(arr[:, :, 1].astype(_np.int64).sum()),
-                    int(arr[:, :, 2].min()), int(arr[:, :, 2].max()),
-                    float(g[0]), float(g[3]),
-                ))
-            yield _pd.DataFrame(
-                outs, columns=["okey", "b1_sum", "b2_sum", "b3_min",
-                               "b3_max", "origin_x", "origin_y"])
+    def row(okey):
+        cube = _np.stack([
+            ((2 * r + 7 * c + okey) % 1000) - 100,
+            ((9 * r + c + 2 * okey) % 1000) - 100,
+            ((r * c + 3 * okey) % 1000) - 100,
+        ], axis=-1).astype(_np.int16)
+        gt = (float(okey % 1000), 30.0, 0.0,
+              float(okey % 500), 0.0, -30.0)
+        data, hdr = EHDR.write_ehdr(cube, gt, nodata=-9999.0)
+        arr, info = EHDR.read_ehdr(data, hdr)
+        g = info["geotransform"]
+        return (
+            okey,
+            float(arr[:, :, 0].astype(_np.int64).sum()),
+            float(arr[:, :, 1].astype(_np.int64).sum()),
+            int(arr[:, :, 2].min()), int(arr[:, :, 2].max()),
+            float(g[0]), float(g[3]),
+        )
 
-    return ids.repartition(32).mapInPandas(
-        run,
-        schema=("okey long, b1_sum double, b2_sum double, b3_min long,"
-                " b3_max long, origin_x double, origin_y double"),
-    )
+    schema = ("okey long, b1_sum double, b2_sum double, b3_min long,"
+              " b3_max long, origin_x double, origin_y double")
+    return _per_order(spark, sf_dir, 188, schema, row)
 
 
 EHDR_ORACLE = """
@@ -5774,49 +5679,34 @@ def _q_gpx_roundtrip(spark, sf_dir):
     coordinate/elevation stats regenerate closed-form in DuckDB.
     Coordinates are integer-valued, so the text round trip is
     exact."""
-    import pandas as _pd
-
     from gdal_spark.sources import gpx as GPX
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ids = o.filter("o_orderkey % 200 = 64").select(
-        F.col("o_orderkey").cast("long").alias("okey"))
+    def row(okey):
+        feats = []
+        for i in range(12):
+            lon = (okey + 3 * i) % 360 - 180
+            lat = (okey + 7 * i) % 180 - 90
+            ele = (okey + 11 * i) % 5000
+            feats.append({
+                "wkt": f"POINT ({lon} {lat})", "ele": float(ele),
+                "track_fid": 0, "track_seg_id": i // 6,
+            })
+        doc = GPX.write_gpx("track_points", feats)
+        back = GPX.parse_gpx(doc.encode(), "track_points")
+        lons = [float(f["wkt"].split("(")[1].split()[0])
+                for f in back]
+        lats = [float(f["wkt"].split()[2].rstrip(")"))
+                for f in back]
+        return (
+            okey, len(back),
+            float(sum(f["ele"] for f in back)),
+            float(sum(lons)), float(sum(lats)),
+            int(max(f["track_seg_id"] for f in back)),
+        )
 
-    def run(batches):
-        for pdf in batches:
-            outs = []
-            for okey in pdf["okey"]:
-                okey = int(okey)
-                feats = []
-                for i in range(12):
-                    lon = (okey + 3 * i) % 360 - 180
-                    lat = (okey + 7 * i) % 180 - 90
-                    ele = (okey + 11 * i) % 5000
-                    feats.append({
-                        "wkt": f"POINT ({lon} {lat})", "ele": float(ele),
-                        "track_fid": 0, "track_seg_id": i // 6,
-                    })
-                doc = GPX.write_gpx("track_points", feats)
-                back = GPX.parse_gpx(doc.encode(), "track_points")
-                lons = [float(f["wkt"].split("(")[1].split()[0])
-                        for f in back]
-                lats = [float(f["wkt"].split()[2].rstrip(")"))
-                        for f in back]
-                outs.append((
-                    okey, len(back),
-                    float(sum(f["ele"] for f in back)),
-                    float(sum(lons)), float(sum(lats)),
-                    int(max(f["track_seg_id"] for f in back)),
-                ))
-            yield _pd.DataFrame(
-                outs, columns=["okey", "n_points", "ele_sum", "lon_sum",
-                               "lat_sum", "max_seg"])
-
-    return ids.repartition(32).mapInPandas(
-        run,
-        schema=("okey long, n_points long, ele_sum double, lon_sum double,"
-                " lat_sum double, max_seg long"),
-    )
+    schema = ("okey long, n_points long, ele_sum double, lon_sum double,"
+              " lat_sum double, max_seg long")
+    return _per_order(spark, sf_dir, 64, schema, row)
 
 
 GPX_ORACLE = """
@@ -5843,58 +5733,44 @@ def _q_rmf_roundtrip(spark, sf_dir):
     LZW-round-trips or an int32 MTW grid DEM-round-trips inside Arrow
     batches; stats and the geotransform origin regenerate closed-form
     in DuckDB.  Both codecs are lossless."""
-    import pandas as _pd
-
     from gdal_spark.raster import rmf as RMF
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ids = o.filter("o_orderkey % 200 = 146").select(
-        F.col("o_orderkey").cast("long").alias("okey"))
+    r, c = _np.meshgrid(_np.arange(24), _np.arange(30), indexing="ij")
 
-    def run(batches):
-        r, c = _np.meshgrid(_np.arange(24), _np.arange(30), indexing="ij")
-        for pdf in batches:
-            outs = []
-            for okey in pdf["okey"]:
-                okey = int(okey)
-                px = float(okey % 90 + 1)
-                if okey % 2:
-                    cube = _np.stack([
-                        (4 * r + 3 * c + okey) % 256,
-                        (r * c + 2 * okey) % 256,
-                        (6 * r + c + okey) % 256,
-                    ], axis=-1).astype(_np.uint8)
-                    buf = RMF.write_rmf(cube, pixel_size=px, llx=10.0,
-                                        lly=20.0, compression="LZW",
-                                        tile_size=(16, 16))
-                    arr, info = RMF.read_rmf(buf)
-                    b1s = float(arr[:, :, 0].astype(_np.int64).sum())
-                    b2s = float(arr[:, :, 1].astype(_np.int64).sum())
-                    b3m = int(arr[:, :, 2].max())
-                else:
-                    dem = (((4 * r + 3 * c + okey) % 9000) - 2000).astype(
-                        _np.int32)
-                    buf = RMF.write_rmf(dem, mtw=True,
-                                        compression="RMF_DEM",
-                                        pixel_size=px, llx=10.0, lly=20.0,
-                                        nodata=-32767.0,
-                                        tile_size=(16, 16))
-                    arr, info = RMF.read_rmf(buf)
-                    b1s = float(arr.astype(_np.int64).sum())
-                    b2s = 0.0
-                    b3m = int(arr.max())
-                gt = info["geotransform"]
-                outs.append((okey, b1s, b2s, b3m,
-                             float(gt[0]), float(gt[3])))
-            yield _pd.DataFrame(
-                outs, columns=["okey", "b1_sum", "b2_sum", "b3_max",
-                               "origin_x", "origin_y"])
+    def row(okey):
+        px = float(okey % 90 + 1)
+        if okey % 2:
+            cube = _np.stack([
+                (4 * r + 3 * c + okey) % 256,
+                (r * c + 2 * okey) % 256,
+                (6 * r + c + okey) % 256,
+            ], axis=-1).astype(_np.uint8)
+            buf = RMF.write_rmf(cube, pixel_size=px, llx=10.0,
+                                lly=20.0, compression="LZW",
+                                tile_size=(16, 16))
+            arr, info = RMF.read_rmf(buf)
+            b1s = float(arr[:, :, 0].astype(_np.int64).sum())
+            b2s = float(arr[:, :, 1].astype(_np.int64).sum())
+            b3m = int(arr[:, :, 2].max())
+        else:
+            dem = (((4 * r + 3 * c + okey) % 9000) - 2000).astype(
+                _np.int32)
+            buf = RMF.write_rmf(dem, mtw=True,
+                                compression="RMF_DEM",
+                                pixel_size=px, llx=10.0, lly=20.0,
+                                nodata=-32767.0,
+                                tile_size=(16, 16))
+            arr, info = RMF.read_rmf(buf)
+            b1s = float(arr.astype(_np.int64).sum())
+            b2s = 0.0
+            b3m = int(arr.max())
+        gt = info["geotransform"]
+        return (okey, b1s, b2s, b3m,
+                float(gt[0]), float(gt[3]))
 
-    return ids.repartition(32).mapInPandas(
-        run,
-        schema=("okey long, b1_sum double, b2_sum double, b3_max long,"
-                " origin_x double, origin_y double"),
-    )
+    schema = ("okey long, b1_sum double, b2_sum double, b3_max long,"
+              " origin_x double, origin_y double")
+    return _per_order(spark, sf_dir, 146, schema, row)
 
 
 RMF_ORACLE = """
@@ -5928,61 +5804,47 @@ def _q_pds_roundtrip(spark, sf_dir):
     PDS3 (ODL label record + ^IMAGE record pointer) and decoded back
     inside Arrow batches; stats and the PDS3 default-shift
     geotransform origin regenerate closed-form in DuckDB."""
-    import pandas as _pd
-
     from gdal_spark.raster import pds as PDS
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ids = o.filter("o_orderkey % 200 = 172").select(
-        F.col("o_orderkey").cast("long").alias("okey"))
+    r, c = _np.meshgrid(_np.arange(20), _np.arange(26), indexing="ij")
 
-    def run(batches):
-        r, c = _np.meshgrid(_np.arange(20), _np.arange(26), indexing="ij")
-        for pdf in batches:
-            outs = []
-            for okey in pdf["okey"]:
-                okey = int(okey)
-                elev = (((8 * r + 5 * c + okey) % 6000) - 1500).astype(
-                    _np.int16)
-                spo = float(okey % 100)
-                lpo = float(okey % 50)
-                label = (
-                    'PDS_VERSION_ID = "PDS3"\n'
-                    "RECORD_TYPE = FIXED_LENGTH\n"
-                    "RECORD_BYTES = 1024\n"
-                    "^IMAGE = 2\n"
-                    "OBJECT = IMAGE\n"
-                    "  LINES = 20\n"
-                    "  LINE_SAMPLES = 26\n"
-                    "  SAMPLE_TYPE = MSB_INTEGER\n"
-                    "  SAMPLE_BITS = 16\n"
-                    "END_OBJECT = IMAGE\n"
-                    "OBJECT = IMAGE_MAP_PROJECTION\n"
-                    '  MAP_PROJECTION_TYPE = "SINUSOIDAL"\n'
-                    "  MAP_SCALE = 2.0 <METERS/PIXEL>\n"
-                    f"  SAMPLE_PROJECTION_OFFSET = {spo} <PIXEL>\n"
-                    f"  LINE_PROJECTION_OFFSET = {lpo} <PIXEL>\n"
-                    "END_OBJECT = IMAGE_MAP_PROJECTION\n"
-                    "END\n").encode()
-                buf = label + b" " * (1024 - len(label)) \
-                    + elev.astype(">i2").tobytes()
-                arr, info = PDS.read_pds(buf)
-                gt = info["geotransform"]
-                outs.append((
-                    okey,
-                    float(arr.astype(_np.int64).sum()),
-                    int(arr.min()), int(arr.max()),
-                    float(gt[0]), float(gt[3]),
-                ))
-            yield _pd.DataFrame(
-                outs, columns=["okey", "elev_sum", "elev_min", "elev_max",
-                               "origin_x", "origin_y"])
+    def row(okey):
+        elev = (((8 * r + 5 * c + okey) % 6000) - 1500).astype(
+            _np.int16)
+        spo = float(okey % 100)
+        lpo = float(okey % 50)
+        label = (
+            'PDS_VERSION_ID = "PDS3"\n'
+            "RECORD_TYPE = FIXED_LENGTH\n"
+            "RECORD_BYTES = 1024\n"
+            "^IMAGE = 2\n"
+            "OBJECT = IMAGE\n"
+            "  LINES = 20\n"
+            "  LINE_SAMPLES = 26\n"
+            "  SAMPLE_TYPE = MSB_INTEGER\n"
+            "  SAMPLE_BITS = 16\n"
+            "END_OBJECT = IMAGE\n"
+            "OBJECT = IMAGE_MAP_PROJECTION\n"
+            '  MAP_PROJECTION_TYPE = "SINUSOIDAL"\n'
+            "  MAP_SCALE = 2.0 <METERS/PIXEL>\n"
+            f"  SAMPLE_PROJECTION_OFFSET = {spo} <PIXEL>\n"
+            f"  LINE_PROJECTION_OFFSET = {lpo} <PIXEL>\n"
+            "END_OBJECT = IMAGE_MAP_PROJECTION\n"
+            "END\n").encode()
+        buf = label + b" " * (1024 - len(label)) \
+            + elev.astype(">i2").tobytes()
+        arr, info = PDS.read_pds(buf)
+        gt = info["geotransform"]
+        return (
+            okey,
+            float(arr.astype(_np.int64).sum()),
+            int(arr.min()), int(arr.max()),
+            float(gt[0]), float(gt[3]),
+        )
 
-    return ids.repartition(32).mapInPandas(
-        run,
-        schema=("okey long, elev_sum double, elev_min long, elev_max long,"
-                " origin_x double, origin_y double"),
-    )
+    schema = ("okey long, elev_sum double, elev_min long, elev_max long,"
+              " origin_x double, origin_y double")
+    return _per_order(spark, sf_dir, 172, schema, row)
 
 
 PDS_ORACLE = """
@@ -6010,46 +5872,32 @@ def _q_ers_roundtrip(spark, sf_dir):
     raw BIL pair inside Arrow batches; per-band stats and the
     registration-coordinate origin regenerate closed-form in
     DuckDB."""
-    import pandas as _pd
-
     from gdal_spark.raster import ers as ERS
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ids = o.filter("o_orderkey % 200 = 58").select(
-        F.col("o_orderkey").cast("long").alias("okey"))
+    r, c = _np.meshgrid(_np.arange(18), _np.arange(24), indexing="ij")
 
-    def run(batches):
-        r, c = _np.meshgrid(_np.arange(18), _np.arange(24), indexing="ij")
-        for pdf in batches:
-            outs = []
-            for okey in pdf["okey"]:
-                okey = int(okey)
-                cube = _np.stack([
-                    ((3 * r + 11 * c + okey) % 4000) - 800,
-                    ((r * c + 5 * okey) % 4000) - 800,
-                    ((7 * r + 2 * c + okey) % 4000) - 800,
-                ], axis=-1).astype(_np.int16)
-                gt = (float(okey % 1000), 25.0, 0.0,
-                      float(okey % 400), 0.0, -25.0)
-                hdr, data = ERS.write_ers(cube, gt, nodata=-9999.0)
-                arr, info = ERS.read_ers(hdr, data)
-                g = info["geotransform"]
-                outs.append((
-                    okey,
-                    float(arr[:, :, 0].astype(_np.int64).sum()),
-                    float(arr[:, :, 1].astype(_np.int64).sum()),
-                    int(arr[:, :, 2].min()), int(arr[:, :, 2].max()),
-                    float(g[0]), float(g[3]),
-                ))
-            yield _pd.DataFrame(
-                outs, columns=["okey", "b1_sum", "b2_sum", "b3_min",
-                               "b3_max", "origin_x", "origin_y"])
+    def row(okey):
+        cube = _np.stack([
+            ((3 * r + 11 * c + okey) % 4000) - 800,
+            ((r * c + 5 * okey) % 4000) - 800,
+            ((7 * r + 2 * c + okey) % 4000) - 800,
+        ], axis=-1).astype(_np.int16)
+        gt = (float(okey % 1000), 25.0, 0.0,
+              float(okey % 400), 0.0, -25.0)
+        hdr, data = ERS.write_ers(cube, gt, nodata=-9999.0)
+        arr, info = ERS.read_ers(hdr, data)
+        g = info["geotransform"]
+        return (
+            okey,
+            float(arr[:, :, 0].astype(_np.int64).sum()),
+            float(arr[:, :, 1].astype(_np.int64).sum()),
+            int(arr[:, :, 2].min()), int(arr[:, :, 2].max()),
+            float(g[0]), float(g[3]),
+        )
 
-    return ids.repartition(32).mapInPandas(
-        run,
-        schema=("okey long, b1_sum double, b2_sum double, b3_min long,"
-                " b3_max long, origin_x double, origin_y double"),
-    )
+    schema = ("okey long, b1_sum double, b2_sum double, b3_min long,"
+              " b3_max long, origin_x double, origin_y double")
+    return _per_order(spark, sf_dir, 58, schema, row)
 
 
 ERS_ORACLE = """
@@ -6074,44 +5922,30 @@ def _q_ilwis_roundtrip(spark, sf_dir):
     order an int16 20x25 grid round-trips through the .mpr/.grf/.mp#
     set inside Arrow batches; stats and the GeoRefCorners origin
     regenerate closed-form in DuckDB."""
-    import pandas as _pd
-
     from gdal_spark.raster import ilwis as ILWIS
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ids = o.filter("o_orderkey % 200 = 11").select(
-        F.col("o_orderkey").cast("long").alias("okey"))
+    r, c = _np.meshgrid(_np.arange(20), _np.arange(25), indexing="ij")
 
-    def run(batches):
-        r, c = _np.meshgrid(_np.arange(20), _np.arange(25), indexing="ij")
-        for pdf in batches:
-            outs = []
-            for okey in pdf["okey"]:
-                okey = int(okey)
-                elev = (((6 * r + 7 * c + okey) % 5000) - 1000).astype(
-                    _np.int16)
-                gt = (float(okey % 800), 15.0, 0.0,
-                      float(okey % 300), 0.0, -15.0)
-                files = ILWIS.write_ilwis(elev, "t", gt)
-                files = {k: (v.encode() if isinstance(v, str) else v)
-                         for k, v in files.items()}
-                arr, info = ILWIS.read_ilwis(files, "t.mpr")
-                g = info["geotransform"]
-                outs.append((
-                    okey,
-                    float(arr.astype(_np.int64).sum()),
-                    int(arr.min()), int(arr.max()),
-                    float(g[0]), float(g[3]),
-                ))
-            yield _pd.DataFrame(
-                outs, columns=["okey", "elev_sum", "elev_min", "elev_max",
-                               "origin_x", "origin_y"])
+    def row(okey):
+        elev = (((6 * r + 7 * c + okey) % 5000) - 1000).astype(
+            _np.int16)
+        gt = (float(okey % 800), 15.0, 0.0,
+              float(okey % 300), 0.0, -15.0)
+        files = ILWIS.write_ilwis(elev, "t", gt)
+        files = {k: (v.encode() if isinstance(v, str) else v)
+                 for k, v in files.items()}
+        arr, info = ILWIS.read_ilwis(files, "t.mpr")
+        g = info["geotransform"]
+        return (
+            okey,
+            float(arr.astype(_np.int64).sum()),
+            int(arr.min()), int(arr.max()),
+            float(g[0]), float(g[3]),
+        )
 
-    return ids.repartition(32).mapInPandas(
-        run,
-        schema=("okey long, elev_sum double, elev_min long, elev_max long,"
-                " origin_x double, origin_y double"),
-    )
+    schema = ("okey long, elev_sum double, elev_min long, elev_max long,"
+              " origin_x double, origin_y double")
+    return _per_order(spark, sf_dir, 11, schema, row)
 
 
 ILWIS_ORACLE = """
@@ -6140,56 +5974,42 @@ def _q_legacy_raster_formats(spark, sf_dir):
     batches; stats and the recovered geotransform origin regenerate
     closed-form in DuckDB.  All three paths are lossless for int16
     (GTX stores float32, exact for these magnitudes)."""
-    import pandas as _pd
-
     from gdal_spark.raster import legacy_formats as LF
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ids = o.filter("o_orderkey % 200 = 97").select(
-        F.col("o_orderkey").cast("long").alias("okey"))
+    r, c = _np.meshgrid(_np.arange(16), _np.arange(22), indexing="ij")
 
-    def run(batches):
-        r, c = _np.meshgrid(_np.arange(16), _np.arange(22), indexing="ij")
-        for pdf in batches:
-            outs = []
-            for okey in pdf["okey"]:
-                okey = int(okey)
-                elev = (((9 * r + 4 * c + okey) % 3000) - 700).astype(
-                    _np.int16)
-                gt = (float(okey % 600), 10.0, 0.0,
-                      float(okey % 200), 0.0, -10.0)
-                pick = okey % 3
-                if pick == 0:
-                    arr, info = LF.read_lan(LF.write_lan(elev, gt))
-                    fmt = "lan"
-                elif pick == 1:
-                    arr, info = LF.read_gtx(
-                        LF.write_gtx(elev.astype(_np.float32), gt))
-                    arr = arr.astype(_np.int64)
-                    fmt = "gtx"
-                else:
-                    arr, info = LF.read_terragen(
-                        LF.write_terragen(elev))
-                    info = dict(info, geotransform=gt)  # terragen has
-                    # no world anchor; gt passthrough for the compare
-                    fmt = "terragen"
-                g = info["geotransform"]
-                outs.append((
-                    okey, fmt,
-                    float(_np.asarray(arr, _np.float64).sum()),
-                    int(_np.asarray(arr).min()),
-                    int(_np.asarray(arr).max()),
-                    float(g[0]), float(g[3]),
-                ))
-            yield _pd.DataFrame(
-                outs, columns=["okey", "fmt", "elev_sum", "elev_min",
-                               "elev_max", "origin_x", "origin_y"])
+    def row(okey):
+        elev = (((9 * r + 4 * c + okey) % 3000) - 700).astype(
+            _np.int16)
+        gt = (float(okey % 600), 10.0, 0.0,
+              float(okey % 200), 0.0, -10.0)
+        pick = okey % 3
+        if pick == 0:
+            arr, info = LF.read_lan(LF.write_lan(elev, gt))
+            fmt = "lan"
+        elif pick == 1:
+            arr, info = LF.read_gtx(
+                LF.write_gtx(elev.astype(_np.float32), gt))
+            arr = arr.astype(_np.int64)
+            fmt = "gtx"
+        else:
+            arr, info = LF.read_terragen(
+                LF.write_terragen(elev))
+            info = dict(info, geotransform=gt)  # terragen has
+            # no world anchor; gt passthrough for the compare
+            fmt = "terragen"
+        g = info["geotransform"]
+        return (
+            okey, fmt,
+            float(_np.asarray(arr, _np.float64).sum()),
+            int(_np.asarray(arr).min()),
+            int(_np.asarray(arr).max()),
+            float(g[0]), float(g[3]),
+        )
 
-    return ids.repartition(32).mapInPandas(
-        run,
-        schema=("okey long, fmt string, elev_sum double, elev_min long,"
-                " elev_max long, origin_x double, origin_y double"),
-    )
+    schema = ("okey long, fmt string, elev_sum double, elev_min long,"
+              " elev_max long, origin_x double, origin_y double")
+    return _per_order(spark, sf_dir, 97, schema, row)
 
 
 LEGACY_ORACLE = """
@@ -6220,51 +6040,36 @@ def _q_gml_roundtrip(spark, sf_dir):
     batches; field/coordinate stats regenerate closed-form in
     DuckDB.  Coordinates are integer-valued so the text round trip
     is exact."""
-    import pandas as _pd
-
     from gdal_spark.sources import gml as GML
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ids = o.filter("o_orderkey % 200 = 139").select(
-        F.col("o_orderkey").cast("long").alias("okey"))
+    def row(okey):
+        feats = []
+        for i in range(10):
+            x = (okey + 13 * i) % 1000
+            y = (okey + 29 * i) % 500
+            feats.append({"wkt": f"POINT ({x} {y})",
+                          "rank": (okey + i) % 97})
+        x0 = okey % 100
+        feats.append({
+            "wkt": (f"POLYGON (({x0} 0,{x0 + 8} 0,"
+                    f"{x0 + 8} 6,{x0} 6,{x0} 0))"),
+            "rank": okey % 97})
+        doc = GML.write_gml("sites", feats)
+        back = GML.parse_gml(doc.encode())["sites"]
+        pts = [f for f in back if f["wkt"].startswith("POINT")]
+        xs = [float(f["wkt"].split("(")[1].split()[0])
+              for f in pts]
+        ys = [float(f["wkt"].split()[2].rstrip(")"))
+              for f in pts]
+        return (
+            okey, len(back),
+            float(sum(xs)), float(sum(ys)),
+            float(sum(f["rank"] for f in back)),
+        )
 
-    def run(batches):
-        for pdf in batches:
-            outs = []
-            for okey in pdf["okey"]:
-                okey = int(okey)
-                feats = []
-                for i in range(10):
-                    x = (okey + 13 * i) % 1000
-                    y = (okey + 29 * i) % 500
-                    feats.append({"wkt": f"POINT ({x} {y})",
-                                  "rank": (okey + i) % 97})
-                x0 = okey % 100
-                feats.append({
-                    "wkt": (f"POLYGON (({x0} 0,{x0 + 8} 0,"
-                            f"{x0 + 8} 6,{x0} 6,{x0} 0))"),
-                    "rank": okey % 97})
-                doc = GML.write_gml("sites", feats)
-                back = GML.parse_gml(doc.encode())["sites"]
-                pts = [f for f in back if f["wkt"].startswith("POINT")]
-                xs = [float(f["wkt"].split("(")[1].split()[0])
-                      for f in pts]
-                ys = [float(f["wkt"].split()[2].rstrip(")"))
-                      for f in pts]
-                outs.append((
-                    okey, len(back),
-                    float(sum(xs)), float(sum(ys)),
-                    float(sum(f["rank"] for f in back)),
-                ))
-            yield _pd.DataFrame(
-                outs, columns=["okey", "n_feats", "x_sum", "y_sum",
-                               "rank_sum"])
-
-    return ids.repartition(32).mapInPandas(
-        run,
-        schema=("okey long, n_feats long, x_sum double, y_sum double,"
-                " rank_sum double"),
-    )
+    schema = ("okey long, n_feats long, x_sum double, y_sum double,"
+              " rank_sum double")
+    return _per_order(spark, sf_dir, 139, schema, row)
 
 
 GML_ORACLE = """
@@ -6289,52 +6094,38 @@ def _q_saga_kro_roundtrip(spark, sf_dir):
     through SAGA (.sgrd/.sdat, bottom-up) or KRO (big-endian BIP) by
     okey%2; stats and the SAGA node-registered origin regenerate
     closed-form in DuckDB."""
-    import pandas as _pd
-
     from gdal_spark.raster import legacy_formats as LF
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ids = o.filter("o_orderkey % 200 = 103").select(
-        F.col("o_orderkey").cast("long").alias("okey"))
+    r, c = _np.meshgrid(_np.arange(14), _np.arange(19), indexing="ij")
 
-    def run(batches):
-        r, c = _np.meshgrid(_np.arange(14), _np.arange(19), indexing="ij")
-        for pdf in batches:
-            outs = []
-            for okey in pdf["okey"]:
-                okey = int(okey)
-                elev = (((5 * r + 9 * c + okey) % 2500) - 600).astype(
-                    _np.int16)
-                gt = (float(okey % 700), 20.0, 0.0,
-                      float(okey % 350), 0.0, -20.0)
-                if okey % 2:
-                    hdr, data = LF.write_saga(elev, gt)
-                    arr, info = LF.read_saga(hdr, data)
-                    g = info["geotransform"]
-                    ox, oy = float(g[0]), float(g[3])
-                    fmt = "saga"
-                else:
-                    arr, _ = LF.read_kro(LF.write_kro(
-                        (elev.astype(_np.int32) + 600).astype(_np.uint16)))
-                    arr = arr.astype(_np.int64) - 600
-                    ox, oy = float(gt[0]), float(gt[3])
-                    fmt = "kro"
-                outs.append((
-                    okey, fmt,
-                    float(_np.asarray(arr, _np.float64).sum()),
-                    int(_np.asarray(arr).min()),
-                    int(_np.asarray(arr).max()),
-                    ox, oy,
-                ))
-            yield _pd.DataFrame(
-                outs, columns=["okey", "fmt", "elev_sum", "elev_min",
-                               "elev_max", "origin_x", "origin_y"])
+    def row(okey):
+        elev = (((5 * r + 9 * c + okey) % 2500) - 600).astype(
+            _np.int16)
+        gt = (float(okey % 700), 20.0, 0.0,
+              float(okey % 350), 0.0, -20.0)
+        if okey % 2:
+            hdr, data = LF.write_saga(elev, gt)
+            arr, info = LF.read_saga(hdr, data)
+            g = info["geotransform"]
+            ox, oy = float(g[0]), float(g[3])
+            fmt = "saga"
+        else:
+            arr, _ = LF.read_kro(LF.write_kro(
+                (elev.astype(_np.int32) + 600).astype(_np.uint16)))
+            arr = arr.astype(_np.int64) - 600
+            ox, oy = float(gt[0]), float(gt[3])
+            fmt = "kro"
+        return (
+            okey, fmt,
+            float(_np.asarray(arr, _np.float64).sum()),
+            int(_np.asarray(arr).min()),
+            int(_np.asarray(arr).max()),
+            ox, oy,
+        )
 
-    return ids.repartition(32).mapInPandas(
-        run,
-        schema=("okey long, fmt string, elev_sum double, elev_min long,"
-                " elev_max long, origin_x double, origin_y double"),
-    )
+    schema = ("okey long, fmt string, elev_sum double, elev_min long,"
+              " elev_max long, origin_x double, origin_y double")
+    return _per_order(spark, sf_dir, 103, schema, row)
 
 
 SAGA_KRO_ORACLE = """
@@ -6363,42 +6154,28 @@ def _q_hfa_roundtrip(spark, sf_dir):
     grid round-trips through a standard-layout .img (dictionary +
     entry tree + RasterDMS blocks) inside Arrow batches; stats and
     the Eprj_MapInfo origin regenerate closed-form in DuckDB."""
-    import pandas as _pd
-
     from gdal_spark.raster import hfa as HFA
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ids = o.filter("o_orderkey % 200 = 167").select(
-        F.col("o_orderkey").cast("long").alias("okey"))
+    r, c = _np.meshgrid(_np.arange(70), _np.arange(90), indexing="ij")
 
-    def run(batches):
-        r, c = _np.meshgrid(_np.arange(70), _np.arange(90), indexing="ij")
-        for pdf in batches:
-            outs = []
-            for okey in pdf["okey"]:
-                okey = int(okey)
-                elev = (((7 * r + 3 * c + okey) % 8000) - 2000).astype(
-                    _np.int16)
-                gt = (float(okey % 900), 12.5, 0.0,
-                      float(okey % 450), 0.0, -12.5)
-                arr, info = HFA.read_hfa(
-                    HFA.write_hfa(elev, gt, nodata=-9999.0))
-                g = info["geotransform"]
-                outs.append((
-                    okey,
-                    float(arr.astype(_np.int64).sum()),
-                    int(arr.min()), int(arr.max()),
-                    float(g[0]), float(g[3]),
-                ))
-            yield _pd.DataFrame(
-                outs, columns=["okey", "elev_sum", "elev_min", "elev_max",
-                               "origin_x", "origin_y"])
+    def row(okey):
+        elev = (((7 * r + 3 * c + okey) % 8000) - 2000).astype(
+            _np.int16)
+        gt = (float(okey % 900), 12.5, 0.0,
+              float(okey % 450), 0.0, -12.5)
+        arr, info = HFA.read_hfa(
+            HFA.write_hfa(elev, gt, nodata=-9999.0))
+        g = info["geotransform"]
+        return (
+            okey,
+            float(arr.astype(_np.int64).sum()),
+            int(arr.min()), int(arr.max()),
+            float(g[0]), float(g[3]),
+        )
 
-    return ids.repartition(32).mapInPandas(
-        run,
-        schema=("okey long, elev_sum double, elev_min long, elev_max long,"
-                " origin_x double, origin_y double"),
-    )
+    schema = ("okey long, elev_sum double, elev_min long, elev_max long,"
+              " origin_x double, origin_y double")
+    return _per_order(spark, sf_dir, 167, schema, row)
 
 
 HFA_ORACLE = """
@@ -6427,64 +6204,50 @@ def _q_isis3_read(spark, sf_dir):
     TileSamples/TileLines layout) and decoded back inside Arrow
     batches; stats and the Mapping corner origin regenerate
     closed-form in DuckDB."""
-    import pandas as _pd
-
     from gdal_spark.raster import isis3 as ISIS3
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ids = o.filter("o_orderkey % 200 = 83").select(
-        F.col("o_orderkey").cast("long").alias("okey"))
+    r, c = _np.meshgrid(_np.arange(40), _np.arange(60), indexing="ij")
 
-    def run(batches):
-        r, c = _np.meshgrid(_np.arange(40), _np.arange(60), indexing="ij")
-        for pdf in batches:
-            outs = []
-            for okey in pdf["okey"]:
-                okey = int(okey)
-                elev = (((11 * r + 2 * c + okey) % 7000) - 3000).astype(
-                    _np.int16)
-                ulx = float(okey % 500)
-                uly = float(okey % 250)
-                label = (
-                    "Object = IsisCube\n  Object = Core\n"
-                    "    StartByte = 1025\n    Format = Tile\n"
-                    "    TileSamples = 32\n    TileLines = 16\n"
-                    "    Group = Dimensions\n      Samples = 60\n"
-                    "      Lines = 40\n      Bands = 1\n    End_Group\n"
-                    "    Group = Pixels\n      Type = SignedWord\n"
-                    "      ByteOrder = Lsb\n      Base = 0.0\n"
-                    "      Multiplier = 1.0\n    End_Group\n"
-                    "  End_Object\n  Group = Mapping\n"
-                    f"    UpperLeftCornerX = {ulx}\n"
-                    f"    UpperLeftCornerY = {uly}\n"
-                    "    PixelResolution = 4.0 <meters/pixel>\n"
-                    "  End_Group\nEnd_Object\nEnd\n").encode()
-                label += b" " * (1024 - len(label))
-                tiles = []
-                for ty in range(3):
-                    for tx in range(2):
-                        t = _np.zeros((16, 32), _np.int16)
-                        sub = elev[ty * 16:(ty + 1) * 16,
-                                   tx * 32:(tx + 1) * 32]
-                        t[:sub.shape[0], :sub.shape[1]] = sub
-                        tiles.append(t.astype("<i2").tobytes())
-                arr, info = ISIS3.read_isis3(label + b"".join(tiles))
-                g = info["geotransform"]
-                outs.append((
-                    okey,
-                    float(arr.astype(_np.int64).sum()),
-                    int(arr.min()), int(arr.max()),
-                    float(g[0]), float(g[3]),
-                ))
-            yield _pd.DataFrame(
-                outs, columns=["okey", "elev_sum", "elev_min", "elev_max",
-                               "origin_x", "origin_y"])
+    def row(okey):
+        elev = (((11 * r + 2 * c + okey) % 7000) - 3000).astype(
+            _np.int16)
+        ulx = float(okey % 500)
+        uly = float(okey % 250)
+        label = (
+            "Object = IsisCube\n  Object = Core\n"
+            "    StartByte = 1025\n    Format = Tile\n"
+            "    TileSamples = 32\n    TileLines = 16\n"
+            "    Group = Dimensions\n      Samples = 60\n"
+            "      Lines = 40\n      Bands = 1\n    End_Group\n"
+            "    Group = Pixels\n      Type = SignedWord\n"
+            "      ByteOrder = Lsb\n      Base = 0.0\n"
+            "      Multiplier = 1.0\n    End_Group\n"
+            "  End_Object\n  Group = Mapping\n"
+            f"    UpperLeftCornerX = {ulx}\n"
+            f"    UpperLeftCornerY = {uly}\n"
+            "    PixelResolution = 4.0 <meters/pixel>\n"
+            "  End_Group\nEnd_Object\nEnd\n").encode()
+        label += b" " * (1024 - len(label))
+        tiles = []
+        for ty in range(3):
+            for tx in range(2):
+                t = _np.zeros((16, 32), _np.int16)
+                sub = elev[ty * 16:(ty + 1) * 16,
+                           tx * 32:(tx + 1) * 32]
+                t[:sub.shape[0], :sub.shape[1]] = sub
+                tiles.append(t.astype("<i2").tobytes())
+        arr, info = ISIS3.read_isis3(label + b"".join(tiles))
+        g = info["geotransform"]
+        return (
+            okey,
+            float(arr.astype(_np.int64).sum()),
+            int(arr.min()), int(arr.max()),
+            float(g[0]), float(g[3]),
+        )
 
-    return ids.repartition(32).mapInPandas(
-        run,
-        schema=("okey long, elev_sum double, elev_min long, elev_max long,"
-                " origin_x double, origin_y double"),
-    )
+    schema = ("okey long, elev_sum double, elev_min long, elev_max long,"
+              " origin_x double, origin_y double")
+    return _per_order(spark, sf_dir, 83, schema, row)
 
 
 ISIS3_ORACLE = """
@@ -6512,56 +6275,41 @@ def _q_mif_read(spark, sf_dir):
     sampled order a closed-form MIF+MID layer of points and a region
     is synthesized as text and parsed back inside Arrow batches;
     field/coordinate stats regenerate closed-form in DuckDB."""
-    import pandas as _pd
-
     from gdal_spark.sources import mif as MIF
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ids = o.filter("o_orderkey % 200 = 45").select(
-        F.col("o_orderkey").cast("long").alias("okey"))
+    def row(okey):
+        header = ("Version 300\nCharset \"Neutral\"\n"
+                  "Delimiter \",\"\nColumns 2\n"
+                  "  name Char (20)\n  rank Integer\nData\n\n")
+        body = []
+        mid = []
+        for i in range(9):
+            x = (okey + 5 * i) % 1000
+            y = (okey + 11 * i) % 600
+            body.append(f"Point {x} {y}\n")
+            mid.append(f'"p{i}",{(okey + i) % 89}\n')
+        x0 = okey % 200
+        body.append(
+            f"Region 1\n  4\n  {x0} 0\n  {x0 + 5} 0\n"
+            f"  {x0 + 5} 7\n  {x0} 0\n")
+        mid.append(f'"poly",{okey % 89}\n')
+        feats, _ = MIF.parse_mif(header + "".join(body),
+                                 "".join(mid))
+        pts = [f for f in feats
+               if f["wkt"].startswith("POINT")]
+        xs = [float(f["wkt"].split("(")[1].split()[0])
+              for f in pts]
+        ys = [float(f["wkt"].split()[2].rstrip(")"))
+              for f in pts]
+        return (
+            okey, len(feats),
+            float(sum(xs)), float(sum(ys)),
+            float(sum(f["rank"] for f in feats)),
+        )
 
-    def run(batches):
-        for pdf in batches:
-            outs = []
-            for okey in pdf["okey"]:
-                okey = int(okey)
-                header = ("Version 300\nCharset \"Neutral\"\n"
-                          "Delimiter \",\"\nColumns 2\n"
-                          "  name Char (20)\n  rank Integer\nData\n\n")
-                body = []
-                mid = []
-                for i in range(9):
-                    x = (okey + 5 * i) % 1000
-                    y = (okey + 11 * i) % 600
-                    body.append(f"Point {x} {y}\n")
-                    mid.append(f'"p{i}",{(okey + i) % 89}\n')
-                x0 = okey % 200
-                body.append(
-                    f"Region 1\n  4\n  {x0} 0\n  {x0 + 5} 0\n"
-                    f"  {x0 + 5} 7\n  {x0} 0\n")
-                mid.append(f'"poly",{okey % 89}\n')
-                feats, _ = MIF.parse_mif(header + "".join(body),
-                                         "".join(mid))
-                pts = [f for f in feats
-                       if f["wkt"].startswith("POINT")]
-                xs = [float(f["wkt"].split("(")[1].split()[0])
-                      for f in pts]
-                ys = [float(f["wkt"].split()[2].rstrip(")"))
-                      for f in pts]
-                outs.append((
-                    okey, len(feats),
-                    float(sum(xs)), float(sum(ys)),
-                    float(sum(f["rank"] for f in feats)),
-                ))
-            yield _pd.DataFrame(
-                outs, columns=["okey", "n_feats", "x_sum", "y_sum",
-                               "rank_sum"])
-
-    return ids.repartition(32).mapInPandas(
-        run,
-        schema=("okey long, n_feats long, x_sum double, y_sum double,"
-                " rank_sum double"),
-    )
+    schema = ("okey long, n_feats long, x_sum double, y_sum double,"
+              " rank_sum double")
+    return _per_order(spark, sf_dir, 45, schema, row)
 
 
 MIF_ORACLE = """
@@ -6586,52 +6334,38 @@ def _q_dxf_read(spark, sf_dir):
     closed-form DXF document (points + a line + an LWPOLYLINE) is
     synthesized and parsed back inside Arrow batches; coordinate
     stats regenerate closed-form in DuckDB."""
-    import pandas as _pd
-
     from gdal_spark.sources import dxf as DXF
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ids = o.filter("o_orderkey % 200 = 19").select(
-        F.col("o_orderkey").cast("long").alias("okey"))
+    def row(okey):
+        rec = ["  0", "SECTION", "  2", "ENTITIES"]
+        for i in range(8):
+            x = (okey + 7 * i) % 1000
+            y = (okey + 3 * i) % 500
+            rec += ["  0", "POINT", "  8", "0",
+                    " 10", str(x), " 20", str(y), " 30", "0.0"]
+        x0 = okey % 300
+        rec += ["  0", "LINE", "  8", "0",
+                " 10", str(x0), " 20", "0", " 30", "0",
+                " 11", str(x0 + 10), " 21", "5", " 31", "0"]
+        rec += ["  0", "LWPOLYLINE", "  8", "0", " 90", "3",
+                " 70", "0",
+                " 10", str(x0), " 20", "1",
+                " 10", str(x0 + 2), " 20", "4",
+                " 10", str(x0 + 6), " 20", "2"]
+        rec += ["  0", "ENDSEC", "  0", "EOF"]
+        feats = DXF.parse_dxf("\n".join(rec) + "\n")
+        pts = [f for f in feats
+               if f["wkt"].startswith("POINT")]
+        xs = [float(f["wkt"].split("(")[1].split()[0])
+              for f in pts]
+        ys = [float(f["wkt"].split()[2]) for f in pts]
+        return (
+            okey, len(feats),
+            float(sum(xs)), float(sum(ys)),
+        )
 
-    def run(batches):
-        for pdf in batches:
-            outs = []
-            for okey in pdf["okey"]:
-                okey = int(okey)
-                rec = ["  0", "SECTION", "  2", "ENTITIES"]
-                for i in range(8):
-                    x = (okey + 7 * i) % 1000
-                    y = (okey + 3 * i) % 500
-                    rec += ["  0", "POINT", "  8", "0",
-                            " 10", str(x), " 20", str(y), " 30", "0.0"]
-                x0 = okey % 300
-                rec += ["  0", "LINE", "  8", "0",
-                        " 10", str(x0), " 20", "0", " 30", "0",
-                        " 11", str(x0 + 10), " 21", "5", " 31", "0"]
-                rec += ["  0", "LWPOLYLINE", "  8", "0", " 90", "3",
-                        " 70", "0",
-                        " 10", str(x0), " 20", "1",
-                        " 10", str(x0 + 2), " 20", "4",
-                        " 10", str(x0 + 6), " 20", "2"]
-                rec += ["  0", "ENDSEC", "  0", "EOF"]
-                feats = DXF.parse_dxf("\n".join(rec) + "\n")
-                pts = [f for f in feats
-                       if f["wkt"].startswith("POINT")]
-                xs = [float(f["wkt"].split("(")[1].split()[0])
-                      for f in pts]
-                ys = [float(f["wkt"].split()[2]) for f in pts]
-                outs.append((
-                    okey, len(feats),
-                    float(sum(xs)), float(sum(ys)),
-                ))
-            yield _pd.DataFrame(
-                outs, columns=["okey", "n_feats", "x_sum", "y_sum"])
-
-    return ids.repartition(32).mapInPandas(
-        run,
-        schema="okey long, n_feats long, x_sum double, y_sum double",
-    )
+    schema = "okey long, n_feats long, x_sum double, y_sum double"
+    return _per_order(spark, sf_dir, 19, schema, row)
 
 
 DXF_ORACLE = """
@@ -6654,46 +6388,32 @@ def _q_georss_read(spark, sf_dir):
     Arrow batches; coordinate stats regenerate closed-form in
     DuckDB.  GeoRSS stores lat lon — the swap is part of what the
     oracle checks."""
-    import pandas as _pd
-
     from gdal_spark.sources import georss as GEORSS
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ids = o.filter("o_orderkey % 200 = 71").select(
-        F.col("o_orderkey").cast("long").alias("okey"))
+    def row(okey):
+        items = []
+        for i in range(11):
+            lat = (okey + 9 * i) % 180 - 90
+            lon = (okey + 4 * i) % 360 - 180
+            items.append(
+                "<item><title>p</title>"
+                f"<georss:point>{lat} {lon}</georss:point>"
+                "</item>")
+        doc = ('<?xml version="1.0"?>\n'
+               '<rss version="2.0" '
+               'xmlns:georss="http://www.georss.org/georss">'
+               "<channel><title>t</title>"
+               + "".join(items) + "</channel></rss>")
+        feats = GEORSS.parse_georss(doc.encode())
+        xs = [float(f["wkt"].split("(")[1].split()[0])
+              for f in feats]
+        ys = [float(f["wkt"].split()[2].rstrip(")"))
+              for f in feats]
+        return (okey, len(feats),
+                float(sum(xs)), float(sum(ys)))
 
-    def run(batches):
-        for pdf in batches:
-            outs = []
-            for okey in pdf["okey"]:
-                okey = int(okey)
-                items = []
-                for i in range(11):
-                    lat = (okey + 9 * i) % 180 - 90
-                    lon = (okey + 4 * i) % 360 - 180
-                    items.append(
-                        "<item><title>p</title>"
-                        f"<georss:point>{lat} {lon}</georss:point>"
-                        "</item>")
-                doc = ('<?xml version="1.0"?>\n'
-                       '<rss version="2.0" '
-                       'xmlns:georss="http://www.georss.org/georss">'
-                       "<channel><title>t</title>"
-                       + "".join(items) + "</channel></rss>")
-                feats = GEORSS.parse_georss(doc.encode())
-                xs = [float(f["wkt"].split("(")[1].split()[0])
-                      for f in feats]
-                ys = [float(f["wkt"].split()[2].rstrip(")"))
-                      for f in feats]
-                outs.append((okey, len(feats),
-                             float(sum(xs)), float(sum(ys))))
-            yield _pd.DataFrame(
-                outs, columns=["okey", "n_items", "lon_sum", "lat_sum"])
-
-    return ids.repartition(32).mapInPandas(
-        run,
-        schema="okey long, n_items long, lon_sum double, lat_sum double",
-    )
+    schema = "okey long, n_items long, lon_sum double, lat_sum double"
+    return _per_order(spark, sf_dir, 71, schema, row)
 
 
 GEORSS_ORACLE = """
@@ -6716,71 +6436,57 @@ def _q_nitf_read(spark, sf_dir):
     cell (file header, image subheader, IMODE B uncompressed blocks)
     is synthesized byte-exactly and decoded back inside Arrow
     batches; stats regenerate closed-form in DuckDB."""
-    import pandas as _pd
-
     from gdal_spark.raster import nitf as NITF
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ids = o.filter("o_orderkey % 200 = 156").select(
-        F.col("o_orderkey").cast("long").alias("okey"))
+    r, c = _np.meshgrid(_np.arange(30), _np.arange(40), indexing="ij")
 
-    def run(batches):
-        r, c = _np.meshgrid(_np.arange(30), _np.arange(40), indexing="ij")
-        for pdf in batches:
-            outs = []
-            for okey in pdf["okey"]:
-                okey = int(okey)
-                img = ((3 * r + 8 * c + okey) % 256).astype(_np.uint8)
-                data = img.tobytes()
-                # image subheader: fixed fields up to IMODE block
-                sub = bytearray(b" " * 333)
-                sub[0:2] = b"IM"
-                sub += b"%08d" % 30       # NROWS
-                sub += b"%08d" % 40       # NCOLS
-                sub += b"INT"             # PVTYPE
-                sub += b"MONO    "        # IREP
-                sub += b"VIS     "        # ICAT
-                sub += b"08"              # ABPP
-                sub += b"R"               # PJUST (off+37)
-                sub += b" "               # ICORDS blank
-                sub += b"0"               # NICOM
-                sub += b"NC"              # IC
-                sub += b"1"               # NBANDS
-                sub += b"M " + b" " * 6 + b"    " + b"0"  # band info
-                sub += b"0"               # ISYNC
-                sub += b"B"               # IMODE
-                sub += b"0001" * 2        # NBPR, NBPC
-                sub += b"0040"            # NPPBH (w)
-                sub += b"0030"            # NPPBV (h)
-                sub += b"08"              # NBPP
-                sub += b"001" + b"000" + b"0000000000" + b"1.0 "
-                sub += b"0" * 0
-                sub += b"00000"           # UDIDL
-                sub += b"00000"           # IXSHDL
-                hl = 360 + 3 + 16
-                fh = bytearray(b" " * hl)
-                fh[0:9] = b"NITF02.10"
-                fh[354:360] = b"%06d" % hl
-                fh[360:363] = b"001"
-                fh[363:369] = b"%06d" % len(sub)
-                fh[369:379] = b"%010d" % len(data)
-                buf = bytes(fh) + bytes(sub) + data
-                arr, info = NITF.read_nitf(buf)
-                outs.append((
-                    okey,
-                    float(arr.astype(_np.int64).sum()),
-                    int(arr.min()), int(arr.max()),
-                    int(info["w"]), int(info["h"]),
-                ))
-            yield _pd.DataFrame(
-                outs, columns=["okey", "pix_sum", "pix_min", "pix_max",
-                               "w", "h"])
+    def row(okey):
+        img = ((3 * r + 8 * c + okey) % 256).astype(_np.uint8)
+        data = img.tobytes()
+        # image subheader: fixed fields up to IMODE block
+        sub = bytearray(b" " * 333)
+        sub[0:2] = b"IM"
+        sub += b"%08d" % 30       # NROWS
+        sub += b"%08d" % 40       # NCOLS
+        sub += b"INT"             # PVTYPE
+        sub += b"MONO    "        # IREP
+        sub += b"VIS     "        # ICAT
+        sub += b"08"              # ABPP
+        sub += b"R"               # PJUST (off+37)
+        sub += b" "               # ICORDS blank
+        sub += b"0"               # NICOM
+        sub += b"NC"              # IC
+        sub += b"1"               # NBANDS
+        sub += b"M " + b" " * 6 + b"    " + b"0"  # band info
+        sub += b"0"               # ISYNC
+        sub += b"B"               # IMODE
+        sub += b"0001" * 2        # NBPR, NBPC
+        sub += b"0040"            # NPPBH (w)
+        sub += b"0030"            # NPPBV (h)
+        sub += b"08"              # NBPP
+        sub += b"001" + b"000" + b"0000000000" + b"1.0 "
+        sub += b"0" * 0
+        sub += b"00000"           # UDIDL
+        sub += b"00000"           # IXSHDL
+        hl = 360 + 3 + 16
+        fh = bytearray(b" " * hl)
+        fh[0:9] = b"NITF02.10"
+        fh[354:360] = b"%06d" % hl
+        fh[360:363] = b"001"
+        fh[363:369] = b"%06d" % len(sub)
+        fh[369:379] = b"%010d" % len(data)
+        buf = bytes(fh) + bytes(sub) + data
+        arr, info = NITF.read_nitf(buf)
+        return (
+            okey,
+            float(arr.astype(_np.int64).sum()),
+            int(arr.min()), int(arr.max()),
+            int(info["w"]), int(info["h"]),
+        )
 
-    return ids.repartition(32).mapInPandas(
-        run,
-        schema=("okey long, pix_sum double, pix_min long, pix_max long,"
-                " w long, h long"),
-    )
+    schema = ("okey long, pix_sum double, pix_min long, pix_max long,"
+              " w long, h long")
+    return _per_order(spark, sf_dir, 156, schema, row)
 
 
 NITF_ORACLE = """
@@ -6804,55 +6510,44 @@ def _q_micro_formats_read(spark, sf_dir):
     grid synthesizes either a JDEM text cell (5-digit 0.1 m fields)
     or a PAux .aux+raw pair by okey%2 and decodes back inside Arrow
     batches; stats regenerate closed-form in DuckDB."""
-    import pandas as _pd
-
     from gdal_spark.raster import micro_formats as MF
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ids = o.filter("o_orderkey % 200 = 128").select(
-        F.col("o_orderkey").cast("long").alias("okey"))
+    r, c = _np.meshgrid(_np.arange(12), _np.arange(15), indexing="ij")
 
-    def run(batches):
-        r, c = _np.meshgrid(_np.arange(12), _np.arange(15), indexing="ij")
-        for pdf in batches:
-            outs = []
-            for okey in pdf["okey"]:
-                okey = int(okey)
-                vals = ((6 * r + 5 * c + okey) % 9000).astype(_np.int64)
-                if okey % 2:
-                    hdr = bytearray(b"0" * 1011)
-                    hdr[0:6] = b"JDEMHD"
-                    hdr[23:26] = b"%3d" % 15
-                    hdr[26:29] = b"%3d" % 12
-                    hdr[29:36] = b"0350000"
-                    hdr[36:43] = b"1350000"
-                    hdr[43:50] = b"0360000"
-                    hdr[50:57] = b"1360000"
-                    recs = []
-                    for row in range(12):
-                        rec = b"JDEMHD" + b"%3d" % (row + 1)
-                        rec += b"".join(b"%05d" % v
-                                        for v in vals[row])
-                        recs.append(rec + b"\r\n")
-                    arr, _ = MF.read_jdem(bytes(hdr) + b"".join(recs))
-                    # heights are value*0.1 in float32: recover the
-                    # raw integers exactly via rint(x*10)
-                    total = float(_np.rint(
-                        arr.astype(_np.float64) * 10.0).sum())
-                else:
-                    aux = ("AuxilaryTarget: x.raw\n"
-                           "RawDefinition: 15 12 1\n"
-                           "ChanDefinition-1: 16U 0 2 30 Swapped\n")
-                    raw = vals.astype("<u2").tobytes()
-                    arr, _ = MF.read_paux(aux, raw)
-                    total = float(arr.astype(_np.float64).sum())
-                outs.append((okey, total,
-                             "jdem" if okey % 2 else "paux"))
-            yield _pd.DataFrame(
-                outs, columns=["okey", "val_sum", "fmt"])
+    def row(okey):
+        vals = ((6 * r + 5 * c + okey) % 9000).astype(_np.int64)
+        if okey % 2:
+            hdr = bytearray(b"0" * 1011)
+            hdr[0:6] = b"JDEMHD"
+            hdr[23:26] = b"%3d" % 15
+            hdr[26:29] = b"%3d" % 12
+            hdr[29:36] = b"0350000"
+            hdr[36:43] = b"1350000"
+            hdr[43:50] = b"0360000"
+            hdr[50:57] = b"1360000"
+            recs = []
+            for line in range(12):
+                rec = b"JDEMHD" + b"%3d" % (line + 1)
+                rec += b"".join(b"%05d" % v
+                                for v in vals[line])
+                recs.append(rec + b"\r\n")
+            arr, _ = MF.read_jdem(bytes(hdr) + b"".join(recs))
+            # heights are value*0.1 in float32: recover the
+            # raw integers exactly via rint(x*10)
+            total = float(_np.rint(
+                arr.astype(_np.float64) * 10.0).sum())
+        else:
+            aux = ("AuxilaryTarget: x.raw\n"
+                   "RawDefinition: 15 12 1\n"
+                   "ChanDefinition-1: 16U 0 2 30 Swapped\n")
+            raw = vals.astype("<u2").tobytes()
+            arr, _ = MF.read_paux(aux, raw)
+            total = float(arr.astype(_np.float64).sum())
+        return (okey, total,
+                "jdem" if okey % 2 else "paux")
 
-    return ids.repartition(32).mapInPandas(
-        run, schema="okey long, val_sum double, fmt string")
+    schema = "okey long, val_sum double, fmt string"
+    return _per_order(spark, sf_dir, 128, schema, row)
 
 
 MICRO_ORACLE = """
@@ -6877,45 +6572,31 @@ def _q_tiff_codec_matrix(spark, sf_dir):
     plus the compression code actually read from the IFD regenerate
     closed-form in DuckDB.  All four codecs are lossless, so the
     roundtrip is exact."""
-    import pandas as _pd
-
     from gdal_spark.raster import tiff as TIFF
-
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ids = o.filter("o_orderkey % 200 = 150").select(
-        F.col("o_orderkey").cast("long").alias("okey"))
 
     comps = ["lzma", "zstd", "webp", "deflate", "lzw"]
 
-    def run(batches):
-        r, c = _np.meshgrid(_np.arange(24), _np.arange(32), indexing="ij")
-        for pdf in batches:
-            outs = []
-            for okey in pdf["okey"]:
-                okey = int(okey)
-                rgb = _np.stack([
-                    (3 * r + 5 * c + okey) % 256,
-                    (r * c + okey) % 256,
-                    (7 * r + c + 2 * okey) % 256,
-                ], axis=-1).astype(_np.uint8)
-                buf = TIFF.encode_geotiff(
-                    rgb, block=(16, 16), compression=comps[okey % 5])
-                arr, info = TIFF.decode_full(buf)
-                outs.append((
-                    okey, int(info["compression"]),
-                    float(arr[..., 0].astype(_np.int64).sum()),
-                    float(arr[..., 1].astype(_np.int64).sum()),
-                    int(arr[..., 2].min()), int(arr[..., 2].max()),
-                ))
-            yield _pd.DataFrame(
-                outs, columns=["okey", "comp_code", "red_sum", "green_sum",
-                               "blue_min", "blue_max"])
+    r, c = _np.meshgrid(_np.arange(24), _np.arange(32), indexing="ij")
 
-    return ids.repartition(32).mapInPandas(
-        run,
-        schema=("okey long, comp_code long, red_sum double,"
-                " green_sum double, blue_min long, blue_max long"),
-    )
+    def row(okey):
+        rgb = _np.stack([
+            (3 * r + 5 * c + okey) % 256,
+            (r * c + okey) % 256,
+            (7 * r + c + 2 * okey) % 256,
+        ], axis=-1).astype(_np.uint8)
+        buf = TIFF.encode_geotiff(
+            rgb, block=(16, 16), compression=comps[okey % 5])
+        arr, info = TIFF.decode_full(buf)
+        return (
+            okey, int(info["compression"]),
+            float(arr[..., 0].astype(_np.int64).sum()),
+            float(arr[..., 1].astype(_np.int64).sum()),
+            int(arr[..., 2].min()), int(arr[..., 2].max()),
+        )
+
+    schema = ("okey long, comp_code long, red_sum double,"
+              " green_sum double, blue_min long, blue_max long")
+    return _per_order(spark, sf_dir, 150, schema, row)
 
 
 TIFF_CODEC_ORACLE = """
@@ -7015,14 +6696,7 @@ def _q_arrow_export_roundtrip(spark, sf_dir):
     path = _os.path.join(tempfile.gettempdir(), f"gdal_spark_arrows_{tag}_v1")
     if not (_os.path.isdir(path) and any(
             f.endswith(".arrows") for f in _os.listdir(path))):
-        c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-        df = c.select(
-            F.expr(f"ST_MakePoint({synth.POINT_LON_SQL}, "
-                   f"{synth.POINT_LAT_SQL})").alias("geom"),
-            F.col("c_custkey").cast("long").alias("custkey"),
-            F.col("c_name").alias("name"),
-            F.col("c_nationkey").cast("long").alias("nat"),
-        )
+        df = _customer_points(spark, sf_dir)
         ARW.write_arrow_stream(df, path)
     got = ARW.read_arrow_stream(spark, path)
     return got.select(
@@ -7178,30 +6852,20 @@ def _q_raster_compare(spark, sf_dir):
     closed-form pairs (B perturbs A by +5 mod 97 wherever
     (r+c) % 11 == 0), so the whole verdict surface is SQL-derivable
     and exercises encode→decode→compare end to end."""
-    import pandas as _pd
-
     from gdal_spark.raster.codec import encode_image
     from gdal_spark.raster.compare import compare_images
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ids = o.filter("o_orderkey % 200 = 0").select(
-        F.col("o_orderkey").cast("long").alias("okey"))
+    r, c = _np.meshgrid(_np.arange(16), _np.arange(16), indexing="ij")
+    mask = (r + c) % 11 == 0
 
-    def gen(batches):
-        r, c = _np.meshgrid(_np.arange(16), _np.arange(16), indexing="ij")
-        mask = (r + c) % 11 == 0
-        for pdf in batches:
-            rows = []
-            for okey in pdf["okey"]:
-                a = ((3 * r + 7 * c + int(okey)) % 97).astype(_np.uint8)
-                b = a.copy()
-                b[mask] = (a[mask] + 5) % 97
-                rows.append((int(okey), encode_image(a, "png"),
-                             encode_image(b, "png")))
-            yield _pd.DataFrame(rows, columns=["okey", "bytes_a", "bytes_b"])
+    def row(okey):
+        a = ((3 * r + 7 * c + okey) % 97).astype(_np.uint8)
+        b = a.copy()
+        b[mask] = (a[mask] + 5) % 97
+        return (okey, encode_image(a, "png"), encode_image(b, "png"))
 
-    pairs = ids.repartition(32).mapInPandas(
-        gen, schema="okey long, bytes_a binary, bytes_b binary")
+    pairs = _per_order(spark, sf_dir, 0,
+                       "okey long, bytes_a binary, bytes_b binary", row)
     out = compare_images(pairs, key="okey")
     return out.select("okey", "n_diff", "max_abs", "ssq",
                       F.round("psnr", 6).alias("psnr"))

@@ -209,10 +209,6 @@ def _atanh(x: str) -> str:
     return f"(0.5 * ln((1.0 + {x}) / (1.0 - {x})))"
 
 
-def _asinh(x: str) -> str:
-    return f"ln(({x}) + sqrt(({x}) * ({x}) + 1.0))"
-
-
 def utm_sql(lon_expr: str, lat_expr: str, zone: int, south: bool = False) -> tuple[str, str]:
     """(easting_sql, northing_sql) — identical text for Spark + DuckDB.
 

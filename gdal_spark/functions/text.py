@@ -65,25 +65,6 @@ STOPWORD_COUNT = (
 )
 
 
-def quality_features(docs: DataFrame) -> DataFrame:
-    """Length / token / stopword-ratio quality features + a composite
-    0-1 quality score (rounded 6dp for cross-engine float stability)."""
-    return docs.select(
-        "doc_id",
-        F.expr(N_CHARS).alias("n_chars_m"),
-        F.expr(N_TOKENS).alias("n_tokens"),
-        F.expr(BPE_COUNT).alias("n_bpe_tokens"),
-        F.expr(STOPWORD_COUNT).alias("n_stopwords"),
-        F.round(
-            F.expr(
-                f"0.5 * least(1.0, {N_TOKENS} / 100.0) "
-                f"+ 0.5 * ({STOPWORD_COUNT} / CAST({N_TOKENS} AS DOUBLE))"
-            ),
-            6,
-        ).alias("quality"),
-    )
-
-
 FINGERPRINT = (
     f"md5(concat_ws(' ', array_sort(array_distinct({TOKENS}))))"
 )

@@ -175,36 +175,6 @@ def embedding_neardup_pairs(
     )
 
 
-def lsh_topk(
-    embeddings: DataFrame,
-    n_queries: int = 8,
-    k: int = 10,
-    n_planes: int = N_PLANES,
-) -> DataFrame:
-    """Single-table bucketed ANN: exact cosine only within the query's
-    full-signature LSH bucket (AND-only — kept as the cheapest probe;
-    see ``lsh_topk_banded`` for the OR-amplified search operator).
-    Deterministic (md5-derived planes) so the DuckDB oracle reproduces
-    the same buckets and therefore the same result set."""
-    sig = embeddings.withColumn("sig", sig_bits_udf(n_planes)("embedding"))
-    q = sig.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("sig").alias("q_sig"),
-    )
-    joined = (
-        sig.join(F.broadcast(q), F.col("sig") == F.col("q_sig"))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("score", F.round(F.expr(cosine_expr("q_emb", "embedding")), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("vec_id").asc())
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "score", "rank")
-    )
-
-
 def band_sig_exprs(
     bands: int, rows: int, accessor: str = "element_at({emb}, {i})", emb: str = "embedding"
 ) -> list[str]:

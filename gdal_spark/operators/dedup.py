@@ -37,14 +37,6 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     )
 
 
-def minhash_sig_exprs(k: int = K_MINHASH) -> list[str]:
-    """Signature element i = min over tokens of md5('<i>|' || token) —
-    a valid min-wise hash family (min over a pseudorandom ordering)."""
-    return [
-        f"array_min(transform({TOKENS}, x -> md5(concat('{i}|', x))))" for i in range(k)
-    ]
-
-
 _SHINGLE_FROM_T = (
     "CASE WHEN size(_t) >= 3 THEN transform(sequence(1, size(_t) - 2), "
     "i -> concat_ws(' ', element_at(_t, i), element_at(_t, i + 1), element_at(_t, i + 2))) "
@@ -107,16 +99,6 @@ def band_exprs(k: int = K_MINHASH, bands: int = BANDS) -> list[str]:
         cols = ", ".join(f"CAST(mh{b * rows + j} AS STRING)" for j in range(rows))
         out.append(f"md5(concat_ws('|', {cols}))")
     return out
-
-
-def shingles_expr(n: int = 3) -> str:
-    """3-token shingles via sequence+transform (1-based element_at)."""
-    return (
-        f"CASE WHEN size({TOKENS}) >= {n} THEN "
-        f"transform(sequence(1, size({TOKENS}) - {n - 1}), "
-        f"i -> concat_ws(' ', {', '.join(f'element_at(split(text, chr(32)), i + {j})' for j in range(n))})) "
-        f"ELSE array(text) END"
-    )
 
 
 def minhash_lsh_pairs(

@@ -146,18 +146,6 @@ def make_segmentize_udf(maxlen: float):
     return seg
 
 
-def make_simplify_udf(tol: float):
-    @pandas_udf(BinaryType())
-    def simp(wkb: pd.Series) -> pd.Series:
-        return wkb.map(
-            lambda b: _rebuild(G.parse_wkb(b), lambda r: simplify_ring(r, tol))
-            if b is not None
-            else None
-        )
-
-    return simp
-
-
 @pandas_udf(BinaryType())
 def swap_xy(wkb: pd.Series) -> pd.Series:
     def f(b):
@@ -326,24 +314,6 @@ def concave_hull_grouped(
     return points.groupBy(key).applyInPandas(run, schema=schema)
 
 
-def make_concave_hull_udf(ratio: float):
-    """``gdal vector concave-hull --ratio`` pipeline step: hull of the
-    geometry's vertex set."""
-
-    @pandas_udf(BinaryType())
-    def chull(wkb: pd.Series) -> pd.Series:
-        def f(b):
-            if b is None:
-                return None
-            g = G.parse_wkb(bytes(b))
-            pts = np.vstack([p for p in (g.rings or g.coords)])
-            return G.wkb_polygon([concave_hull_points(pts, ratio)])
-
-        return wkb.map(f)
-
-    return chull
-
-
 @pandas_udf(BinaryType())
 def convex_hull(wkb: pd.Series) -> pd.Series:
     def f(b):
@@ -354,22 +324,6 @@ def convex_hull(wkb: pd.Series) -> pd.Series:
         return G.wkb_polygon([convex_hull_points(pts)])
 
     return wkb.map(f)
-
-
-def make_buffer_udf(dist: float, quadsegs: int = 8):
-    """ogr2ogr buffer step — delegates to the ST_Buffer kernel
-    (point + axis-rect classes, functions/predicates.py)."""
-    from gdal_spark.functions import predicates as P
-
-    @pandas_udf(BinaryType())
-    def buf(wkb: pd.Series) -> pd.Series:
-        return wkb.map(
-            lambda b: P.buffer_geom(G.parse_wkb(bytes(b)), dist, quadsegs)
-            if b is not None
-            else None
-        )
-
-    return buf
 
 
 @pandas_udf(BinaryType())

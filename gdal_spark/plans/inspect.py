@@ -22,10 +22,6 @@ def simple_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def plan_has(df: DataFrame, needle: str) -> bool:
-    return needle in formatted_plan(df)
-
-
 def assert_broadcast_join(df: DataFrame) -> None:
     p = formatted_plan(df)
     assert "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p, (
@@ -47,15 +43,6 @@ def assert_no_nested_loop(df: DataFrame) -> None:
     assert "BroadcastNestedLoopJoin" not in p, (
         "BroadcastNestedLoopJoin in plan:\n" + p[:4000]
     )
-
-
-def assert_column_pruned(df: DataFrame, column: str) -> None:
-    """Check a column (e.g. the pixel `bytes`) never reaches a scan's
-    ReadSchema in this plan."""
-    p = formatted_plan(df)
-    for line in p.splitlines():
-        if "ReadSchema" in line:
-            assert column not in line, f"column {column!r} not pruned: {line}"
 
 
 def count_python_stages(df: DataFrame) -> int:

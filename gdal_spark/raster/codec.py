@@ -19,9 +19,8 @@ Pillow/imagecodecs/cv2, so:
   subset and raises loudly beyond it). VP8L is lossless, so fmt='webp'
   rows are checksum-exact, mirroring GDAL's WEBP_LOSSLESS=YES path
   (``frmts/webp/webpdataset.cpp``).
-- The round-1 ``FakeLossyCodec`` (quantize+zlib) is kept only for
-  decoding legacy fixture bytes; no encoder path emits it anymore.
-  Every caller goes through this module only.
+
+Every caller goes through this module only.
 
 Arrays are HxW (gray) or HxWxC uint8.
 """
@@ -34,8 +33,6 @@ import zlib
 import numpy as np
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
-FAKE_MAGIC = b"GSLOSSY1"  # deterministic fake lossy container
-FAKE_QUANT = 4  # quant step → worst-case err 2 → PSNR ≈ 45 dB ≥ 40
 
 
 # ---------------------------------------------------------------------------
@@ -76,14 +73,6 @@ def png_encode(arr: np.ndarray, compress_level: int = 6) -> bytes:
     scan[:, 1:] = raw
     idat = zlib.compress(scan.tobytes(), compress_level)
     return PNG_SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")
-
-
-def _paeth(a, b, c):
-    p = int(a) + int(b) - int(c)
-    pa, pb, pc = abs(p - int(a)), abs(p - int(b)), abs(p - int(c))
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
 
 
 def _png_unfilter(mat: np.ndarray, bpp: int) -> np.ndarray:
@@ -287,35 +276,6 @@ def png_decode(buf: bytes) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Fake lossy codec (STAND-IN for jpeg/webp — NOT a real codec)
-# ---------------------------------------------------------------------------
-
-
-def fake_lossy_encode(arr: np.ndarray, fmt: str = "jpeg", compress_level: int = 6) -> bytes:
-    """Deterministic stand-in for jpeg/webp: quantize channel values to
-    step FAKE_QUANT then zlib. Lossy (so the PSNR path is exercised),
-    deterministic (so tests are stable). Clearly NOT the real codec."""
-    arr = np.ascontiguousarray(arr, dtype=np.uint8)
-    h, w = arr.shape[:2]
-    c = 1 if arr.ndim == 2 else arr.shape[2]
-    q = (arr.astype(np.int16) // FAKE_QUANT).astype(np.uint8)
-    payload = zlib.compress(q.tobytes(), compress_level)
-    fmt_b = fmt.encode()[:4].ljust(4, b"\x00")
-    head = FAKE_MAGIC + fmt_b + struct.pack("<IIIB", h, w, c, FAKE_QUANT)
-    return head + payload
-
-
-def fake_lossy_decode(buf: bytes) -> np.ndarray:
-    if buf[:8] != FAKE_MAGIC:
-        raise ValueError("not a fake-lossy payload")
-    h, w, c, q = struct.unpack_from("<IIIB", buf, 12)
-    raw = zlib.decompress(buf[25:])
-    arr = np.frombuffer(raw, dtype=np.uint8).reshape((h, w) if c == 1 else (h, w, c))
-    out = arr.astype(np.int16) * q + q // 2
-    return np.clip(out, 0, 255).astype(np.uint8)
-
-
-# ---------------------------------------------------------------------------
 # Dispatch
 # ---------------------------------------------------------------------------
 
@@ -383,10 +343,8 @@ def decode_image(buf: bytes, fmt: str | None = None) -> np.ndarray:
         from gdal_spark.raster import bmp
 
         return bmp.decode(b)
-    if b[:8] == FAKE_MAGIC:
-        return fake_lossy_decode(b)
     raise NotImplementedError(
-        f"payload is not PNG/JPEG/WebP/GIF/GeoTIFF/fake-lossy (fmt hint {fmt!r})"
+        f"payload is not PNG/JPEG/WebP/GeoTIFF/PNM/GIF/BMP (fmt hint {fmt!r})"
     )
 
 

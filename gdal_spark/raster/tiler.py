@@ -61,8 +61,6 @@ from gdal_spark.raster.warp import warp_lonlat_to_merc_tile
 
 TILE_SIZE = 256
 
-ASSIGN_SCHEMA_COLS = ["image_id", "z", "tx", "ty", "x", "y", "quadkey"]
-
 
 def assign_tiles(footprints: DataFrame, zoom: int) -> DataFrame:
     """Tile cover of each footprint at ``zoom`` — pure column math."""
@@ -100,13 +98,6 @@ def assign_tiles_geodetic(
             F.col("_gty").alias("ty"),
         )
     )
-
-
-def assign_tiles_multi(footprints: DataFrame, min_zoom: int, max_zoom: int) -> DataFrame:
-    out = assign_tiles(footprints, max_zoom)
-    for z in range(max_zoom - 1, min_zoom - 1, -1):
-        out = out.unionByName(assign_tiles(footprints, z))
-    return out
 
 
 import zlib
@@ -388,26 +379,6 @@ TILE_SCHEMA = (
     "z int, tx int, ty int, x int, y int, quadkey string, tile binary, "
     "checksum int, n_srcs int"
 )
-
-
-def build_overview_level(tiles: DataFrame, tile_size: int = TILE_SIZE) -> DataFrame:
-    """One standalone pyramid step on FINAL tiles (PNG in, PNG out):
-    level z−1 from level z (4→1 compose + 2× average,
-    gdal2tiles.py:1466-1545). ``build_pyramid`` uses the raw-payload
-    recurrence instead — this wrapper exists for callers holding
-    already-written tile rows."""
-
-    def to_raw(it):
-        for pdf in it:
-            rows = [
-                (r.z, r.tx, r.ty, _pack(codec.png_decode(bytes(r.tile))), 1)
-                for r in pdf.itertuples()
-            ]
-            if rows:
-                yield pd.DataFrame(rows, columns=_RAW_COLS)
-
-    raw = tiles.select("z", "tx", "ty", "tile").mapInPandas(to_raw, schema=RAW_SCHEMA)
-    return _finalize_raw(_overview_raw(raw, tile_size), tile_size)
 
 
 def build_pyramid(

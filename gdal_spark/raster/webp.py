@@ -104,10 +104,6 @@ def _prefix_value(code: int, extra: int) -> int:
     return offset + extra + 1
 
 
-def _prefix_nbits(code: int) -> int:
-    return 0 if code < 4 else (code - 2) >> 1
-
-
 def _prefix_split(v: int) -> tuple[int, int, int]:
     """length/distance value → (prefix_code, extra_value, extra_bits);
     exact inverse of :func:`_prefix_value`."""

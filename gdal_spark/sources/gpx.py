@@ -28,9 +28,9 @@ pins LINK_2_TEXT == "text3" from the waypoint's third link).
 OGR datetime strings are reproduced: ``2007-11-25T17:58:00+01:00`` →
 ``2007/11/25 17:58:00+01``.
 
-Spark mapping mirrors the KML source: GPX is a whole-XML-document
-format, so the reader runs one task per ``.gpx`` file and the writer
-is a terminal single-file hop; bulk interchange goes through
+GPX is a whole-XML-document format, so ``parse_gpx`` and
+``write_gpx`` work on one document at a time (inside Arrow batches
+when run from Spark); bulk interchange goes through
 GeoJSONSeq/parquet.  The writer reproduces the reference's layout
 byte-for-byte (OGRFormatDouble trailing ``.0``, two-space indents —
 pinned against ``autotest/ogr/data/gpx/ogr_gpx_8_ref.txt``).
@@ -89,24 +89,6 @@ def _wkt_num(v: float) -> str:
 
 def _strip(el_tag: str) -> str:
     return el_tag.rsplit("}", 1)[-1]
-
-
-def point_fields(n_max_links: int = 2) -> list[str]:
-    out = ["ele", "time", "magvar", "geoidheight", "name", "cmt",
-           "desc", "src"]
-    for i in range(1, n_max_links + 1):
-        out += [f"link{i}_href", f"link{i}_text", f"link{i}_type"]
-    out += ["sym", "type", "fix", "sat", "hdop", "vdop", "pdop",
-            "ageofdgpsdata", "dgpsid"]
-    return out
-
-
-def line_fields(n_max_links: int = 2) -> list[str]:
-    out = ["name", "cmt", "desc", "src"]
-    for i in range(1, n_max_links + 1):
-        out += [f"link{i}_href", f"link{i}_text", f"link{i}_type"]
-    out += ["number", "type"]
-    return out
 
 
 def _cast(name: str, text: str):
@@ -361,9 +343,6 @@ def parse_gpx_metadata(data: bytes) -> dict:
 
 # ------------------------------------------------------------------ writer
 
-_MD_SIMPLE = [("NAME", "name"), ("DESCRIPTION", "desc")]
-
-
 def _esc(s) -> str:
     return (str(s).replace("&", "&amp;").replace("<", "&lt;")
             .replace(">", "&gt;"))
@@ -544,52 +523,3 @@ def write_gpx(layer: str, features: list[dict],
     lines.append("</gpx>")
     return "\n".join(lines) + "\n"
 
-
-# ----------------------------------------------------------- Spark surface
-
-def read_gpx(spark, path: str, layer: str, ele_as_25d: bool = False,
-             n_max_links: int = 2, short_names: bool = False):
-    """Distributed read: one task per .gpx file (whole-document XML,
-    same partitioning rationale as the KML source)."""
-    import pandas as pd
-
-    if layer in ("waypoints", "route_points", "track_points"):
-        fields = point_fields(n_max_links)
-        if layer == "route_points":
-            fields = ["route_fid",
-                      "rteptid" if short_names else "route_point_id"] + fields
-        elif layer == "track_points":
-            fields = ["track_fid",
-                      "trksegid" if short_names else "track_seg_id",
-                      "trksegptid" if short_names
-                      else "track_seg_point_id"] + fields
-    else:
-        fields = line_fields(n_max_links)
-
-    def spark_type(f):
-        if f in _INT_FIELDS or f in ("route_fid", "route_point_id",
-                                     "rteptid", "track_fid",
-                                     "track_seg_id", "trksegid",
-                                     "track_seg_point_id", "trksegptid"):
-            return "long"
-        if f in _REAL_FIELDS:
-            return "double"
-        return "string"
-
-    schema = ", ".join([f"{f} {spark_type(f)}" for f in fields]
-                       + ["wkt string", "src_file string"])
-    files = spark.read.format("binaryFile").load(path)
-
-    def parse(batches):
-        for pdf in batches:
-            rows = []
-            for fpath, data in zip(pdf["path"], pdf["content"]):
-                for feat in parse_gpx(bytes(data), layer,
-                                      ele_as_25d=ele_as_25d,
-                                      n_max_links=n_max_links,
-                                      short_names=short_names):
-                    rows.append([feat.get(f) for f in fields]
-                                + [feat["wkt"], fpath])
-            yield pd.DataFrame(rows, columns=fields + ["wkt", "src_file"])
-
-    return files.select("path", "content").mapInPandas(parse, schema=schema)

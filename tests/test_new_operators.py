@@ -499,7 +499,7 @@ def test_color_map_and_psnr(spark, sf_dir):
     b = codec.decode_image(src[r.image_id].bytes, src[r.image_id].fmt)[:, :, 0]
     assert r.cs_r == checksum_band(pal[b][:, :, 0])
     # PSNR gate: every synthetic image passes (lossless exact for png;
-    # fake-lossy quant step 4 → PSNR ~45 dB ≥ 40)
+    # JPEG at quality 98 keeps PSNR ≥ 40)
     gate = lossy_psnr_gate(imgs).collect()
     assert gate and all(g.ok for g in gate)
     assert any(g.fmt == "png" and g.lossless_exact for g in gate)

@@ -50,15 +50,6 @@ def test_png_filters_decode():
     assert np.array_equal(C.png_decode(buf), a)
 
 
-def test_fake_lossy_psnr():
-    a = synth()
-    enc = C.fake_lossy_encode(a, "jpeg")
-    dec = C.fake_lossy_decode(enc)
-    assert dec.shape == a.shape
-    p = C.psnr(a, dec)
-    assert p >= 40.0, p  # north-rule lossy bar (gdalalg_raster_compare.cpp:1094)
-
-
 def test_decode_dispatch():
     a = synth(c=1)
     assert np.array_equal(C.decode_image(C.encode_image(a, "png")), a)

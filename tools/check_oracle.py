@@ -48,6 +48,42 @@ def canon_rows(cols, rows):
     return [cols[i] for i in order], out
 
 
+def duckdb_views(sf_dir):
+    """DuckDB connection with one view per driver table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def compare(scols, srows, ocols, orows):
+    """Mismatches between a Spark result and its oracle result: row
+    count, column names, then canonicalised values. Empty when they
+    agree."""
+    msgs = []
+    if len(srows) != len(orows):
+        msgs.append(f"rowcount spark={len(srows)} duckdb={len(orows)}")
+    if sorted(scols) != sorted(ocols):
+        msgs.append(f"cols spark={sorted(scols)} duckdb={sorted(ocols)}")
+    if msgs:
+        return msgs
+    _, sc = canon_rows(scols, [tuple(r) for r in srows])
+    _, oc = canon_rows(ocols, orows)
+    if sc != oc:
+        diff = [i for i, (a, b) in enumerate(zip(sc, oc)) if a != b][:3]
+        for i in diff:
+            msgs.append(f"row[{i}] spark={sc[i]} duckdb={oc[i]}")
+        if not diff:
+            msgs.append("row set diff (extra/missing rows)")
+            extra = set(sc) - set(oc)
+            missing = set(oc) - set(sc)
+            for r in list(extra)[:2]:
+                msgs.append(f"  spark-only: {r}")
+            for r in list(missing)[:2]:
+                msgs.append(f"  duckdb-only: {r}")
+    return msgs
+
+
 def main():
     args = sys.argv[1:]
     json_out = None
@@ -59,9 +95,7 @@ def main():
     only = set(args[1:])
     results: dict[str, dict] = {}
     spark = get_spark("oracle-check")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = duckdb_views(sf_dir)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -98,31 +132,8 @@ def main():
             results[name] = {"status": "fail", "detail": f"duckdb error: {e}"}
             n_fail += 1
             continue
-        ok = True
-        msgs = []
-        if len(srows) != len(orows):
-            ok = False
-            msgs.append(f"rowcount spark={len(srows)} duckdb={len(orows)}")
-        if sorted(scols) != sorted(ocols):
-            ok = False
-            msgs.append(f"cols spark={sorted(scols)} duckdb={sorted(ocols)}")
-        if ok:
-            _, sc = canon_rows(scols, [tuple(r) for r in srows])
-            _, oc = canon_rows(ocols, orows)
-            if sc != oc:
-                ok = False
-                diff = [i for i, (a, b) in enumerate(zip(sc, oc)) if a != b][:3]
-                for i in diff:
-                    msgs.append(f"row[{i}] spark={sc[i]} duckdb={oc[i]}")
-                if not diff:
-                    msgs.append("row set diff (extra/missing rows)")
-                    extra = set(sc) - set(oc)
-                    missing = set(oc) - set(sc)
-                    for r in list(extra)[:2]:
-                        msgs.append(f"  spark-only: {r}")
-                    for r in list(missing)[:2]:
-                        msgs.append(f"  duckdb-only: {r}")
-        if ok:
+        msgs = compare(scols, srows, ocols, orows)
+        if not msgs:
             print(f"PASS  {name}: rows={len(srows)} ({t1-t0:.1f}s)")
             results[name] = {
                 "status": "pass",
