@@ -5261,7 +5261,7 @@ def _per_order(spark, sf_dir, residue, schema, row):
     returns a tuple in the column order of the DDL ``schema``."""
     import pandas as _pd
 
-    columns = [field.split()[0] for field in schema.split(",")]
+    columns = rp.ddl_columns(schema)
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
     okeys = o.filter(f"o_orderkey % 200 = {residue}").select(
         F.col("o_orderkey").cast("long").alias("okey"))

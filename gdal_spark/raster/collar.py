@@ -30,12 +30,11 @@ for the ring WKT — ring tracing is exercised by ``raster_polygonize``.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from gdal_spark.raster import codec
 from gdal_spark.raster.checksum import checksum_band
 from gdal_spark.raster.morphology import label4
+from gdal_spark.raster.pipeline import map_images
 
 BLACK = (0, 0, 0)
 WHITE = (255, 255, 255)
@@ -136,13 +135,6 @@ def warp_utm_array(
     return out, epsg, px_w, px_h
 
 
-def _warped(r, out_size):
-    arr = codec.decode_image(r.bytes, r.fmt)
-    return warp_utm_array(
-        arr, r.lon, r.lat, r.lon_min, r.lat_min, r.lon_max, r.lat_max, out_size
-    )
-
-
 def clean_collar(
     images: DataFrame,
     colors=(BLACK, WHITE),
@@ -152,42 +144,20 @@ def clean_collar(
     """gdalwarp → nearblack per image. Emits the collar size and the
     checksums of the cleaned band 0 + alpha band (the ``-setalpha``
     output)."""
-    from gdal_spark.raster.pipeline import _ensure_batch
-
-    _ensure_batch(images)
     schema = (
         "image_id string, epsg int, n_collar int, checksum_b0 int, checksum_alpha int"
     )
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                warped, epsg, _pw, _ph = _warped(r, out_size)
-                cleaned, alpha = clean_collar_array(warped, colors, threshold)
-                b0 = cleaned[:, :, 0] if cleaned.ndim == 3 else cleaned
-                rows.append(
-                    (
-                        r.image_id,
-                        epsg,
-                        int((alpha == 0).sum()),
-                        checksum_band(b0),
-                        checksum_band(alpha),
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "image_id",
-                        "epsg",
-                        "n_collar",
-                        "checksum_b0",
-                        "checksum_alpha",
-                    ],
-                )
+    def fn(r, arr):
+        warped, epsg, _pw, _ph = warp_utm_array(
+            arr, r.lon, r.lat, r.lon_min, r.lat_min, r.lon_max, r.lat_max, out_size
+        )
+        cleaned, alpha = clean_collar_array(warped, colors, threshold)
+        b0 = cleaned[:, :, 0] if cleaned.ndim == 3 else cleaned
+        yield (r.image_id, epsg, int((alpha == 0).sum()),
+               checksum_band(b0), checksum_band(alpha))
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)
 
 
 def footprint_digest(
@@ -226,37 +196,21 @@ def footprint(
     nodata), 4-connected rings, sub-``min_ring_area`` rings dropped,
     areas georeferenced by the UTM pixel size; ``hull_area_m2`` is the
     ``-convex_hull`` variant (hull of valid pixel corners)."""
-    from gdal_spark.raster.pipeline import _ensure_batch
-
-    _ensure_batch(images)
     schema = (
         "image_id string, epsg int, n_rings int, valid_px int, "
         "area_m2 double, hull_area_m2 double"
     )
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                warped, epsg, px_w, px_h = _warped(r, out_size)
-                n_rings, valid_px, area, hull = footprint_digest(
-                    warped, px_w, px_h, nodata, min_ring_area
-                )
-                rows.append((r.image_id, epsg, n_rings, valid_px, area, hull))
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "image_id",
-                        "epsg",
-                        "n_rings",
-                        "valid_px",
-                        "area_m2",
-                        "hull_area_m2",
-                    ],
-                )
+    def fn(r, arr):
+        warped, epsg, px_w, px_h = warp_utm_array(
+            arr, r.lon, r.lat, r.lon_min, r.lat_min, r.lon_max, r.lat_max, out_size
+        )
+        n_rings, valid_px, area, hull = footprint_digest(
+            warped, px_w, px_h, nodata, min_ring_area
+        )
+        yield (r.image_id, epsg, n_rings, valid_px, area, hull)
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)
 
 
 def nodata_to_alpha(
@@ -269,41 +223,19 @@ def nodata_to_alpha(
     marks ALL nodata pixels — interior lakes included, no floodfill.
     Runs over the engine's own gdalwarp output (the real source of
     nodata pixels for this table)."""
-    from gdal_spark.raster.pipeline import _ensure_batch
-
-    _ensure_batch(images)
     schema = (
         "image_id string, epsg int, n_transparent int, "
         "checksum_b0 int, checksum_alpha int"
     )
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                warped, epsg, _pw, _ph = _warped(r, out_size)
-                a = warped if warped.ndim == 3 else warped[:, :, None]
-                transparent = (a == nodata).all(axis=2)
-                alpha = np.where(transparent, 0, 255).astype(np.uint8)
-                rows.append(
-                    (
-                        r.image_id,
-                        epsg,
-                        int(transparent.sum()),
-                        checksum_band(a[:, :, 0]),
-                        checksum_band(alpha),
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "image_id",
-                        "epsg",
-                        "n_transparent",
-                        "checksum_b0",
-                        "checksum_alpha",
-                    ],
-                )
+    def fn(r, arr):
+        warped, epsg, _pw, _ph = warp_utm_array(
+            arr, r.lon, r.lat, r.lon_min, r.lat_min, r.lon_max, r.lat_max, out_size
+        )
+        a = warped if warped.ndim == 3 else warped[:, :, None]
+        transparent = (a == nodata).all(axis=2)
+        alpha = np.where(transparent, 0, 255).astype(np.uint8)
+        yield (r.image_id, epsg, int(transparent.sum()),
+               checksum_band(a[:, :, 0]), checksum_band(alpha))
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)

@@ -20,6 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from gdal_spark.raster.codec import decode_image
+from gdal_spark.session import ensure_pixel_batch_size
 
 
 def compare_arrays(a: np.ndarray, b: np.ndarray) -> dict:
@@ -41,6 +42,7 @@ def compare_images(df: DataFrame, col_a: str = "bytes_a",
                    col_b: str = "bytes_b",
                    key: str = "image_id") -> DataFrame:
     """Per-row comparison of two encoded payload columns → stats."""
+    ensure_pixel_batch_size(df.sparkSession)
 
     def run(batches):
         for pdf in batches:

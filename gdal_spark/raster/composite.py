@@ -24,12 +24,8 @@ from pyspark.sql import DataFrame
 
 from gdal_spark.raster import codec
 from gdal_spark.raster.checksum import checksum_band
-
-
-def _ensure(images: DataFrame) -> None:
-    from gdal_spark.session import ensure_pixel_batch_size
-
-    ensure_pixel_batch_size(images.sparkSession)
+from gdal_spark.raster.pipeline import map_images
+from gdal_spark.session import ensure_pixel_batch_size
 
 
 # 256-entry viridis-ish deterministic palette (analytic, not sampled)
@@ -44,25 +40,16 @@ def default_palette() -> np.ndarray:
 def color_map(images: DataFrame, palette: np.ndarray | None = None) -> DataFrame:
     """Band-0 gray → RGB via palette LUT. Returns image_id + per-band
     checksums of the mapped raster."""
-    _ensure(images)
     pal = default_palette() if palette is None else np.asarray(palette, dtype=np.uint8)
     schema = "image_id string, cs_r int, cs_g int, cs_b int"
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                b = arr[:, :, 0] if arr.ndim == 3 else arr
-                rgb = pal[b]  # (h, w, 3) LUT gather
-                rows.append(
-                    (r.image_id, checksum_band(rgb[:, :, 0]),
-                     checksum_band(rgb[:, :, 1]), checksum_band(rgb[:, :, 2]))
-                )
-            if rows:
-                yield pd.DataFrame(rows, columns=["image_id", "cs_r", "cs_g", "cs_b"])
+    def fn(r, arr):
+        b = arr[:, :, 0] if arr.ndim == 3 else arr
+        rgb = pal[b]  # (h, w, 3) LUT gather
+        yield (r.image_id, checksum_band(rgb[:, :, 0]),
+               checksum_band(rgb[:, :, 1]), checksum_band(rgb[:, :, 2]))
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)
 
 
 def blend_arrays(arrs: list, alpha: float = 0.5) -> np.ndarray:
@@ -93,7 +80,7 @@ def blend_pair(images: DataFrame, alpha: float = 0.5) -> DataFrame:
     ``gdal raster blend`` ``out = a*first + (1-a)*second``; larger
     groups generalize it to a deterministic multi-image blend.
     Returns (pair_id, checksum, w, h, n_members)."""
-    _ensure(images)
+    ensure_pixel_batch_size(images.sparkSession)
 
     schema = "pair_id long, checksum int, w int, h int, n_members int"
 
@@ -118,7 +105,7 @@ def stack_bands(images: DataFrame, group_col: str = "pair_id") -> DataFrame:
     """gdal raster stack: group members become bands of one raster
     (aligned to the first member's shape). Returns per-group band
     count + per-band checksums (first 4)."""
-    _ensure(images)
+    ensure_pixel_batch_size(images.sparkSession)
     from gdal_spark.raster.resample import resize_nearest
 
     schema = f"{group_col} long, n_bands int, cs_b0 int, cs_b1 int, cs_b2 int, cs_b3 int"
@@ -153,28 +140,18 @@ def lossy_psnr_gate(images: DataFrame, min_db: float = 40.0) -> DataFrame:
     JPEG (baseline DCT) is lossy → PSNR gate, metric per
     ``apps/gdalalg_raster_compare.cpp:1094``. Returns
     (image_id, fmt, lossless_exact, psnr_db, ok)."""
-    _ensure(images)
     schema = "image_id string, fmt string, lossless_exact boolean, psnr_db double, ok boolean"
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                rt = codec.decode_image(codec.encode_image(arr, r.fmt, 1), r.fmt)
-                if r.fmt in ("png", "webp"):
-                    exact = rt.shape == arr.shape and bool((rt == arr).all())
-                    rows.append((r.image_id, r.fmt, exact, float("inf"), exact))
-                else:
-                    p = codec.psnr(arr, rt)
-                    rows.append((r.image_id, r.fmt, False, p, bool(p >= min_db)))
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["image_id", "fmt", "lossless_exact", "psnr_db", "ok"],
-                )
+    def fn(r, arr):
+        rt = codec.decode_image(codec.encode_image(arr, r.fmt, 1), r.fmt)
+        if r.fmt in ("png", "webp"):
+            exact = rt.shape == arr.shape and bool((rt == arr).all())
+            yield (r.image_id, r.fmt, exact, float("inf"), exact)
+        else:
+            p = codec.psnr(arr, rt)
+            yield (r.image_id, r.fmt, False, p, bool(p >= min_db))
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)
 
 
 def progressive_jpeg_gate(images: DataFrame, min_db: float = 25.0) -> DataFrame:
@@ -193,38 +170,25 @@ def progressive_jpeg_gate(images: DataFrame, min_db: float = 25.0) -> DataFrame:
     match_baseline, psnr_db, ok)."""
     from gdal_spark.raster import jpeg
 
-    _ensure(images)
     schema = (
         "image_id string, w int, h int, subsampling string, quality int, "
         "prog_len long, match_baseline boolean, psnr_db double, ok boolean"
     )
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                okey = int(r.image_id[3:])
-                arr = codec.decode_image(r.bytes, r.fmt)
-                sub = "420" if okey % 3 == 0 else "444"
-                q = 85 if okey % 2 else 95
-                bp = jpeg.encode_progressive(arr, q, subsampling=sub)
-                bb = jpeg.encode(arr, q, subsampling=sub)
-                dp = jpeg.decode(bp)
-                db = jpeg.decode(bb)
-                match = dp.shape == db.shape and bool((dp == db).all())
-                p = round(codec.psnr(arr, dp), 2)
-                rows.append(
-                    (r.image_id, int(r.w), int(r.h), sub, q, len(bp),
-                     match, p, bool(match and p >= min_db))
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["image_id", "w", "h", "subsampling", "quality",
-                             "prog_len", "match_baseline", "psnr_db", "ok"],
-                )
+    def fn(r, arr):
+        okey = int(r.image_id[3:])
+        sub = "420" if okey % 3 == 0 else "444"
+        q = 85 if okey % 2 else 95
+        bp = jpeg.encode_progressive(arr, q, subsampling=sub)
+        bb = jpeg.encode(arr, q, subsampling=sub)
+        dp = jpeg.decode(bp)
+        db = jpeg.decode(bb)
+        match = dp.shape == db.shape and bool((dp == db).all())
+        p = round(codec.psnr(arr, dp), 2)
+        yield (r.image_id, int(r.w), int(r.h), sub, q, len(bp),
+               match, p, bool(match and p >= min_db))
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)
 
 
 
@@ -241,40 +205,26 @@ def webp_lz77_gate(images: DataFrame) -> DataFrame:
     literal_len, lossless_exact, smaller, ok)."""
     from gdal_spark.raster import webp
 
-    _ensure(images)
     schema = (
         "image_id string, w int, h int, cache_bits int, plane_codes boolean, "
         "lz77_len long, literal_len long, lossless_exact boolean, "
         "smaller boolean, ok boolean"
     )
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                okey = int(r.image_id[3:])
-                arr = codec.decode_image(r.bytes, r.fmt)
-                post = ((arr >> 5) << 5).astype(np.uint8)
-                cb = (0, 4, 8)[okey % 3]
-                upc = okey % 2 == 0
-                blz = webp.encode_lz77(post, cache_bits=cb, use_plane_codes=upc)
-                blit = webp.encode(post)
-                out = webp.decode(blz)
-                exact = out.shape == post.shape and bool((out == post).all())
-                smaller = len(blz) < len(blit)
-                rows.append(
-                    (r.image_id, int(r.w), int(r.h), cb, upc, len(blz),
-                     len(blit), exact, smaller, exact)
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["image_id", "w", "h", "cache_bits", "plane_codes",
-                             "lz77_len", "literal_len", "lossless_exact",
-                             "smaller", "ok"],
-                )
+    def fn(r, arr):
+        okey = int(r.image_id[3:])
+        post = ((arr >> 5) << 5).astype(np.uint8)
+        cb = (0, 4, 8)[okey % 3]
+        upc = okey % 2 == 0
+        blz = webp.encode_lz77(post, cache_bits=cb, use_plane_codes=upc)
+        blit = webp.encode(post)
+        out = webp.decode(blz)
+        exact = out.shape == post.shape and bool((out == post).all())
+        smaller = len(blz) < len(blit)
+        yield (r.image_id, int(r.w), int(r.h), cb, upc, len(blz),
+               len(blit), exact, smaller, exact)
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)
 
 
 
@@ -303,34 +253,21 @@ def lossy_vp8_gate(images: DataFrame, min_db: float = 40.0) -> DataFrame:
     from gdal_spark.native.webp_lib import encode_rgb
     from gdal_spark.raster import webp as W
 
-    _ensure(images)
     schema = (
         "image_id string, w int, h int, quality int, vp8_len long, "
         "psnr_db double, ok boolean"
     )
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                okey = int(r.image_id[3:])
-                arr = _box_smooth(codec.decode_image(r.bytes, r.fmt))
-                q = 85 if okey % 2 else 95
-                blob = encode_rgb(arr, float(q))
-                out = W.decode(blob)
-                p = round(codec.psnr(arr, out), 2)
-                rows.append(
-                    (r.image_id, int(r.w), int(r.h), q, len(blob), p,
-                     bool(p >= min_db))
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["image_id", "w", "h", "quality", "vp8_len",
-                             "psnr_db", "ok"],
-                )
+    def fn(r, arr):
+        okey = int(r.image_id[3:])
+        arr = _box_smooth(arr)
+        q = 85 if okey % 2 else 95
+        blob = encode_rgb(arr, float(q))
+        out = W.decode(blob)
+        p = round(codec.psnr(arr, out), 2)
+        yield (r.image_id, int(r.w), int(r.h), q, len(blob), p, bool(p >= min_db))
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)
 
 
 # ---------------------------------------------------------------------------
@@ -401,27 +338,16 @@ def color_relief(images: DataFrame, ramp=DEFAULT_RAMP,
                  modes=("interpolate", "nearest", "exact")) -> DataFrame:
     """Per-image color-relief checksums for each selection mode
     (checksum of R band + sum of alpha as the exact-mode witness)."""
-    _ensure(images)
     cols = ", ".join(f"cs_{m} int, a_{m} long" for m in modes)
     schema = f"image_id string, {cols}"
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                b = arr[:, :, 0] if arr.ndim == 3 else arr
-                vals = [r.image_id]
-                for m in modes:
-                    rgba = color_relief_array(b, ramp, m)
-                    vals.append(checksum_band(rgba[:, :, 0]))
-                    vals.append(int(rgba[:, :, 3].astype(np.int64).sum()))
-                rows.append(tuple(vals))
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["image_id"]
-                    + [f"{p}_{m}" for m in modes for p in ("cs", "a")],
-                )
+    def fn(r, arr):
+        b = arr[:, :, 0] if arr.ndim == 3 else arr
+        vals = [r.image_id]
+        for m in modes:
+            rgba = color_relief_array(b, ramp, m)
+            vals.append(checksum_band(rgba[:, :, 0]))
+            vals.append(int(rgba[:, :, 3].astype(np.int64).sum()))
+        yield tuple(vals)
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)

@@ -21,11 +21,10 @@ emitting the interior only, matching checksum comparisons).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from gdal_spark.raster import codec
 from gdal_spark.raster.checksum import checksum_band
+from gdal_spark.raster.pipeline import map_images
 
 
 def _windows(z: np.ndarray):
@@ -102,32 +101,23 @@ def dem_metrics(images: DataFrame, ops: tuple = ("slope", "hillshade", "roughnes
     """Per-image DEM derivatives of band 0 (treated as elevation):
     returns checksum of each derivative raster (rounded to uint8 range
     for non-hillshade metrics the way gdaldem writes Byte output)."""
-    from gdal_spark.session import ensure_pixel_batch_size
-
-    ensure_pixel_batch_size(images.sparkSession)
     for op in ops:
         if op not in _DEM_FUNCS:
             raise ValueError(f"unknown DEM op {op!r}")
     cols = ", ".join(f"cs_{op} int" for op in ops)
     schema = f"image_id string, {cols}"
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                z = (arr[:, :, 0] if arr.ndim == 3 else arr).astype(np.float64)
-                vals = [r.image_id]
-                for op in ops:
-                    out = _DEM_FUNCS[op](z)
-                    if out.dtype != np.uint8:
-                        out = np.clip(np.floor(np.abs(out) + 0.5), 0, 255).astype(np.uint8)
-                    vals.append(checksum_band(out))
-                rows.append(tuple(vals))
-            if rows:
-                yield pd.DataFrame(rows, columns=["image_id"] + [f"cs_{op}" for op in ops])
+    def fn(r, arr):
+        z = (arr[:, :, 0] if arr.ndim == 3 else arr).astype(np.float64)
+        vals = [r.image_id]
+        for op in ops:
+            out = _DEM_FUNCS[op](z)
+            if out.dtype != np.uint8:
+                out = np.clip(np.floor(np.abs(out) + 0.5), 0, 255).astype(np.uint8)
+            vals.append(checksum_band(out))
+        yield tuple(vals)
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)
 
 
 # ---------------------------------------------------------------------------

@@ -28,11 +28,10 @@ cell.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from gdal_spark.raster import codec
 from gdal_spark.raster.checksum import checksum_band
+from gdal_spark.raster.pipeline import map_images
 
 # apps/gdalalg_raster_neighbors.cpp:48-77 (gaussian/unsharp named by
 # size there; "equal" is the all-ones box built from --size)
@@ -145,23 +144,12 @@ def neighbors(
     """One row per (image, kernel, method): checksum of the filtered
     band. Decodes each image once; the per-spec filters share the
     decode (same shape as ``resample_matrix``)."""
-    from gdal_spark.raster.pipeline import _ensure_batch
-
-    _ensure_batch(images)
     schema = "image_id string, kernel string, method string, checksum int"
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                b = arr[:, :, band] if arr.ndim == 3 else arr
-                for kname, method in specs:
-                    out = neighbors_array(b, KERNELS[kname], method)
-                    rows.append((r.image_id, kname, method, checksum_band(out)))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "kernel", "method", "checksum"]
-                )
+    def fn(r, arr):
+        b = arr[:, :, band] if arr.ndim == 3 else arr
+        for kname, method in specs:
+            out = neighbors_array(b, KERNELS[kname], method)
+            yield (r.image_id, kname, method, checksum_band(out))
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)

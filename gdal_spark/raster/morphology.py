@@ -26,11 +26,10 @@ golden-test currency (``alg/gdalchecksum.cpp:48``).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from gdal_spark.raster import codec
 from gdal_spark.raster.checksum import checksum_band
+from gdal_spark.raster.pipeline import map_images
 
 _INF = 1e20
 
@@ -209,58 +208,41 @@ def fill_nodata_array(band: np.ndarray, nodata: int) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-def _per_image(images: DataFrame, fn, extra_cols: str):
-    from gdal_spark.session import ensure_pixel_batch_size
-
-    ensure_pixel_batch_size(images.sparkSession)
-    schema = f"image_id string, {extra_cols}"
-
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                b = arr[:, :, 0] if arr.ndim == 3 else arr
-                rows.append((r.image_id, *fn(b)))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id"] + [c.split()[0] for c in extra_cols.split(", ")]
-                )
-
-    return images.mapInPandas(run, schema=schema)
-
-
 def proximity(images: DataFrame, target_min: int = 200, maxdist: float = 64.0) -> DataFrame:
     """Distance-to-target raster per image: target = band0 >= target_min
     (the VALUES option); distances capped at maxdist then scaled to
     byte range exactly like gdal_proximity -ot Byte -maxdist."""
 
-    def fn(b):
+    def fn(r, arr):
+        b = arr[:, :, 0] if arr.ndim == 3 else arr
         d = np.minimum(edt(b >= target_min), maxdist)
         out = np.floor(d / maxdist * 255.0 + 0.5).astype(np.uint8)
-        return (checksum_band(out), int((d == 0).sum()))
+        yield (r.image_id, checksum_band(out), int((d == 0).sum()))
 
-    return _per_image(images, fn, "checksum int, n_target long")
+    return map_images(images, "image_id string, checksum int, n_target long", fn)
 
 
 def sieve(images: DataFrame, threshold: int = 32, quant: int = 64) -> DataFrame:
     """Sieve small components of the quantized band (quantization makes
     components non-trivial on continuous synthetic gradients)."""
 
-    def fn(b):
+    def fn(r, arr):
+        b = arr[:, :, 0] if arr.ndim == 3 else arr
         q = (b // quant).astype(np.uint8)
         out = sieve_array(q, threshold)
-        return (checksum_band(q), checksum_band(out), int((out != q).sum()))
+        yield (r.image_id, checksum_band(q), checksum_band(out), int((out != q).sum()))
 
-    return _per_image(images, fn, "checksum_before int, checksum_after int, n_changed long")
+    schema = "image_id string, checksum_before int, checksum_after int, n_changed long"
+    return map_images(images, schema, fn)
 
 
 def fill_nodata(images: DataFrame, nodata_below: int = 16) -> DataFrame:
     """Mark band0 < nodata_below as nodata(0) then fill."""
 
-    def fn(b):
+    def fn(r, arr):
+        b = arr[:, :, 0] if arr.ndim == 3 else arr
         masked = np.where(b < nodata_below, 0, b).astype(np.uint8)
         out = fill_nodata_array(masked, 0)
-        return (checksum_band(out), int((masked == 0).sum()))
+        yield (r.image_id, checksum_band(out), int((masked == 0).sum()))
 
-    return _per_image(images, fn, "checksum int, n_filled long")
+    return map_images(images, "image_id string, checksum int, n_filled long", fn)

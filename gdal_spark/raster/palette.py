@@ -18,11 +18,10 @@ kernels:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from gdal_spark.raster import codec
 from gdal_spark.raster.checksum import checksum_band
+from gdal_spark.raster.pipeline import map_images
 
 
 def median_cut(arr: np.ndarray, n_colors: int = 16) -> np.ndarray:
@@ -88,31 +87,16 @@ def rgb_to_palette(images: DataFrame, n_colors: int = 16) -> DataFrame:
     """Per-image median-cut quantization: returns (image_id, n_colors,
     checksum_idx — checksum of the index raster, palette_hash —
     checksum of the flattened palette bytes)."""
-    from gdal_spark.session import ensure_pixel_batch_size
-
-    ensure_pixel_batch_size(images.sparkSession)
     schema = "image_id string, n_colors int, checksum_idx int, palette_hash int"
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                if arr.ndim == 2:
-                    arr = np.repeat(arr[:, :, None], 3, axis=2)
-                pal = median_cut(arr, n_colors)
-                idx = map_nearest(arr, pal)
-                rows.append(
-                    (r.image_id, len(pal), checksum_band(idx),
-                     checksum_band(pal.reshape(1, -1)))
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["image_id", "n_colors", "checksum_idx", "palette_hash"],
-                )
+    def fn(r, arr):
+        if arr.ndim == 2:
+            arr = np.repeat(arr[:, :, None], 3, axis=2)
+        pal = median_cut(arr, n_colors)
+        idx = map_nearest(arr, pal)
+        yield (r.image_id, len(pal), checksum_band(idx), checksum_band(pal.reshape(1, -1)))
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)
 
 
 def palette_expand(idx: np.ndarray, pal: np.ndarray) -> np.ndarray:
@@ -127,38 +111,20 @@ def pct_roundtrip(images: DataFrame, n_colors: int = 16) -> DataFrame:
     nearest map), expand back through the palette LUT, and report the
     expanded raster's band-0 checksum plus the quantization error
     stats vs the original (max |err| and rounded MSE). Map-only."""
-    from gdal_spark.session import ensure_pixel_batch_size
-
-    ensure_pixel_batch_size(images.sparkSession)
     schema = (
         "image_id string, n_colors int, checksum_r int,"
         " max_err int, mse double"
     )
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                if arr.ndim == 2:
-                    arr = np.repeat(arr[:, :, None], 3, axis=2)
-                pal = median_cut(arr, n_colors)
-                idx = map_nearest(arr, pal)
-                rgb = palette_expand(idx, pal)
-                err = rgb.astype(np.int32) - arr.astype(np.int32)
-                rows.append(
-                    (
-                        r.image_id,
-                        len(pal),
-                        checksum_band(rgb[:, :, 0]),
-                        int(np.abs(err).max()),
-                        round(float((err.astype(np.float64) ** 2).mean()), 6),
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["image_id", "n_colors", "checksum_r", "max_err", "mse"],
-                )
+    def fn(r, arr):
+        if arr.ndim == 2:
+            arr = np.repeat(arr[:, :, None], 3, axis=2)
+        pal = median_cut(arr, n_colors)
+        idx = map_nearest(arr, pal)
+        rgb = palette_expand(idx, pal)
+        err = rgb.astype(np.int32) - arr.astype(np.int32)
+        yield (r.image_id, len(pal), checksum_band(rgb[:, :, 0]),
+               int(np.abs(err).max()),
+               round(float((err.astype(np.float64) ** 2).mean()), 6))
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)

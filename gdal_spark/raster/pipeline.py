@@ -2,6 +2,24 @@
 as-features — all ``mapInPandas`` (Arrow-batched, no per-row Python
 beyond the numpy kernels).
 
+``map_images(images, schema, fn)`` is the one per-image stage the
+image-table operators here and in the sibling raster modules share:
+
+- it clamps the Arrow batch size once, when the plan is built
+  (``session.ensure_pixel_batch_size``);
+- it decodes each row's ``bytes`` once with ``codec.decode_image``;
+- ``fn(r, arr)`` is a generator that yields output rows as tuples in
+  the column order of the DDL ``schema``, so 1→1 and 1→N operators
+  share one contract;
+- the column names come from ``schema``, and each non-empty Arrow
+  batch yields one frame.
+
+A decode error fails the task. Stages of another shape keep their own
+``mapInPandas`` body: the tiler render, ``as_features`` (columnar
+1→h·w output), ``interpolate_at_points`` (group-by image inside each
+batch), the grouped ``blend_pair``/``stack_bands``, and
+``compare.compare_images`` (two blobs per row).
+
 Reference surfaces re-expressed:
 - ``gdal_translate`` window/band/scale/resize/cast
   (``apps/gdal_translate_lib.cpp:90-275``)
@@ -20,43 +38,49 @@ from pyspark.sql import functions as F
 from gdal_spark.raster import codec
 from gdal_spark.raster.checksum import checksum_band, checksum_bands
 from gdal_spark.raster.resample import resample
+from gdal_spark.session import ensure_pixel_batch_size
 
 
-def _ensure_batch(df: DataFrame) -> None:
-    from gdal_spark.session import ensure_pixel_batch_size
+def ddl_columns(schema: str) -> list[str]:
+    """Column names of a DDL schema string such as ``"a int, b string"``
+    (field types must not contain commas)."""
+    return [field.split()[0] for field in schema.split(",")]
 
-    ensure_pixel_batch_size(df.sparkSession)
+
+def map_images(images: DataFrame, schema: str, fn) -> DataFrame:
+    """The per-image ``mapInPandas`` stage: decode each row of
+    ``images`` once and emit the tuples ``fn(r, arr)`` yields, in the
+    column order of the DDL ``schema`` (see the module docstring)."""
+    ensure_pixel_batch_size(images.sparkSession)
+    columns = ddl_columns(schema)
+
+    def run(batches):
+        for pdf in batches:
+            rows = [
+                out
+                for r in pdf.itertuples()
+                for out in fn(r, codec.decode_image(r.bytes, r.fmt))
+            ]
+            if rows:
+                yield pd.DataFrame(rows, columns=columns)
+
+    return images.mapInPandas(run, schema=schema)
 
 
 def with_checksums(images: DataFrame) -> DataFrame:
     """(image_id, fmt, w, h, caption, phash, checksum_b0/b1/b2)."""
-    _ensure_batch(images)
     schema = (
         "image_id string, fmt string, w int, h int, caption string, phash long, "
         "checksum_b0 int, checksum_b1 int, checksum_b2 int"
     )
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                cs = checksum_bands(arr)
-                rows.append(
-                    (r.image_id, r.fmt, r.w, r.h,
-                     getattr(r, "caption", None), getattr(r, "phash", None), cs[0],
-                     cs[1] if len(cs) > 1 else cs[0], cs[2] if len(cs) > 2 else cs[0])
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "image_id", "fmt", "w", "h", "caption", "phash",
-                        "checksum_b0", "checksum_b1", "checksum_b2",
-                    ],
-                )
+    def fn(r, arr):
+        cs = checksum_bands(arr)
+        yield (r.image_id, r.fmt, r.w, r.h,
+               getattr(r, "caption", None), getattr(r, "phash", None), cs[0],
+               cs[1] if len(cs) > 1 else cs[0], cs[2] if len(cs) > 2 else cs[0])
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)
 
 
 def translate(
@@ -75,50 +99,33 @@ def translate(
     open option (frmts/jpeg/jpgdataset.cpp:3190): EXIF-rotated inputs
     are normalized to orientation 1 before any windowing.
     Returns image_id, bytes, w, h, fmt (+ passthrough caption)."""
-    _ensure_batch(images)
     schema = "image_id string, bytes binary, w int, h int, fmt string, caption string"
 
-    def run(it):
+    def fn(r, arr):
         from gdal_spark.raster import exif as _exif
 
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                if apply_orientation and r.fmt in ("jpeg", "jpg"):
-                    md = _exif.parse_exif(bytes(r.bytes))
-                    o = int(md.get("EXIF_Orientation", "1"))
-                    arr = _exif.apply_exif_orientation(arr, o)
-                if srcwin:
-                    x, y, ww, hh = srcwin
-                    arr = arr[y : y + hh, x : x + ww]
-                if bands is not None and arr.ndim == 3:
-                    arr = arr[:, :, bands]
-                    if arr.shape[2] == 1:
-                        arr = arr[:, :, 0]
-                if out_size:
-                    ow, oh = out_size
-                    arr = resample(arr, oh, ow, resampling)
-                if scale:
-                    mul, off = scale
-                    arr = np.clip(arr.astype(np.float64) * mul + off, 0, 255)
-                    arr = np.floor(arr + 0.5).astype(np.uint8)
-                rows.append(
-                    (
-                        r.image_id,
-                        codec.encode_image(arr, out_fmt),
-                        arr.shape[1],
-                        arr.shape[0],
-                        out_fmt,
-                        getattr(r, "caption", None),
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "bytes", "w", "h", "fmt", "caption"]
-                )
+        if apply_orientation and r.fmt in ("jpeg", "jpg"):
+            md = _exif.parse_exif(bytes(r.bytes))
+            o = int(md.get("EXIF_Orientation", "1"))
+            arr = _exif.apply_exif_orientation(arr, o)
+        if srcwin:
+            x, y, ww, hh = srcwin
+            arr = arr[y : y + hh, x : x + ww]
+        if bands is not None and arr.ndim == 3:
+            arr = arr[:, :, bands]
+            if arr.shape[2] == 1:
+                arr = arr[:, :, 0]
+        if out_size:
+            ow, oh = out_size
+            arr = resample(arr, oh, ow, resampling)
+        if scale:
+            mul, off = scale
+            arr = np.clip(arr.astype(np.float64) * mul + off, 0, 255)
+            arr = np.floor(arr + 0.5).astype(np.uint8)
+        yield (r.image_id, codec.encode_image(arr, out_fmt), arr.shape[1],
+               arr.shape[0], out_fmt, getattr(r, "caption", None))
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)
 
 
 RESAMPLE_ALGS = (
@@ -136,30 +143,21 @@ def resample_matrix(
     (``gcore/overview.cpp:81,:1199,:1993``; ``alg/gdalwarper.h:34-68``)
     as one row per (image, alg). Decodes each image once, resamples
     len(algs) ways — the per-alg work shares the decode."""
-    _ensure_batch(images)
     ow, oh = out_size
     schema = "image_id string, alg string, w int, h int, checksum_b0 int"
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                for alg in algs:
-                    out = resample(arr, oh, ow, alg)
-                    rows.append((r.image_id, alg, ow, oh, checksum_bands(out)[0]))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "alg", "w", "h", "checksum_b0"]
-                )
+    def fn(r, arr):
+        for alg in algs:
+            out = resample(arr, oh, ow, alg)
+            yield (r.image_id, alg, ow, oh, checksum_bands(out)[0])
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)
 
 
 def as_features(images: DataFrame, band: int = 0, sample_stride: int = 1) -> DataFrame:
     """raster → long-form rows (image_id, row, col, value) — the
     ``gdal raster as-features`` explode, 1→N ``mapInPandas`` UDTF."""
-    _ensure_batch(images)
+    ensure_pixel_batch_size(images.sparkSession)
     schema = "image_id string, row int, col int, value int"
 
     def run(it):
@@ -199,7 +197,7 @@ def interpolate_at_points(images: DataFrame, points: DataFrame, method: str = "b
     join — with the slim point side broadcast, then an exact range
     refine. The image side (with its pixel ``bytes`` payloads) is
     never shuffled and never enters a BroadcastNestedLoopJoin."""
-    _ensure_batch(images)
+    ensure_pixel_batch_size(images.sparkSession)
     from gdal_spark.operators.spatial_join import (
         DEFAULT_ZOOM,
         explode_bbox_cells,
@@ -275,34 +273,23 @@ def band_histogram(images: DataFrame, band: int = 0, n_bins: int = 32) -> DataFr
     byte range split into ``n_bins`` equal buckets (GDAL's default
     histogram is min=-0.5..max=255.5). 1→N rows: (image_id, bin,
     bin_min, bin_max, n)."""
-    _ensure_batch(images)
     schema = "image_id string, bin int, bin_min double, bin_max double, n long"
     width = 256.0 / n_bins
+    bins = np.arange(n_bins)
+    labels = list(zip(bins.tolist(), bins * width - 0.5, (bins + 1) * width - 0.5))
 
-    def run(it):
-        for pdf in it:
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                b = arr[:, :, band] if arr.ndim == 3 else arr
-                # float-divide bucketing clipped to [0, n_bins-1]: integer
-                # `// int(width)` truncates the width for n_bins∤256 (e.g.
-                # 48) and overflows the bin range / desyncs from the float
-                # bin_min/bin_max labels below
-                idx = np.clip(
-                    np.floor(b.ravel() / width), 0, n_bins - 1
-                ).astype(np.int64)
-                counts = np.bincount(idx, minlength=n_bins)[:n_bins]
-                yield pd.DataFrame(
-                    {
-                        "image_id": r.image_id,
-                        "bin": np.arange(n_bins, dtype=np.int32),
-                        "bin_min": np.arange(n_bins) * width - 0.5,
-                        "bin_max": (np.arange(n_bins) + 1) * width - 0.5,
-                        "n": counts.astype(np.int64),
-                    }
-                )
+    def fn(r, arr):
+        b = arr[:, :, band] if arr.ndim == 3 else arr
+        # float-divide bucketing clipped to [0, n_bins-1]: integer
+        # `// int(width)` truncates the width for n_bins∤256 (e.g.
+        # 48) and overflows the bin range / desyncs from the float
+        # bin_min/bin_max labels above
+        idx = np.clip(np.floor(b.ravel() / width), 0, n_bins - 1).astype(np.int64)
+        counts = np.bincount(idx, minlength=n_bins)[:n_bins]
+        for (i, lo, hi), n in zip(labels, counts.tolist()):
+            yield (r.image_id, i, lo, hi, n)
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)
 
 
 def pansharpen_array(arr: np.ndarray, factor: int = 2) -> np.ndarray:
@@ -337,27 +324,15 @@ def pansharpen(images: DataFrame, factor: int = 2) -> DataFrame:
     from the ``factor``× block-averaged RGB — the classic
     pan-sharpening geometry — then sharpens back to full resolution.
     Returns (image_id, w, h, cs_r, cs_g, cs_b)."""
-    _ensure_batch(images)
-
     schema = "image_id string, w int, h int, cs_r int, cs_g int, cs_b int"
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                outp = pansharpen_array(arr, factor)
-                rows.append(
-                    (r.image_id, outp.shape[1], outp.shape[0],
-                     checksum_band(outp[:, :, 0]), checksum_band(outp[:, :, 1]),
-                     checksum_band(outp[:, :, 2]))
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "w", "h", "cs_r", "cs_g", "cs_b"]
-                )
+    def fn(r, arr):
+        outp = pansharpen_array(arr, factor)
+        yield (r.image_id, outp.shape[1], outp.shape[0],
+               checksum_band(outp[:, :, 0]), checksum_band(outp[:, :, 1]),
+               checksum_band(outp[:, :, 2]))
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)
 
 
 def warp_to_utm(images: DataFrame, out_size: tuple[int, int] = (64, 64), resampling: str = "near") -> DataFrame:
@@ -369,38 +344,31 @@ def warp_to_utm(images: DataFrame, out_size: tuple[int, int] = (64, 64), resampl
     the target grid is the forward-projected footprint envelope at
     ``out_size``. Returns (image_id, epsg, w, h, checksum) — checksum
     of band 0 of the warped raster, the golden-test currency."""
-    _ensure_batch(images)
     from gdal_spark.functions import srs as S
     from gdal_spark.raster.warp import warp_lonlat_to_grid
 
     ow, oh = out_size
     schema = "image_id string, epsg int, w int, h int, checksum int"
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                zone = int((r.lon + 180.0) // 6) + 1
-                south = r.lat < 0
-                epsg = (32700 if south else 32600) + zone
-                ce, cn = S.utm_forward_np(
-                    [r.lon_min, r.lon_max, r.lon_min, r.lon_max],
-                    [r.lat_min, r.lat_min, r.lat_max, r.lat_max],
-                    zone,
-                    south,
-                )
-                bounds = (float(ce.min()), float(cn.min()), float(ce.max()), float(cn.max()))
-                out, valid = warp_lonlat_to_grid(
-                    arr, r.lon_min, r.lat_min, r.lon_max, r.lat_max,
-                    bounds, epsg, ow, oh, resampling,
-                )
-                b = out[:, :, 0] if out.ndim == 3 else out
-                rows.append((r.image_id, epsg, ow, oh, checksum_band(b)))
-            if rows:
-                yield pd.DataFrame(rows, columns=["image_id", "epsg", "w", "h", "checksum"])
+    def fn(r, arr):
+        zone = int((r.lon + 180.0) // 6) + 1
+        south = r.lat < 0
+        epsg = (32700 if south else 32600) + zone
+        ce, cn = S.utm_forward_np(
+            [r.lon_min, r.lon_max, r.lon_min, r.lon_max],
+            [r.lat_min, r.lat_min, r.lat_max, r.lat_max],
+            zone,
+            south,
+        )
+        bounds = (float(ce.min()), float(cn.min()), float(ce.max()), float(cn.max()))
+        out, valid = warp_lonlat_to_grid(
+            arr, r.lon_min, r.lat_min, r.lon_max, r.lat_max,
+            bounds, epsg, ow, oh, resampling,
+        )
+        b = out[:, :, 0] if out.ndim == 3 else out
+        yield (r.image_id, epsg, ow, oh, checksum_band(b))
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)
 
 
 def warp_to_crs(
@@ -420,7 +388,6 @@ def warp_to_crs(
     The target grid is the forward-projected footprint-envelope
     bounding box at ``out_size``. Returns
     (image_id, epsg, w, h, checksum)."""
-    _ensure_batch(images)
     from gdal_spark.functions import srs as S
     from gdal_spark.raster.warp import warp_lonlat_to_grid
 
@@ -428,35 +395,22 @@ def warp_to_crs(
     epsg = int(dst_epsg)
     schema = "image_id string, epsg int, w int, h int, checksum int"
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                ce, cn = S.transform_np(
-                    [r.lon_min, r.lon_max, r.lon_min, r.lon_max],
-                    [r.lat_min, r.lat_min, r.lat_max, r.lat_max],
-                    4326,
-                    epsg,
-                )
-                bounds = (
-                    float(ce.min()),
-                    float(cn.min()),
-                    float(ce.max()),
-                    float(cn.max()),
-                )
-                out, _valid = warp_lonlat_to_grid(
-                    arr, r.lon_min, r.lat_min, r.lon_max, r.lat_max,
-                    bounds, epsg, ow, oh, resampling,
-                )
-                b = out[:, :, 0] if out.ndim == 3 else out
-                rows.append((r.image_id, epsg, ow, oh, checksum_band(b)))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "epsg", "w", "h", "checksum"]
-                )
+    def fn(r, arr):
+        ce, cn = S.transform_np(
+            [r.lon_min, r.lon_max, r.lon_min, r.lon_max],
+            [r.lat_min, r.lat_min, r.lat_max, r.lat_max],
+            4326,
+            epsg,
+        )
+        bounds = (float(ce.min()), float(cn.min()), float(ce.max()), float(cn.max()))
+        out, _valid = warp_lonlat_to_grid(
+            arr, r.lon_min, r.lat_min, r.lon_max, r.lat_max,
+            bounds, epsg, ow, oh, resampling,
+        )
+        b = out[:, :, 0] if out.ndim == 3 else out
+        yield (r.image_id, epsg, ow, oh, checksum_band(b))
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)
 
 
 _CALC_FUNCS = {
@@ -476,7 +430,6 @@ def band_calc(images: DataFrame, expr: str, out_fmt: str = "png") -> DataFrame:
     ``expr`` example: ``"(X1 + X2) / 2"`` or ``"clip(X1 * 1.5, 0, 255)"``.
     Returns (image_id, bytes, w, h, fmt, checksum) with the result as a
     single re-encoded gray band."""
-    _ensure_batch(images)
     code = compile(expr, "<band_calc>", "eval")
     for name in code.co_names:
         if name not in _CALC_FUNCS and not (name[0] == "X" and name[1:].isdigit()):
@@ -484,56 +437,29 @@ def band_calc(images: DataFrame, expr: str, out_fmt: str = "png") -> DataFrame:
 
     schema = "image_id string, bytes binary, w int, h int, fmt string, checksum int"
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                if arr.ndim == 2:
-                    arr = arr[:, :, None]
-                env = {f"X{i + 1}": arr[:, :, i].astype(np.float64) for i in range(arr.shape[2])}
-                env.update(_CALC_FUNCS)
-                out = eval(code, {"__builtins__": {}}, env)  # noqa: S307 — names whitelisted above
-                out = np.clip(np.floor(np.asarray(out, dtype=np.float64) + 0.5), 0, 255).astype(np.uint8)
-                rows.append(
-                    (r.image_id, codec.encode_image(out, "png"), out.shape[1],
-                     out.shape[0], "png", checksum_bands(out)[0])
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "bytes", "w", "h", "fmt", "checksum"]
-                )
+    def fn(r, arr):
+        if arr.ndim == 2:
+            arr = arr[:, :, None]
+        env = {f"X{i + 1}": arr[:, :, i].astype(np.float64) for i in range(arr.shape[2])}
+        env.update(_CALC_FUNCS)
+        out = eval(code, {"__builtins__": {}}, env)  # noqa: S307 — names whitelisted above
+        out = np.clip(np.floor(np.asarray(out, dtype=np.float64) + 0.5), 0, 255).astype(np.uint8)
+        yield (r.image_id, codec.encode_image(out, "png"), out.shape[1],
+               out.shape[0], "png", checksum_bands(out)[0])
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)
 
 
 def band_stats(images: DataFrame) -> DataFrame:
     """Per-image band-0 statistics (ComputeStatistics semantics:
     min/max/mean/std over all pixels, ``gcore/raster_stats.h``)."""
-    _ensure_batch(images)
     schema = "image_id string, min_v int, max_v int, mean_v double, std_v double"
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                b = arr[:, :, 0] if arr.ndim == 3 else arr
-                rows.append(
-                    (
-                        r.image_id,
-                        int(b.min()),
-                        int(b.max()),
-                        float(b.mean()),
-                        float(b.std()),
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "min_v", "max_v", "mean_v", "std_v"]
-                )
+    def fn(r, arr):
+        b = arr[:, :, 0] if arr.ndim == 3 else arr
+        yield (r.image_id, int(b.min()), int(b.max()), float(b.mean()), float(b.std()))
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)
 
 
 # ---------------------------------------------------------------------------
@@ -602,7 +528,6 @@ def warp_with_gcps(images: DataFrame, methods=("poly1", "poly2", "tps"),
     Spark shape: the GCP fit is tiny (16 points) and rides inside the
     same Arrow batch as the pixel work — no driver-side fitting, no
     shuffle; one mapInPandas pass, ``bytes`` consumed exactly once."""
-    _ensure_batch(images)
     # rms is reported as integer nano-degrees: the raw double's last
     # bits depend on the BLAS context (worker thread pool vs the
     # single-process golden build solved the same tiny system with
@@ -612,26 +537,15 @@ def warp_with_gcps(images: DataFrame, methods=("poly1", "poly2", "tps"),
     ow, oh = out_size
     methods = tuple(methods)
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                okey = int(r.image_id[3:])
-                gcps = synth_gcps(okey, r.w, r.h, r.lon_min, r.lat_min,
-                                  r.lon_max, r.lat_max)
-                for m in methods:
-                    out, valid, rms = warp_gcp_array(arr, gcps, m, ow, oh, resampling)
-                    b = out[:, :, 0] if out.ndim == 3 else out
-                    rows.append(
-                        (r.image_id, m, ow, oh, checksum_band(b), round(rms * 1e9))
-                    )
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "method", "w", "h", "checksum", "rms_ndeg"]
-                )
+    def fn(r, arr):
+        okey = int(r.image_id[3:])
+        gcps = synth_gcps(okey, r.w, r.h, r.lon_min, r.lat_min, r.lon_max, r.lat_max)
+        for m in methods:
+            out, valid, rms = warp_gcp_array(arr, gcps, m, ow, oh, resampling)
+            b = out[:, :, 0] if out.ndim == 3 else out
+            yield (r.image_id, m, ow, oh, checksum_band(b), round(rms * 1e9))
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)
 
 
 def rpc_orthorectify(images: DataFrame, out_size: tuple[int, int] = (64, 64),
@@ -647,42 +561,29 @@ def rpc_orthorectify(images: DataFrame, out_size: tuple[int, int] = (64, 64),
     Emits band-0 checksum + the mean absolute displacement (in px) the
     rational terms add over the projective core — pinning that the
     ripple actually exercised the model."""
-    _ensure_batch(images)
     from gdal_spark.functions.rpc import RPCTransform, synth_rpc
     from gdal_spark.raster.warp import sample_at
 
     ow, oh = out_size
     schema = "image_id string, w int, h int, checksum int, mean_disp_mpx long"
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                okey = int(r.image_id[3:])
-                m = synth_rpc(okey, r.w, r.h, r.lon_min, r.lat_min,
-                              r.lon_max, r.lat_max)
-                t = RPCTransform(m)
-                lon = r.lon_min + (np.arange(ow) + 0.5) * (r.lon_max - r.lon_min) / ow
-                lat = r.lat_max - (np.arange(oh) + 0.5) * (r.lat_max - r.lat_min) / oh
-                glon, glat = np.meshgrid(lon, lat)
-                sx, sy = t.forward(glon, glat, np.full_like(glon, height))
-                out, valid = sample_at(arr, sx, sy, resampling)
-                # projective-core-only displacement: normalized linear map
-                px0 = (glon - m.long_off) / m.long_scale * m.samp_scale + m.samp_off
-                py0 = (m.lat_off - glat) / m.lat_scale * m.line_scale + m.line_off
-                disp = float(np.hypot(sx - px0, sy - py0).mean())
-                b = out[:, :, 0] if out.ndim == 3 else out
-                rows.append(
-                    (r.image_id, ow, oh, checksum_band(b), round(disp * 1e6))
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["image_id", "w", "h", "checksum", "mean_disp_mpx"],
-                )
+    def fn(r, arr):
+        okey = int(r.image_id[3:])
+        m = synth_rpc(okey, r.w, r.h, r.lon_min, r.lat_min, r.lon_max, r.lat_max)
+        t = RPCTransform(m)
+        lon = r.lon_min + (np.arange(ow) + 0.5) * (r.lon_max - r.lon_min) / ow
+        lat = r.lat_max - (np.arange(oh) + 0.5) * (r.lat_max - r.lat_min) / oh
+        glon, glat = np.meshgrid(lon, lat)
+        sx, sy = t.forward(glon, glat, np.full_like(glon, height))
+        out, valid = sample_at(arr, sx, sy, resampling)
+        # projective-core-only displacement: normalized linear map
+        px0 = (glon - m.long_off) / m.long_scale * m.samp_scale + m.samp_off
+        py0 = (m.lat_off - glat) / m.lat_scale * m.line_scale + m.line_off
+        disp = float(np.hypot(sx - px0, sy - py0).mean())
+        b = out[:, :, 0] if out.ndim == 3 else out
+        yield (r.image_id, ow, oh, checksum_band(b), round(disp * 1e6))
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)
 
 
 def warp_geoloc_array(arr: np.ndarray, geoloc, out_w: int, out_h: int,
@@ -728,30 +629,17 @@ def warp_with_geoloc(images: DataFrame, out_size: tuple[int, int] = (64, 64),
     consumed exactly once (the same shape as the GCP/RPC warps)."""
     from gdal_spark.functions.geoloc import synth_geoloc
 
-    _ensure_batch(images)
     ow, oh = out_size
     schema = "image_id string, w int, h int, checksum int, rt_err_ndeg long"
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                okey = int(r.image_id[3:])
-                g = synth_geoloc(okey, r.w, r.h, r.lon_min, r.lat_min,
-                                 r.lon_max, r.lat_max)
-                out, valid, rt = warp_geoloc_array(arr, g, ow, oh, resampling)
-                b = out[:, :, 0] if out.ndim == 3 else out
-                rows.append(
-                    (r.image_id, ow, oh, checksum_band(b), round(rt * 1e9))
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["image_id", "w", "h", "checksum", "rt_err_ndeg"],
-                )
+    def fn(r, arr):
+        okey = int(r.image_id[3:])
+        g = synth_geoloc(okey, r.w, r.h, r.lon_min, r.lat_min, r.lon_max, r.lat_max)
+        out, valid, rt = warp_geoloc_array(arr, g, ow, oh, resampling)
+        b = out[:, :, 0] if out.ndim == 3 else out
+        yield (r.image_id, ow, oh, checksum_band(b), round(rt * 1e9))
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)
 
 
 def cog_roundtrip(images: DataFrame, block: int = 64, overviews: int = 2) -> DataFrame:
@@ -776,55 +664,37 @@ def cog_roundtrip(images: DataFrame, block: int = 64, overviews: int = 2) -> Dat
     """
     from gdal_spark.raster import tiff
 
-    _ensure_batch(images)
     schema = (
         "image_id string, fmt string, w int, h int, n_ifds int, cog_size long, "
         "cs_full int, cs_ov1 int, lossless boolean, headers_first boolean, "
         "ov_before_full boolean, gt_x0 double, epsg int"
     )
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                gt = (float(r.w) * 10.0, 0.5, 0.0, float(r.h) * 10.0, 0.0, -0.5)
-                cog = tiff.encode_geotiff(
-                    arr, gt, 3857, block=(block, block),
-                    compression="deflate", overviews=overviews,
-                )
-                offs = tiff.ifd_offsets(cog)
-                full, info = tiff.decode_full(cog, 0)
-                ov1 = tiff.decode_full(cog, 1)[0] if len(offs) > 1 else full
-                bo, big, _ = tiff._read_header(cog)
+    def fn(r, arr):
+        gt = (float(r.w) * 10.0, 0.5, 0.0, float(r.h) * 10.0, 0.0, -0.5)
+        cog = tiff.encode_geotiff(
+            arr, gt, 3857, block=(block, block),
+            compression="deflate", overviews=overviews,
+        )
+        offs = tiff.ifd_offsets(cog)
+        full, info = tiff.decode_full(cog, 0)
+        ov1 = tiff.decode_full(cog, 1)[0] if len(offs) > 1 else full
+        bo, big, _ = tiff._read_header(cog)
 
-                def _tiles(o):
-                    t = tiff._read_ifd(cog, bo, big, o)[0][324]
-                    return t if isinstance(t, list) else [t]
+        def _tiles(o):
+            t = tiff._read_ifd(cog, bo, big, o)[0][324]
+            return t if isinstance(t, list) else [t]
 
-                min_payload = min(min(_tiles(o)) for o in offs)
-                rows.append(
-                    (
-                        r.image_id, r.fmt, r.w, r.h, len(offs), len(cog),
-                        checksum_bands(np.atleast_3d(full))[0],
-                        checksum_bands(np.atleast_3d(ov1))[0],
-                        bool(np.array_equal(full, arr)),
-                        max(offs) < min_payload,
-                        min(_tiles(offs[0])) > max(_tiles(offs[-1]))
-                        if len(offs) > 1
-                        else True,
-                        info["geotransform"][0],
-                        info["epsg"],
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "image_id", "fmt", "w", "h", "n_ifds", "cog_size",
-                        "cs_full", "cs_ov1", "lossless", "headers_first",
-                        "ov_before_full", "gt_x0", "epsg",
-                    ],
-                )
+        min_payload = min(min(_tiles(o)) for o in offs)
+        yield (
+            r.image_id, r.fmt, r.w, r.h, len(offs), len(cog),
+            checksum_bands(np.atleast_3d(full))[0],
+            checksum_bands(np.atleast_3d(ov1))[0],
+            bool(np.array_equal(full, arr)),
+            max(offs) < min_payload,
+            min(_tiles(offs[0])) > max(_tiles(offs[-1])) if len(offs) > 1 else True,
+            info["geotransform"][0],
+            info["epsg"],
+        )
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)

@@ -28,6 +28,7 @@ from gdal_spark.functions import geometry as G
 from gdal_spark.functions import tile_math as tm
 from gdal_spark.operators.spatial_join import explode_bbox_cells
 from gdal_spark.raster.checksum import checksum_band
+from gdal_spark.raster.pipeline import map_images
 
 TILE_SIZE = 256
 
@@ -103,41 +104,15 @@ def reclassify_expr(mapping: list[tuple[int, int, int]]):
 def reclassify(images: DataFrame, mapping: list[tuple[int, int, int]]) -> DataFrame:
     """Apply a value-range reclassification to band 0 of each image;
     returns (image_id, checksum_before, checksum_after, n_changed)."""
-    from gdal_spark.session import ensure_pixel_batch_size
-
-    ensure_pixel_batch_size(images.sparkSession)
-    from gdal_spark.raster import codec
-
     lut = reclassify_expr(mapping)
     schema = "image_id string, checksum_before int, checksum_after int, n_changed long"
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                b = arr[:, :, 0] if arr.ndim == 3 else arr
-                out = lut[b]  # np.take LUT — the vectorized reclass
-                rows.append(
-                    (
-                        r.image_id,
-                        checksum_band(b),
-                        checksum_band(out),
-                        int((out != b).sum()),
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "image_id",
-                        "checksum_before",
-                        "checksum_after",
-                        "n_changed",
-                    ],
-                )
+    def fn(r, arr):
+        b = arr[:, :, 0] if arr.ndim == 3 else arr
+        out = lut[b]  # np.take LUT — the vectorized reclass
+        yield (r.image_id, checksum_band(b), checksum_band(out), int((out != b).sum()))
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)
 
 
 # ---------------------------------------------------------------------------
@@ -186,8 +161,6 @@ def warp_cutline(images: DataFrame, aoi: DataFrame) -> DataFrame:
     Emits checksums of the masked and cropped rasters plus valid-pixel
     counts — the gdalwarp golden currency.
     """
-    from gdal_spark.raster import codec
-
     pairs = images.join(
         F.broadcast(
             aoi.select(
@@ -212,31 +185,17 @@ def warp_cutline(images: DataFrame, aoi: DataFrame) -> DataFrame:
         "crop_w int, crop_h int, n_valid long, valid_frac double"
     )
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                band = arr if arr.ndim == 2 else arr[:, :, 0]
-                g = G.parse_wkb(bytes(r.aoi_wkb))
-                masked, cropped, n_valid = cutline_array(
-                    band, (r.lon_min, r.lat_min, r.lon_max, r.lat_max), g
-                )
-                rows.append(
-                    (
-                        r.image_id, int(r.poly_id), checksum_band(masked),
-                        checksum_band(cropped) if cropped.size else 0,
-                        cropped.shape[1], cropped.shape[0], n_valid,
-                        round(n_valid / band.size, 9),
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "image_id", "poly_id", "cs_masked", "cs_cropped",
-                        "crop_w", "crop_h", "n_valid", "valid_frac",
-                    ],
-                )
+    def fn(r, arr):
+        band = arr if arr.ndim == 2 else arr[:, :, 0]
+        g = G.parse_wkb(bytes(r.aoi_wkb))
+        masked, cropped, n_valid = cutline_array(
+            band, (r.lon_min, r.lat_min, r.lon_max, r.lat_max), g
+        )
+        yield (
+            r.image_id, int(r.poly_id), checksum_band(masked),
+            checksum_band(cropped) if cropped.size else 0,
+            cropped.shape[1], cropped.shape[0], n_valid,
+            round(n_valid / band.size, 9),
+        )
 
-    return pairs.mapInPandas(run, schema=schema)
+    return map_images(pairs, schema, fn)

@@ -19,11 +19,10 @@
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from gdal_spark.raster import codec
 from gdal_spark.raster.morphology import label4
+from gdal_spark.raster.pipeline import map_images
 
 
 def polygonize_array(values: np.ndarray, min_px: int = 1):
@@ -132,56 +131,31 @@ def contour_stats(band: np.ndarray, levels) -> list[tuple[float, int, float]]:
 # ---------------------------------------------------------------------------
 
 
-def _ensure(images: DataFrame) -> None:
-    from gdal_spark.session import ensure_pixel_batch_size
-
-    ensure_pixel_batch_size(images.sparkSession)
-
-
 def polygonize(images: DataFrame, quant: int = 64, min_px: int = 64) -> DataFrame:
     """Per-image polygonize of the quantized band (1→N rows; the
     ``gdal_polygonize`` feature stream). Returns one row per region
     ≥ min_px: (image_id, value, n_pixels, xmin, ymin, xmax, ymax)."""
-    _ensure(images)
     schema = (
         "image_id string, value int, n_pixels long, xmin int, ymin int, "
         "xmax int, ymax int"
     )
 
-    def run(it):
-        for pdf in it:
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                b = arr[:, :, 0] if arr.ndim == 3 else arr
-                q = (b // quant).astype(np.uint8)
-                rows = [
-                    (r.image_id, *t) for t in polygonize_array(q, min_px=min_px)
-                ]
-                if rows:
-                    yield pd.DataFrame(
-                        rows,
-                        columns=["image_id", "value", "n_pixels", "xmin", "ymin", "xmax", "ymax"],
-                    )
+    def fn(r, arr):
+        b = arr[:, :, 0] if arr.ndim == 3 else arr
+        q = (b // quant).astype(np.uint8)
+        for t in polygonize_array(q, min_px=min_px):
+            yield (r.image_id, *t)
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)
 
 
 def contour(images: DataFrame, levels=(64.0, 128.0, 192.0)) -> DataFrame:
     """Per-image marching-squares contour stats at fixed levels."""
-    _ensure(images)
     schema = "image_id string, level double, n_segments long, total_len double"
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                b = arr[:, :, 0] if arr.ndim == 3 else arr
-                for level, n, ln in contour_stats(b, levels):
-                    rows.append((r.image_id, level, n, round(ln, 4)))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "level", "n_segments", "total_len"]
-                )
+    def fn(r, arr):
+        b = arr[:, :, 0] if arr.ndim == 3 else arr
+        for level, n, ln in contour_stats(b, levels):
+            yield (r.image_id, level, n, round(ln, 4))
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)

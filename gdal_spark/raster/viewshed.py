@@ -16,11 +16,10 @@ operator here.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from gdal_spark.raster import codec
 from gdal_spark.raster.checksum import checksum_band
+from gdal_spark.raster.pipeline import map_images
 
 
 def viewshed_mask(dem: np.ndarray, ox: int, oy: int, obs_height: float = 10.0, row_chunk: int = 32) -> np.ndarray:
@@ -159,29 +158,16 @@ def viewshed(images: DataFrame, obs_height: float = 10.0, max_dim: int | None = 
     reduction for callers that want the speed trade). Returns
     (image_id, n_visible, pct_visible, checksum) — checksum of the
     0/255 visibility raster, the golden currency."""
-    from gdal_spark.session import ensure_pixel_batch_size
-
-    ensure_pixel_batch_size(images.sparkSession)
     schema = "image_id string, n_visible long, pct_visible double, checksum int"
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                dem = arr[:, :, 0] if arr.ndim == 3 else arr
-                if max_dim is not None:
-                    dem = _downsample(dem, max_dim)
-                h, w = dem.shape
-                mask = viewshed_mask_wang(dem, w // 2, h // 2, obs_height)
-                vis255 = (mask * 255).astype(np.uint8)
-                rows.append(
-                    (r.image_id, int(mask.sum()),
-                     round(float(mask.mean()) * 100.0, 4), checksum_band(vis255))
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id", "n_visible", "pct_visible", "checksum"]
-                )
+    def fn(r, arr):
+        dem = arr[:, :, 0] if arr.ndim == 3 else arr
+        if max_dim is not None:
+            dem = _downsample(dem, max_dim)
+        h, w = dem.shape
+        mask = viewshed_mask_wang(dem, w // 2, h // 2, obs_height)
+        vis255 = (mask * 255).astype(np.uint8)
+        yield (r.image_id, int(mask.sum()),
+               round(float(mask.mean()) * 100.0, 4), checksum_band(vis255))
 
-    return images.mapInPandas(run, schema=schema)
+    return map_images(images, schema, fn)

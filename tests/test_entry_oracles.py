@@ -3,8 +3,10 @@
 values).
 
 Covers the per-order codec round trips built on
-``__spark_entry__._per_order`` and the point-format round trips whose
-fixtures share ``_customer_points``.
+``__spark_entry__._per_order``, the point-format round trips whose
+fixtures share ``_customer_points``, and the image-table operators
+built on ``raster.pipeline.map_images``, whose golden oracles are
+stored at sf0.001 as well.
 """
 
 import pytest
@@ -49,6 +51,45 @@ CUSTOMER_POINTS = [
 ]
 
 
+# image-table operators, compared against golden/sf0.001/<name>.parquet
+GOLDEN = [
+    "raster_checksums",
+    "geotiff_cog",
+    "raster_cutline",
+    "raster_color_relief",
+    "raster_translate",
+    "raster_resample_kernels",
+    "raster_band_stats",
+    "raster_reclassify",
+    "raster_band_calc",
+    "raster_dem_metrics",
+    "raster_color_map",
+    "raster_psnr_gate",
+    "jpeg_progressive",
+    "webp_lz77_roundtrip",
+    "webp_lossy_vp8",
+    "raster_warp_utm",
+    "raster_warp_lcc",
+    "raster_warp_gcp",
+    "raster_warp_geoloc",
+    "raster_rpc_ortho",
+    "raster_proximity",
+    "raster_sieve",
+    "raster_fillnodata",
+    "raster_polygonize",
+    "raster_contour",
+    "raster_palette",
+    "raster_pct_roundtrip",
+    "raster_histogram",
+    "raster_pansharpen",
+    "raster_viewshed",
+    "raster_neighbors",
+    "raster_clean_collar",
+    "raster_footprint",
+    "raster_nodata_alpha",
+]
+
+
 @pytest.fixture(scope="module")
 def oracle_db(sf_dir):
     con = duckdb_views(sf_dir)
@@ -56,12 +97,21 @@ def oracle_db(sf_dir):
     con.close()
 
 
-@pytest.mark.parametrize("name", PER_ORDER + CUSTOMER_POINTS)
-def test_query_matches_oracle(spark, sf_dir, oracle_db, name):
+def _check(spark, sf_dir, oracle_db, name, oracle):
     sdf = E.queries()[name](spark, sf_dir)
     srows = sdf.collect()
-    res = oracle_db.execute(E.oracle_sql()[name])
+    res = oracle_db.execute(oracle)
     ocols = [d[0] for d in res.description]
     orows = res.fetchall()
     assert srows
     assert compare(sdf.columns, srows, ocols, orows) == []
+
+
+@pytest.mark.parametrize("name", PER_ORDER + CUSTOMER_POINTS)
+def test_query_matches_oracle(spark, sf_dir, oracle_db, name):
+    _check(spark, sf_dir, oracle_db, name, E.oracle_sql()[name])
+
+
+@pytest.mark.parametrize("name", GOLDEN)
+def test_image_query_matches_golden(spark, sf_dir, oracle_db, name):
+    _check(spark, sf_dir, oracle_db, name, E._golden_oracle(name, "sf0.001"))

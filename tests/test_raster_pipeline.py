@@ -247,3 +247,39 @@ def test_mbtiles_sink_roundtrip(imgs, spark, tmp_path):
     con.close()
     assert n == len(src)
     pyr.unpersist()
+
+
+
+def _cutline_stage(spark, sf_dir):
+    from gdal_spark.raster.rasterize import warp_cutline
+
+    images, aoi = synth.images(spark, sf_dir), synth.aoi(spark, sf_dir)
+    return lambda: warp_cutline(images, aoi)
+
+
+def _compare_stage(spark, sf_dir):
+    from gdal_spark.raster.compare import compare_images
+
+    blob = codec.encode_image(np.zeros((4, 4, 3), dtype=np.uint8), "png")
+    pairs = spark.createDataFrame(
+        [("a", blob, blob)], "image_id string, bytes_a binary, bytes_b binary"
+    )
+    return lambda: compare_images(pairs)
+
+
+@pytest.mark.parametrize("stage", [_cutline_stage, _compare_stage])
+def test_pixel_stage_clamps_arrow_batch(spark, sf_dir, stage):
+    """Building a pixel-bearing stage clamps the session's Arrow batch
+    size when the caller's session runs at Spark's 10,000-row default.
+    The inputs are built first: ``synth.images`` clamps on its own."""
+    from gdal_spark.session import DEFAULT_ARROW_BATCH
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    build = stage(spark, sf_dir)
+    try:
+        spark.conf.set(key, "10000")
+        build()
+        assert int(spark.conf.get(key)) <= DEFAULT_ARROW_BATCH
+    finally:
+        spark.conf.set(key, prev)
