@@ -156,7 +156,12 @@ def _ccitt_decode_via_libtiff(data: bytes, w: int, h: int,
 
 def read_nitf(buf: bytes, header_only: bool = False):
     """Decode the first image segment → ((h, w[, bands]) array,
-    info)."""
+    info).
+
+    Pixels decode for IC = NC, NM (uncompressed, optionally block
+    masked) and C1 (bi-level) only; any other compression code raises
+    ``ValueError`` instead of reading compressed bytes as raw pixels.
+    ``header_only`` parses the header of every IC."""
     version = _field(buf, 0, 9)
     if not (version.startswith("NITF") or version.startswith("NSIF")):
         raise ValueError("not a NITF/NSIF file")
@@ -290,6 +295,9 @@ def read_nitf(buf: bytes, header_only: bool = False):
     }
     if header_only:
         return None, info
+    if ic not in ("NC", "NM", "C1"):
+        raise ValueError(
+            f"NITF IC={ic!r} not decoded (NC, NM and C1 only)")
 
     # stride formulas (nitfimage.c:780-830)
     if imode == "S":

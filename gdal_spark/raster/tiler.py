@@ -32,6 +32,8 @@ the bench wall):
 - Every raw level is persisted (tracked in ``gdal_spark.cache``):
   the union + next-level branches both consume it, and without the
   persist Spark recomputes level L's compose once per higher level.
+  In a ``get_spark`` session AQE coalesces each persisted level to
+  about one task per core, not ``spark.sql.shuffle.partitions``.
 
 Resume = anti-join against the tile manifest (replacing the
 reference's per-file existence checks, gdal2tiles.py:2852-2855);

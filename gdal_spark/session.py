@@ -4,8 +4,9 @@ Defaults target local[N] testing but every knob is the one you would
 set on a 1000-executor cluster: AQE on (runtime skew-join + partition
 coalescing), Arrow enabled with a bounded batch size (the pandas-UDF
 analogue of GDAL's 65,536-feature Arrow batches,
-``ogr/ogrsf_frmts/generic/ogrlayerarrow.cpp:2079``), and shuffle
-partition counts sized to cores.
+``ogr/ogrsf_frmts/generic/ogrlayerarrow.cpp:2079``), and a cluster-sized
+``max(32, cores)`` shuffle partition count that AQE coalesces at run
+time on every shuffle, those inside persisted (cached) plans included.
 """
 
 from __future__ import annotations
@@ -73,6 +74,14 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # By default AQE does not coalesce the final shuffle of a
+        # persist()ed plan, so every tracked tile-pyramid level and
+        # kNN / LSH round would run exactly shuffle.partitions Python
+        # tasks at ~0.2-0.3 s fixed cost each (measured on 4 vCPUs:
+        # build_pyramid(11, 12) + write_tiles 455 tasks -> 57, cached
+        # levels 32 partitions -> 3-4). Spark reads this when persist()
+        # is called, so it is set here, before any operator runs.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
         # Arrow for pandas UDFs; bounded batches so decoded-pixel

@@ -47,13 +47,10 @@ def main(argv=None):
     from pyspark.sql import SparkSession
 
     from gdal_spark.operators import dedup
+    from gdal_spark.session import get_spark
 
     preexisting = SparkSession.getActiveSession() is not None
-    spark = (
-        SparkSession.builder.appName("gdal_spark_dedup")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    spark = get_spark("gdal_spark_dedup")
     t0 = time.time()
     docs = spark.read.parquet(args.docs)
 

@@ -73,3 +73,54 @@ def test_nitf1x_rejected():
     buf = b"NITF01.10" + b" " * 400
     with pytest.raises(ValueError):
         nitf.read_nitf(buf)
+
+
+def _cell(img, ic=b"NC", comrat=b""):
+    """The closed-form NITF 2.1 cell of the ``nitf_read`` gate query:
+    file header, one 8-bit MONO image subheader (IMODE B, one block)
+    and ``img`` as the image data. A compressed ``ic`` carries its
+    4-byte COMRAT after the IC field."""
+    h, w = img.shape
+    sub = bytearray(b" " * 333)
+    sub[0:2] = b"IM"
+    sub += b"%08d%08d" % (h, w)            # NROWS, NCOLS
+    sub += b"INT" + b"MONO    " + b"VIS     "  # PVTYPE, IREP, ICAT
+    sub += b"08" + b"R" + b" " + b"0"      # ABPP, PJUST, ICORDS, NICOM
+    sub += ic + comrat + b"1"              # IC [COMRAT], NBANDS
+    sub += b"M " + b" " * 6 + b"    " + b"0"  # band info
+    sub += b"0" + b"B" + b"0001" * 2       # ISYNC, IMODE, NBPR, NBPC
+    sub += b"%04d%04d" % (w, h) + b"08"    # NPPBH, NPPBV, NBPP
+    sub += b"001" + b"000" + b"0000000000" + b"1.0 "
+    sub += b"00000" + b"00000"             # UDIDL, IXSHDL
+    data = img.tobytes()
+    hl = 360 + 3 + 16
+    fh = bytearray(b" " * hl)
+    fh[0:9] = b"NITF02.10"
+    fh[354:360] = b"%06d" % hl
+    fh[360:363] = b"001"
+    fh[363:369] = b"%06d" % len(sub)
+    fh[369:379] = b"%010d" % len(data)
+    return bytes(fh) + bytes(sub) + data
+
+
+def _ramp():
+    r, c = np.meshgrid(np.arange(30), np.arange(40), indexing="ij")
+    return ((3 * r + 8 * c + 7) % 256).astype(np.uint8)
+
+
+def test_uncompressed_cell_decodes():
+    arr, info = nitf.read_nitf(_cell(_ramp()))
+    assert info["ic"] == "NC"
+    np.testing.assert_array_equal(arr, _ramp())
+
+
+@pytest.mark.parametrize("ic", [b"C3", b"C8", b"I1", b"M3"])
+def test_compressed_ic_raises(ic):
+    """A compression the reader does not decode must raise, naming
+    the code, instead of returning the compressed bytes as pixels;
+    the header still parses."""
+    buf = _cell(_ramp(), ic=ic, comrat=b"00.0")
+    _, info = nitf.read_nitf(buf, header_only=True)
+    assert (info["ic"], info["w"], info["h"]) == (ic.decode(), 40, 30)
+    with pytest.raises(ValueError, match=ic.decode()):
+        nitf.read_nitf(buf)

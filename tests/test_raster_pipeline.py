@@ -283,3 +283,31 @@ def test_pixel_stage_clamps_arrow_batch(spark, sf_dir, stage):
         assert int(spark.conf.get(key)) <= DEFAULT_ARROW_BATCH
     finally:
         spark.conf.set(key, prev)
+
+
+def test_persisted_plans_are_coalesced(spark, sf_dir, tmp_path):
+    """AQE coalesces the shuffles inside persisted plans: every block
+    cached by the pyramid levels, ``write_tiles`` and the kNN rounds
+    spans fewer partitions than ``spark.sql.shuffle.partitions`` (about
+    one per core), so each level or round runs that few Python tasks."""
+    from gdal_spark.operators.knn import knn_join
+
+    sc = spark.sparkContext._jsc.sc()
+    earlier = {i.id() for i in sc.getRDDStorageInfo()}
+
+    def assert_coalesced():
+        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        cached = [i for i in sc.getRDDStorageInfo() if i.id() not in earlier]
+        assert cached
+        assert all(i.numCachedPartitions() < n for i in cached), [
+            (i.name(), i.numCachedPartitions(), n) for i in cached]
+        earlier.update(i.id() for i in cached)
+
+    imgs = synth.images(spark, sf_dir).filter(F.col("image_id") < "img000000000050")
+    pyr = tiler.build_pyramid(imgs, min_zoom=9, max_zoom=11)
+    assert tiler.write_tiles(spark, pyr, str(tmp_path / "tiles"))["n_tiles"] > 0
+    assert_coalesced()
+
+    pts = synth.points(spark, sf_dir).limit(40)
+    assert len(knn_join(pts, synth.sites(spark, sf_dir), k=5).collect()) == 200
+    assert_coalesced()
