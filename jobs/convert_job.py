@@ -196,7 +196,10 @@ def main(argv=None):
 
     from gdal_spark.session import get_spark
 
-    spark = SparkSession.getActiveSession() or get_spark("convert_job")
+    spark = SparkSession.getActiveSession()
+    preexisting = spark is not None
+    if not preexisting:
+        spark = get_spark("convert_job")
     t0 = time.time()
     in_fmt = args.input_format or sniff(args.input)
     out_fmt = args.output_format or sniff(args.output)
@@ -213,7 +216,10 @@ def main(argv=None):
     print(json.dumps({"input": args.input, "output": args.output,
                       "in_format": in_fmt, "out_format": out_fmt,
                       "rows": n, "secs": round(time.time() - t0, 2)}))
+    if not preexisting:  # don't tear down a caller's session (tests)
+        spark.stop()
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
