@@ -454,29 +454,32 @@ def _cross(ox, oy, ax, ay, bx, by):
 
 def segments_intersect_any(ra: np.ndarray, rb: np.ndarray) -> bool:
     """True if any edge of ring ``ra`` properly intersects any edge of
-    ring ``rb`` (orientation test, inclusive of touching)."""
+    ring ``rb`` (orientation test, inclusive of touching: an endpoint
+    of one edge on the other edge *segment*, not just on its line)."""
     a1, a2 = _edges(ra)
     b1, b2 = _edges(rb)
     # broadcast (na, nb)
-    d1 = _cross(a1[:, None, 0], a1[:, None, 1], a2[:, None, 0], a2[:, None, 1], b1[None, :, 0], b1[None, :, 1])
-    d2 = _cross(a1[:, None, 0], a1[:, None, 1], a2[:, None, 0], a2[:, None, 1], b2[None, :, 0], b2[None, :, 1])
-    d3 = _cross(b1[None, :, 0], b1[None, :, 1], b2[None, :, 0], b2[None, :, 1], a1[:, None, 0], a1[:, None, 1])
-    d4 = _cross(b1[None, :, 0], b1[None, :, 1], b2[None, :, 0], b2[None, :, 1], a2[:, None, 0], a2[:, None, 1])
+    a1, a2 = a1[:, None, :2], a2[:, None, :2]
+    b1, b2 = b1[None, :, :2], b2[None, :, :2]
+    d1 = _cross(a1[..., 0], a1[..., 1], a2[..., 0], a2[..., 1], b1[..., 0], b1[..., 1])
+    d2 = _cross(a1[..., 0], a1[..., 1], a2[..., 0], a2[..., 1], b2[..., 0], b2[..., 1])
+    d3 = _cross(b1[..., 0], b1[..., 1], b2[..., 0], b2[..., 1], a1[..., 0], a1[..., 1])
+    d4 = _cross(b1[..., 0], b1[..., 1], b2[..., 0], b2[..., 1], a2[..., 0], a2[..., 1])
     proper = ((d1 > 0) != (d2 > 0)) & ((d3 > 0) != (d4 > 0))
-    touch = (d1 == 0) | (d2 == 0) | (d3 == 0) | (d4 == 0)
-    return bool(np.any(proper | touch & _bbox_overlap_edges(a1, a2, b1, b2)))
+    touch = (
+        (d1 == 0) & _in_box(a1, a2, b1)
+        | (d2 == 0) & _in_box(a1, a2, b2)
+        | (d3 == 0) & _in_box(b1, b2, a1)
+        | (d4 == 0) & _in_box(b1, b2, a2)
+    )
+    return bool(np.any(proper | touch))
 
 
-def _bbox_overlap_edges(a1, a2, b1, b2):
-    ax_min = np.minimum(a1[:, None, 0], a2[:, None, 0])
-    ax_max = np.maximum(a1[:, None, 0], a2[:, None, 0])
-    ay_min = np.minimum(a1[:, None, 1], a2[:, None, 1])
-    ay_max = np.maximum(a1[:, None, 1], a2[:, None, 1])
-    bx_min = np.minimum(b1[None, :, 0], b2[None, :, 0])
-    bx_max = np.maximum(b1[None, :, 0], b2[None, :, 0])
-    by_min = np.minimum(b1[None, :, 1], b2[None, :, 1])
-    by_max = np.maximum(b1[None, :, 1], b2[None, :, 1])
-    return (ax_min <= bx_max) & (bx_min <= ax_max) & (ay_min <= by_max) & (by_min <= ay_max)
+def _in_box(p, q, r):
+    """``r`` inside the bbox of segment ``p``–``q``; for an ``r`` on the
+    segment's line, that is ``r`` on the segment."""
+    lo, hi = np.minimum(p, q), np.maximum(p, q)
+    return np.all((lo <= r) & (r <= hi), axis=-1)
 
 
 def geoms_intersect(ga: Geom, gb: Geom) -> bool:

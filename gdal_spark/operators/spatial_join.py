@@ -334,15 +334,21 @@ def _is_axis_rect(g: "G.Geom") -> bool:
     """True when the geometry is a single closed axis-aligned rectangle
     ring — for those, envelope overlap IS Intersects, so the exact
     refine can short-circuit (the reference's envelope-containment
-    shortcut, ``ogrlayer.cpp:4035-4047``, generalized)."""
-    if g.gtype != G.WKB_POLYGON or len(g.rings) != 1:
+    shortcut, ``ogrlayer.cpp:4035-4047``, generalized). The ring must
+    be closed with 5 points and its 4 edges alternate horizontal and
+    vertical with none of zero length; two x and two y values alone
+    also admit the bowtie (0,0),(1,1),(1,0),(0,1)."""
+    if g.gtype != G.WKB_POLYGON or len(g.rings) != 1 or len(g.rings[0]) != 5:
         return False
-    r = g.rings[0]
-    if len(r) != 5:
+    r = g.rings[0].tolist()  # plain floats: 5 points cost less than NumPy calls
+    if r[0] != r[4]:
         return False
-    xs = {r[0, 0], r[1, 0], r[2, 0], r[3, 0]}
-    ys = {r[0, 1], r[1, 1], r[2, 1], r[3, 1]}
-    return len(xs) == 2 and len(ys) == 2
+    horiz = [a[1] == b[1] for a, b in zip(r, r[1:])]
+    vert = [a[0] == b[0] for a, b in zip(r, r[1:])]
+    # an edge both horizontal and vertical has zero length
+    return all(h != v for h, v in zip(horiz, vert)) and (
+        horiz[0] == horiz[2] != horiz[1] == horiz[3]
+    )
 
 
 def refine_bbox_intersects(candidates: DataFrame, left_bbox, geom="geom") -> DataFrame:

@@ -3,7 +3,7 @@ palette operators.
 
 Reference surfaces:
 - ``gdal raster mosaic`` (``apps/gdalalg_raster_mosaic.cpp``) — the
-  per-tile first-wins composite already lives in ``tiler.compose_tiles``;
+  per-tile first-wins composite already lives in ``tiler._subtrees``;
   here ``mosaic_group`` generalizes it to arbitrary grouping keys.
 - ``gdal raster stack`` (``apps/gdalalg_raster_stack.cpp``) — images →
   one multi-band raster (bands in input order).

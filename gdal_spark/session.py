@@ -112,9 +112,11 @@ def get_spark(
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         # By default AQE does not coalesce the final shuffle of a
-        # persist()ed plan, so every tracked tile-pyramid level and
-        # kNN / LSH round would run exactly shuffle.partitions Python
-        # tasks at ~0.2-0.3 s fixed cost each (measured on 4 vCPUs:
+        # persist()ed plan, so every tracked kNN / LSH round, the
+        # `write_tiles` cache of a pyramid (its subtree stage) and the
+        # rounds of a pyramid deeper than four levels would run exactly
+        # shuffle.partitions Python tasks at ~0.2-0.3 s fixed cost each
+        # (measured on 4 vCPUs with the earlier per-level pyramid:
         # build_pyramid(11, 12) + write_tiles 455 tasks -> 57, cached
         # levels 32 partitions -> 3-4). Spark reads this when persist()
         # is called, so it is set here, before any operator runs.

@@ -78,6 +78,25 @@ def test_intersects():
     assert G.geoms_intersect(h, v)
 
 
+def test_endpoint_on_edge_line_is_not_a_touch():
+    """A vertex on the infinite line of another edge, with the two
+    edges' bboxes overlapping, is not a touch unless it lies on that
+    edge's segment: the triangle's (2, 2) is on the line y = 2 of the
+    rectangle's bottom edge, but right of it."""
+    from gdal_spark.functions.predicates import predicate
+
+    tri = G.parse_wkb(G.wkb_polygon([[(0, 0), (2, 2), (2, 0), (0, 0)]]))
+    rect = G.parse_wkb(G.wkb_bbox_polygon(0.5, 2, 1.5, 3))
+    assert not G.geoms_intersect(tri, rect)
+    assert not G.geoms_intersect(rect, tri)
+    assert not G.segments_intersect_any(tri.rings[0], rect.rings[0])
+    assert not predicate(tri, rect, "intersects")
+    # a vertex on the segment still touches
+    on = G.parse_wkb(G.wkb_bbox_polygon(1.5, 2, 2.5, 3))
+    assert G.segments_intersect_any(tri.rings[0], on.rings[0])
+    assert G.geoms_intersect(tri, on)
+
+
 def test_clip_ring_to_bbox():
     ring = np.asarray(SQUARE[0], dtype=float)
     out = G.clip_ring_to_bbox(ring, 5, 5, 15, 15)

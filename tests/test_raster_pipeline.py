@@ -285,29 +285,70 @@ def test_pixel_stage_clamps_arrow_batch(spark, sf_dir, stage):
         spark.conf.set(key, prev)
 
 
-def test_persisted_plans_are_coalesced(spark, sf_dir, tmp_path):
+def test_persisted_plans_are_coalesced(spark, sf_dir):
     """AQE coalesces the shuffles inside persisted plans: every block
-    cached by the pyramid levels, ``write_tiles`` and the kNN rounds
-    spans fewer partitions than ``spark.sql.shuffle.partitions`` (about
-    one per core), so each level or round runs that few Python tasks."""
+    cached by the kNN rounds spans fewer partitions than
+    ``spark.sql.shuffle.partitions`` (about one per core), so each
+    round runs that few Python tasks. The tile pyramid's plan shape is
+    checked in ``tests/test_plan_properties.py``."""
     from gdal_spark.operators.knn import knn_join
 
     sc = spark.sparkContext._jsc.sc()
     earlier = {i.id() for i in sc.getRDDStorageInfo()}
-
-    def assert_coalesced():
-        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        cached = [i for i in sc.getRDDStorageInfo() if i.id() not in earlier]
-        assert cached
-        assert all(i.numCachedPartitions() < n for i in cached), [
-            (i.name(), i.numCachedPartitions(), n) for i in cached]
-        earlier.update(i.id() for i in cached)
-
-    imgs = synth.images(spark, sf_dir).filter(F.col("image_id") < "img000000000050")
-    pyr = tiler.build_pyramid(imgs, min_zoom=9, max_zoom=11)
-    assert tiler.write_tiles(spark, pyr, str(tmp_path / "tiles"))["n_tiles"] > 0
-    assert_coalesced()
-
     pts = synth.points(spark, sf_dir).limit(40)
     assert len(knn_join(pts, synth.sites(spark, sf_dir), k=5).collect()) == 200
-    assert_coalesced()
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    cached = [i for i in sc.getRDDStorageInfo() if i.id() not in earlier]
+    assert cached
+    assert all(i.numCachedPartitions() < n for i in cached), [
+        (i.name(), i.numCachedPartitions(), n) for i in cached]
+
+
+def _overview_reference(level: dict, ts: int = 256) -> dict:
+    """NumPy 2×2 overview: {(tx, ty): (rgba, n)} at z → z−1, RGB the
+    rounded mean, alpha the max, n the number of children present."""
+    big = {}
+    for (tx, ty), (rgba, _) in level.items():
+        b, n = big.get((tx // 2, ty // 2), (np.zeros((2 * ts, 2 * ts, 4), np.uint8), 0))
+        oy, ox = (1 - ty % 2) * ts, (tx % 2) * ts  # TMS: higher ty on top
+        b[oy : oy + ts, ox : ox + ts] = rgba
+        big[(tx // 2, ty // 2)] = (b, n + 1)
+    out = {}
+    for key, (b, n) in big.items():
+        q = b.reshape(ts, 2, ts, 2, 4).astype(np.float64)
+        rgb = np.floor(q[..., :3].mean(axis=(1, 3)) + 0.5)
+        alpha = q[..., 3].max(axis=(1, 3))
+        out[key] = (np.dstack([rgb, alpha]).astype(np.uint8), n)
+    return out
+
+
+def test_deep_pyramid_vs_numpy_overviews(imgs):
+    """A pyramid of six levels runs two subtree rounds (11→8, then 8→6
+    from the raw z=8 canvases); every tile equals NumPy overviews of
+    the single-level base tiles."""
+    from gdal_spark import cache
+    from gdal_spark.raster.checksum import checksum
+
+    lo, hi = 6, 11
+    base = tiler.build_pyramid(imgs, hi, hi).collect()
+    level = {(t.tx, t.ty): (codec.png_decode(bytes(t.tile)), t.n_srcs) for t in base}
+    want = {(hi, *k): v for k, v in level.items()}
+    for z in range(hi - 1, lo - 1, -1):
+        level = _overview_reference(level)
+        want.update({(z, *k): v for k, v in level.items()})
+
+    pyr = tiler.build_pyramid(imgs, lo, hi)
+    assert len(cache._TRACKED) == 1  # the 11→8 round feeds the 8→6 one
+    rows = pyr.collect()
+    got = {(t.z, t.tx, t.ty): t for t in rows}
+    assert len(got) == len(rows)  # each tile once: z=8 ends one round, starts the next
+    assert set(got) == set(want)
+    m = tm.GlobalMercator()
+    for (z, tx, ty), (rgba, n) in want.items():
+        t = got[(z, tx, ty)]
+        assert np.array_equal(codec.png_decode(bytes(t.tile)), rgba), (z, tx, ty)
+        assert t.n_srcs == n
+        assert t.checksum == checksum(rgba[:, :, 0])
+        assert t.quadkey == m.QuadTree(tx, ty, z)
+        assert t.y == (1 << z) - 1 - ty
+    assert {z for z, _, _ in got} == set(range(lo, hi + 1))

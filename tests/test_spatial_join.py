@@ -94,6 +94,43 @@ def test_bbox_intersection_join(spark, sf_dir, aoi):
     assert len(exp) > 0
 
 
+BOWTIE = [(0, 0), (1, 1), (1, 0), (0, 1), (0, 0)]
+TRIANGLE = [(0, 0), (2, 2), (2, 0), (0, 0)]
+
+
+def test_is_axis_rect_needs_alternating_nonzero_edges():
+    def rect(ring):
+        return SJ._is_axis_rect(G.parse_wkb(G.wkb_polygon([ring])))
+
+    assert rect([(0, 0), (2, 0), (2, 1), (0, 1), (0, 0)])
+    assert rect([(0, 0), (0, 1), (2, 1), (2, 0), (0, 0)])  # clockwise
+    assert not rect(BOWTIE)  # two x and two y values, crossing edges
+    assert not rect([(0, 0), (1, 0), (1, 0), (0, 1), (0, 0)])  # zero-length edge
+    assert not rect([(0, 0), (2, 0), (2, 0), (0, 0), (0, 0)])  # zero height
+
+
+def test_bbox_join_refines_bowtie_and_edge_line_touch(spark):
+    """Neither pair intersects although the envelopes overlap: the
+    bowtie is no rectangle, and the triangle's vertex (2, 2) lies on
+    the line of the footprint's bottom edge, not on the edge itself.
+    The third footprint overlaps the bowtie's right lobe."""
+    polys = spark.createDataFrame(
+        [
+            (0, bytearray(G.wkb_polygon([BOWTIE])), 0.0, 0.0, 1.0, 1.0),
+            (1, bytearray(G.wkb_polygon([TRIANGLE])), 0.0, 0.0, 2.0, 2.0),
+        ],
+        "poly_id long, geom binary, lon_min double, lat_min double, lon_max double, lat_max double",
+    )
+    fps = spark.createDataFrame(
+        [("a", 0.4, 0.9, 0.6, 1.0), ("b", 0.5, 2.0, 1.5, 3.0), ("c", 0.8, 0.45, 0.9, 0.55)],
+        "image_id string, lon_min double, lat_min double, lon_max double, lat_max double",
+    )
+    got = SJ.bbox_intersection_join(fps.filter(F.col("image_id") != "c"), polys)
+    assert got.select("image_id", "poly_id").collect() == []
+    got = SJ.bbox_intersection_join(fps, polys).select("image_id", "poly_id").collect()
+    assert {(r.image_id, r.poly_id) for r in got} == {("c", 0), ("c", 1)}
+
+
 def test_knn_matches_bruteforce(spark, pts, sf_dir):
     sites = synth.sites(spark, sf_dir)
     k = 5
