@@ -12,10 +12,12 @@ from gdal_spark.sources import synth
 
 @pytest.fixture(scope="module")
 def images(spark, sf_dir, tmp_path_factory):
-    """50 images read back from parquet, so the only Python stages in a
-    pyramid plan are the tiler's own."""
+    """50 images read back from one parquet file, so the only Python
+    stages in a pyramid plan are the tiler's own and the render stage
+    runs only a task per scan split of that file."""
     path = str(tmp_path_factory.mktemp("plan_props") / "images")
-    synth.images(spark, sf_dir).filter(F.col("image_id") < "img000000000050").write.parquet(path)
+    imgs = synth.images(spark, sf_dir).filter(F.col("image_id") < "img000000000050")
+    imgs.coalesce(1).write.parquet(path)
     return spark.read.parquet(path)
 
 
@@ -39,18 +41,39 @@ def test_shallow_pyramid_persists_nothing(images):
     cache.release_all()
 
 
-def test_subtree_stage_is_coalesced(spark, images):
-    """AQE coalesces the one shuffle, so the subtree stage runs fewer
-    Python tasks than ``spark.sql.shuffle.partitions``."""
+def _stage_tasks(spark, group: str, run) -> list[int]:
+    """Tasks of every stage of the jobs ``run()`` starts."""
     sc = spark.sparkContext
-    group = "plan_props_subtree"
-    sc.setJobGroup(group, "build_pyramid(9, 11)")
+    sc.setJobGroup(group, group)
     try:
-        assert tiler.build_pyramid(images, 9, 11).select("z").collect()
+        run()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     st = sc.statusTracker()
-    stages = [s for j in st.getJobIdsForGroup(group) for s in st.getJobInfo(j).stageIds]
-    last = st.getStageInfo(max(stages))  # the stage after the shuffle
+    stages = {s for j in st.getJobIdsForGroup(group) for s in st.getJobInfo(j).stageIds}
+    return [st.getStageInfo(s).numTasks for s in sorted(stages)]
+
+
+def test_cached_subtree_stage_is_coalesced(spark, images, tmp_path):
+    """``write_tiles`` caches the pyramid, so its subtree stage runs
+    inside a persisted plan: AQE may coalesce that shuffle only because
+    ``get_spark`` sets ``canChangeCachedPlanOutputPartitioning``. Every
+    stage then runs fewer tasks than ``spark.sql.shuffle.partitions``
+    (the render stage reads one file)."""
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert 0 < last.numTasks < n, (last.numTasks, n)
+    tasks = _stage_tasks(spark, "plan_props_write", lambda: tiler.write_tiles(
+        spark, tiler.build_pyramid(images, 9, 11), str(tmp_path)))
+    assert tasks and max(tasks) < n, (tasks, n)
+
+
+def test_persisted_round_is_coalesced(spark, images):
+    """The persisted first round of a deep pyramid caches fewer
+    partitions than ``spark.sql.shuffle.partitions``."""
+    jsc = spark.sparkContext._jsc.sc()
+    earlier = {i.id() for i in jsc.getRDDStorageInfo()}
+    assert tiler.build_pyramid(images, 6, 11).select("z").collect()
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    cached = [i for i in jsc.getRDDStorageInfo() if i.id() not in earlier]
+    assert len(cached) == 1
+    assert 0 < cached[0].numCachedPartitions() < n, (cached[0].numCachedPartitions(), n)
+    cache.release_all()
