@@ -7,6 +7,9 @@ analogue of GDAL's 65,536-feature Arrow batches,
 ``ogr/ogrsf_frmts/generic/ogrlayerarrow.cpp:2079``), and a cluster-sized
 ``max(32, cores)`` shuffle partition count that AQE coalesces at run
 time on every shuffle, those inside persisted (cached) plans included.
+A driver JVM launched here sizes its heap by what it holds rather than
+by how long its GC pauses are (``_DRIVER_GC``), so its peak memory
+does not depend on thread timing.
 
 Start-up cache. When ``get_spark`` launches the driver JVM itself (no
 JVM gateway yet, not under ``spark-submit``), it starts the JVM from a
@@ -137,11 +140,12 @@ def get_spark(
         "spark.python.worker.faulthandler.enabled": "true",
         **(extra_conf or {}),
     }
+    key = "spark.driver.extraJavaOptions"
+    conf[key] = f"{_DRIVER_GC} {conf.get(key, '')}".rstrip()
     archive = DriverArchive.for_launch(conf)
     cds = archive.java_options() if archive else ""
     if not cds:
         return _session(app_name, master, conf)
-    key = "spark.driver.extraJavaOptions"
     try:
         with archive.launch_env():
             opts = f"{conf.get(key, '')} {cds}".lstrip()
@@ -167,6 +171,23 @@ _JAVA_OPTION_CONFS = ("spark.driver.extraJavaOptions", "spark.driver.defaultJava
 _JAVA_OPTION_ENV = (
     "SPARK_SUBMIT_OPTS", "JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS",
 )
+# G1 grows the heap when GC pauses take more than 1/(1 + GCTimeRatio)
+# of recent time (default 12, ~8%; on a heap under half its maximum the
+# threshold shrinks in proportion, to ~2% on a 270 MB heap of 2 GB).
+# The driver's pauses are long for a reason heap size does not fix: in
+# local mode its GC threads share the cores with the Python workers,
+# and a System.gc() pause counts as well. So after a full collection a
+# young one could double or triple the heap (270 -> 810 MB, live set
+# ~80 MB), and whether eden filled it before the next mark shrank it
+# was up to timing: about one run in five peaked 300-450 MB higher
+# (perfbench spatial_joins, 4 vCPUs). At 1 (50%) only a sustained GC
+# share grows it; allocation that does not fit still grows it at once.
+# The price is more collections on the smaller heap: 0.7-2.8 s more
+# JVM CPU per perfbench pass (+4-14%, the more the busier the host),
+# for a peak that no longer moves (interquartile range of 8-10 runs
+# up to 216 MB -> 23-41 MB). It goes first, so a GCTimeRatio in the
+# caller's spark.driver.extraJavaOptions comes later and wins.
+_DRIVER_GC = "-XX:GCTimeRatio=1"
 # Confs and environment that change the driver's class path or
 # spark-submit command line: the archive would record a class path
 # that the next launch may not have.
