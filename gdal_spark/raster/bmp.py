@@ -160,6 +160,13 @@ def decode_full(buf: bytes) -> BmpInfo:
     raise NotImplementedError(f"BMP bit depth {bits} unsupported")
 
 
+def info(buf: bytes) -> tuple[int, int, int]:
+    """(w, h, bands) from BITMAPINFOHEADER width, height and bit count."""
+    w, h = struct.unpack_from("<ii", buf, 18)
+    (bits,) = struct.unpack_from("<H", buf, 28)
+    return w, abs(h), 1 if bits <= 8 else bits // 8
+
+
 def decode(buf: bytes) -> np.ndarray:
     """Pixel view: palette files expand through the color table."""
     g = decode_full(buf)

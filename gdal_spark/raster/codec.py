@@ -1,38 +1,42 @@
-"""Image codecs, pure stdlib + NumPy.
+"""Image codecs and the format table, pure stdlib + NumPy.
 
 The engine treats image payloads as opaque ``binary`` columns decoded
 only inside Arrow-batched UDFs (SURVEY.md §1.1). This container has no
-Pillow/imagecodecs/cv2, so:
+Pillow/imagecodecs/cv2, so every codec is implemented in this package.
 
-- **PNG** is implemented for real (zlib stdlib): 8-bit gray / RGB /
-  RGBA, all five scanline filters on decode, filter-0 on encode. This
-  is the lossless/checksum-exact path.
-- **JPEG is implemented for real** (``gdal_spark.raster.jpeg``):
-  baseline sequential DCT per ITU-T T.81, Annex K tables, 4:4:4 /
-  4:2:0, restart intervals on decode. Default quality 98 keeps the
-  noisy synthetic fixtures above the PSNR ≥ 40 dB lossy gate
-  (``apps/gdalalg_raster_compare.cpp:1094``) with margin.
-- **WebP is implemented for real** (``gdal_spark.raster.webp``):
-  lossless VP8L per the public WebP Lossless Bitstream Specification
-  — RIFF container, canonical prefix codes, literal streams (no
-  transforms/color-cache/LZ77 on encode; decoder covers the same
-  subset and raises loudly beyond it). VP8L is lossless, so fmt='webp'
-  rows are checksum-exact, mirroring GDAL's WEBP_LOSSLESS=YES path
-  (``frmts/webp/webpdataset.cpp``).
+:data:`FORMATS` is the one place a format is chosen, in the manner of
+GDAL's driver manager (``gcore/gdal_driver.h``): one :class:`Format`
+row per driver — PNG, JPEG, WebP, GeoTIFF, PNM, GIF, BMP — holding its
+``fmt`` aliases, its ``identify`` magic-byte test, its header-only
+``info`` probe and its ``decode``, ``encode``, ``xmp`` and
+``metadata`` hooks. :func:`decode_image` and :func:`sniff_info` look
+a payload up by its magic bytes; :func:`encode_image`,
+``metadata.image_xmp`` and ``metadata.image_metadata`` look a row up
+by ``fmt``. Adding a format is one row plus its module.
 
-Every caller goes through this module only.
+PNG (8/16-bit gray, RGB, RGBA on encode; the full spec on decode) is
+implemented here; every other format lives in its own module
+(``jpeg``, ``webp``, ``tiff``, ``simple_formats``, ``gif``, ``bmp``),
+imported by its row on first use. JPEG encodes at
+:data:`JPEG_QUALITY`, which keeps the noisy synthetic fixtures above
+the PSNR ≥ 40 dB lossy gate (``apps/gdalalg_raster_compare.cpp:1094``)
+with margin; WebP encodes lossless VP8L, so fmt='webp' rows are
+checksum-exact, mirroring GDAL's WEBP_LOSSLESS=YES path.
 
-Arrays are HxW (gray) or HxWxC uint8.
+Arrays are HxW (gray) or HxWxC uint8 (uint16 where the format has it).
 """
 
 from __future__ import annotations
 
 import struct
 import zlib
+from importlib import import_module
+from typing import Callable, NamedTuple
 
 import numpy as np
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
+_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}  # by IHDR color type
 
 
 # ---------------------------------------------------------------------------
@@ -146,6 +150,20 @@ def _png_unfilter(mat: np.ndarray, bpp: int) -> np.ndarray:
     return out
 
 
+def png_chunks(buf: bytes):
+    """Yield (type, data) for each PNG chunk, through IEND."""
+    if buf[:8] != PNG_SIG:
+        return
+    off = 8
+    while off + 8 <= len(buf):
+        (ln,) = struct.unpack_from(">I", buf, off)
+        ctype = buf[off + 4:off + 8]
+        yield ctype, buf[off + 8:off + 8 + ln]
+        off += 12 + ln  # length + type + data + crc
+        if ctype == b"IEND":
+            break
+
+
 # Adam7 pass grid: (x0, y0, dx, dy) per PNG §8.2
 _ADAM7 = [
     (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
@@ -182,17 +200,11 @@ def png_decode_full(buf: bytes):
     the stefan_full_rgba twin-fixture cross-check."""
     if bytes(buf[:8]) != PNG_SIG:
         raise ValueError("not a PNG")
-    buf = bytes(buf)
-    off = 8
     w = h = depth = color_type = interlace = None
     palette = None
     trns = None
     idat = []
-    while off < len(buf):
-        (ln,) = struct.unpack_from(">I", buf, off)
-        tag = buf[off + 4 : off + 8]
-        data = buf[off + 8 : off + 8 + ln]
-        off += 12 + ln
+    for tag, data in png_chunks(bytes(buf)):
         if tag == b"IHDR":
             w, h, depth, color_type, comp, filt, interlace = struct.unpack(
                 ">IIBBBBB", data
@@ -205,11 +217,9 @@ def png_decode_full(buf: bytes):
             trns = data
         elif tag == b"IDAT":
             idat.append(data)
-        elif tag == b"IEND":
-            break
     if w is None:
         raise ValueError("PNG without IHDR")
-    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[color_type]
+    channels = _PNG_CHANNELS[color_type]
     bpp = max(1, channels * depth // 8)
 
     def stride_of(width):
@@ -253,6 +263,12 @@ def png_decode_full(buf: bytes):
     return samples, info
 
 
+def png_info(buf: bytes) -> tuple[int, int, int]:
+    """(w, h, bands) from IHDR, always the first chunk (PNG §5.6)."""
+    bands = _PNG_CHANNELS[buf[25]]
+    return int.from_bytes(buf[16:20], "big"), int.from_bytes(buf[20:24], "big"), bands
+
+
 def png_decode(buf: bytes) -> np.ndarray:
     """Pixel view: palette expands to RGB(A via tRNS); gray/RGB come
     back in their stored dtype; single-channel squeezes to (h, w)."""
@@ -276,76 +292,115 @@ def png_decode(buf: bytes) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Dispatch
+# Format table
 # ---------------------------------------------------------------------------
 
 
 JPEG_QUALITY = 98  # keeps the noisy synth fixtures ≥ 44 dB (gate: 40)
 
 
+class Format(NamedTuple):
+    """One driver: the ``fmt`` aliases it answers to and its hooks.
+
+    ``identify``, ``info`` (-> ``(w, h, bands)`` from the header
+    alone), ``decode``, ``xmp`` and ``metadata`` (-> ``(default-domain
+    dict, ICC profile bytes or None, ICC profile name or None)``) take
+    the payload bytes; ``encode`` takes ``(arr, compress_level)``."""
+
+    name: str
+    aliases: tuple[str, ...]
+    identify: Callable[[bytes], bool]
+    info: Callable[[bytes], tuple[int, int, int]]
+    decode: Callable[[bytes], np.ndarray]
+    encode: Callable[[np.ndarray, int], bytes] | None = None
+    xmp: Callable[[bytes], str | None] | None = None
+    metadata: Callable[[bytes], tuple] | None = None
+
+
+def _lazy(path: str, **kw):
+    """Hook calling ``module.attr`` of a sibling format module, imported
+    on first call (``jpeg``, ``webp`` and ``tiff`` take 14–37 ms each to
+    import). Arguments after the payload are dropped: only PNG's
+    encoder takes ``compress_level``."""
+    module, attr = path.split(".")
+    return lambda x, *_: getattr(import_module(f"gdal_spark.raster.{module}"), attr)(x, **kw)
+
+
+PNG = Format(
+    "png", ("png",), identify=lambda b: b[:8] == PNG_SIG,
+    info=png_info, decode=png_decode, encode=png_encode,
+    xmp=_lazy("metadata.png_xmp"), metadata=_lazy("metadata._png_metadata"),
+)
+JPEG = Format(
+    "jpeg", ("jpeg", "jpg"), identify=lambda b: b[:2] == b"\xff\xd8",
+    info=_lazy("jpeg.info"), decode=_lazy("jpeg.decode"),
+    encode=_lazy("jpeg.encode", quality=JPEG_QUALITY),
+    xmp=_lazy("exif.parse_xmp"), metadata=_lazy("metadata._jpeg_metadata"),
+)
+WEBP = Format(
+    "webp", ("webp",), identify=lambda b: b[:4] == b"RIFF" and b[8:12] == b"WEBP",
+    info=_lazy("webp.info"), decode=_lazy("webp.decode"), encode=_lazy("webp.encode"),
+    xmp=_lazy("metadata.webp_xmp"), metadata=_lazy("metadata._webp_metadata"),
+)
+TIFF = Format(
+    "tiff", ("tiff", "tif", "gtiff", "cog"),
+    identify=lambda b: b[:4] in (b"II*\x00", b"MM\x00*", b"II+\x00", b"MM\x00+"),
+    info=_lazy("tiff.info"), decode=_lazy("tiff.decode"),
+    encode=_lazy("tiff.encode_geotiff"), xmp=_lazy("metadata.tiff_xmp"),
+)
+PNM = Format(
+    "pnm", ("pnm", "pgm", "ppm"),
+    identify=lambda b: b[:2] in (b"P5", b"P6") and b[2:3].isspace(),
+    info=_lazy("simple_formats.pnm_info"), decode=_lazy("simple_formats.pnm_decode"),
+    encode=_lazy("simple_formats.pnm_encode"),
+)
+GIF = Format(
+    "gif", ("gif",), identify=lambda b: b[:6] in (b"GIF87a", b"GIF89a"),
+    # the logical screen size; one palette-indexed band, like the driver
+    info=lambda b: (*struct.unpack_from("<HH", b, 6), 1),
+    decode=_lazy("gif.decode"), encode=_lazy("gif.encode"), xmp=_lazy("gif.gif_xmp"),
+)
+BMP = Format(
+    # the header through biBitCount (bytes 28–30) must be present
+    "bmp", ("bmp",), identify=lambda b: b[:2] == b"BM" and len(b) >= 30,
+    info=_lazy("bmp.info"), decode=_lazy("bmp.decode"), encode=_lazy("bmp.encode"),
+)
+
+# Magic-byte order: the first row whose ``identify`` accepts a payload
+# owns it (the tests are mutually exclusive today).
+FORMATS = (PNG, JPEG, WEBP, TIFF, PNM, GIF, BMP)
+_BY_ALIAS = {alias: f for f in FORMATS for alias in f.aliases}
+
+
+def format_of(fmt: str) -> Format | None:
+    """The table row a ``fmt`` string (any case) names, or None."""
+    return _BY_ALIAS.get(fmt.lower())
+
+
+def _identify(buf: bytes) -> Format | None:
+    """The table row whose magic bytes ``buf`` carries, or None."""
+    return next((f for f in FORMATS if f.identify(buf)), None)
+
+
 def encode_image(arr: np.ndarray, fmt: str, compress_level: int = 6) -> bytes:
-    fmt = fmt.lower()
-    if fmt == "png":
-        return png_encode(arr, compress_level)
-    if fmt in ("jpeg", "jpg"):
-        from gdal_spark.raster import jpeg
-
-        return jpeg.encode(arr, quality=JPEG_QUALITY)
-    if fmt == "webp":
-        from gdal_spark.raster import webp
-
-        return webp.encode(arr)
-    if fmt in ("tif", "tiff", "gtiff"):
-        from gdal_spark.raster import tiff
-
-        return tiff.encode_geotiff(arr)
-    if fmt in ("pnm", "pgm", "ppm"):
-        from gdal_spark.raster import simple_formats
-
-        return simple_formats.pnm_encode(arr)
-    if fmt == "gif":
-        # CreateCopy parity (frmts/gif): a single gray/palette band —
-        # gray bytes become indices into an identity gray ramp
-        from gdal_spark.raster import gif
-
-        if arr.ndim != 2:
-            raise ValueError("gif encode expects a single (palette/gray) band")
-        ramp = np.repeat(np.arange(256, dtype=np.uint8)[:, None], 3, axis=1)
-        return gif.encode(arr, ramp)
-    raise NotImplementedError(f"codec {fmt!r} not available in this container")
+    """Encode ``arr`` as ``fmt``; ``compress_level`` is PNG's zlib
+    level."""
+    f = format_of(fmt)
+    if f is None or f.encode is None:
+        raise NotImplementedError(f"codec {fmt!r} not available in this container")
+    return f.encode(arr, compress_level)
 
 
 def decode_image(buf: bytes, fmt: str | None = None) -> np.ndarray:
+    """Decode by magic bytes; ``fmt`` only labels the error."""
     b = bytes(buf)
-    if b[:8] == PNG_SIG:
-        return png_decode(b)
-    if b[:2] == b"\xff\xd8":
-        from gdal_spark.raster import jpeg
-
-        return jpeg.decode(b)
-    if b[:4] == b"RIFF" and b[8:12] == b"WEBP":
-        from gdal_spark.raster import webp
-
-        return webp.decode(b)
-    if b[:4] in (b"II*\x00", b"MM\x00*", b"II+\x00", b"MM\x00+"):
-        from gdal_spark.raster import tiff
-
-        return tiff.decode(b)
-    if b[:2] in (b"P5", b"P6") and b[2:3].isspace():
-        from gdal_spark.raster import simple_formats
-
-        return simple_formats.pnm_decode(b)
-    if b[:6] in (b"GIF87a", b"GIF89a"):
-        from gdal_spark.raster import gif
-
-        return gif.decode(b)
-    if b[:2] == b"BM" and len(b) > 18:
-        from gdal_spark.raster import bmp
-
-        return bmp.decode(b)
-    raise NotImplementedError(
-        f"payload is not PNG/JPEG/WebP/GeoTIFF/PNM/GIF/BMP (fmt hint {fmt!r})"
-    )
+    f = _identify(b)
+    if f is None:
+        raise NotImplementedError(
+            f"payload is not {'/'.join(x.name.upper() for x in FORMATS)} "
+            f"(fmt hint {fmt!r})"
+        )
+    return f.decode(b)
 
 
 def sniff_info(buf: bytes) -> tuple[str, int, int, int]:
@@ -356,97 +411,10 @@ def sniff_info(buf: bytes) -> tuple[str, int, int, int]:
     header parse). At 100 TB this is the difference between a
     metadata-catalog scan and decoding the corpus."""
     b = bytes(buf)
-    if b[:8] == PNG_SIG:  # IHDR is always the first chunk (PNG §5.6)
-        w = int.from_bytes(b[16:20], "big")
-        h = int.from_bytes(b[20:24], "big")
-        bands = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[b[25]]
-        return "png", w, h, bands
-    if b[:2] == b"\xff\xd8":  # walk segments to SOFn (T.81 B.2.2)
-        i = 2
-        while i + 4 <= len(b):
-            if b[i] != 0xFF:
-                i += 1
-                continue
-            m = b[i + 1]
-            if m in (0xFF, 0x01) or 0xD0 <= m <= 0xD9:
-                i += 2
-                continue
-            if 0xC0 <= m <= 0xCF and m not in (0xC4, 0xC8, 0xCC):
-                h = int.from_bytes(b[i + 5 : i + 7], "big")
-                w = int.from_bytes(b[i + 7 : i + 9], "big")
-                return "jpeg", w, h, b[i + 9]
-            i += 2 + int.from_bytes(b[i + 2 : i + 4], "big")
-        raise ValueError("JPEG stream without SOF marker")
-    if b[:4] == b"RIFF" and b[8:12] == b"WEBP":
-        tag = b[12:16]
-        if tag == b"VP8L":
-            v = int.from_bytes(b[21:25], "little")  # 14-bit w-1, h-1, alpha
-            return "webp", (v & 0x3FFF) + 1, ((v >> 14) & 0x3FFF) + 1, (
-                4 if (v >> 28) & 1 else 3
-            )
-        if tag == b"VP8 ":  # lossy key frame (RFC 6386 §9.1)
-            if b[23:26] != b"\x9d\x01\x2a":
-                raise ValueError("VP8 stream without start code")
-            w = int.from_bytes(b[26:28], "little") & 0x3FFF
-            h = int.from_bytes(b[28:30], "little") & 0x3FFF
-            return "webp", w, h, 3
-        if tag == b"VP8X":  # extended container: canvas size + flags
-            flags = b[20]
-            w = int.from_bytes(b[24:27], "little") + 1
-            h = int.from_bytes(b[27:30], "little") + 1
-            return "webp", w, h, 4 if flags & 0x10 else 3
-    if b[:2] in (b"II", b"MM") and b[2:4] in (b"*\x00", b"\x00*", b"+\x00", b"\x00+"):
-        en = "<" if b[:2] == b"II" else ">"
-        magic = struct.unpack(en + "H", b[2:4])[0]
-        big = magic == 43
-        if big:  # BigTIFF: 8-byte offsets, 20-byte IFD entries
-            off = struct.unpack(en + "Q", b[8:16])[0]
-            n = struct.unpack(en + "Q", b[off : off + 8])[0]
-            hdr, step, voff = 8, 20, 12
-        else:
-            off = struct.unpack(en + "I", b[4:8])[0]
-            n = struct.unpack(en + "H", b[off : off + 2])[0]
-            hdr, step, voff = 2, 12, 8
-        tags = {}
-        for k in range(int(n)):
-            e = off + hdr + step * k
-            tag, typ = struct.unpack(en + "HH", b[e : e + 4])
-            # SHORT/LONG always; LONG8 only where the 8-byte value
-            # field exists (BigTIFF) — in classic TIFF it would read
-            # past the 4-byte offset slot into the next entry
-            if tag in (256, 257, 277) and (
-                typ in (3, 4) or (big and typ == 16)
-            ):
-                fmtc = {3: "H", 4: "I", 16: "Q"}[typ]
-                tags[tag] = struct.unpack(
-                    en + fmtc, b[e + voff : e + voff + struct.calcsize(fmtc)]
-                )[0]
-        if 256 not in tags or 257 not in tags:
-            raise ValueError(
-                "TIFF header missing ImageWidth/ImageLength size tags"
-            )
-        return "tiff", tags[256], tags[257], tags.get(277, 1)
-    if b[:6] in (b"GIF87a", b"GIF89a"):
-        w, h = struct.unpack_from("<HH", b, 6)
-        return "gif", w, h, 1  # one palette-indexed band, like the driver
-    if b[:2] == b"BM" and len(b) >= 30:
-        w, h = struct.unpack_from("<ii", b, 18)
-        (bits,) = struct.unpack_from("<H", b, 28)
-        return "bmp", w, abs(h), (1 if bits <= 8 else bits // 8)
-    if b[:2] in (b"P5", b"P6") and b[2:3].isspace():
-        toks, pos = [], 2
-        while len(toks) < 3:
-            while b[pos : pos + 1].isspace():
-                pos += 1
-            if b[pos : pos + 1] == b"#":
-                pos = b.index(b"\n", pos) + 1
-                continue
-            start = pos
-            while not b[pos : pos + 1].isspace():
-                pos += 1
-            toks.append(int(b[start:pos]))
-        return "pnm", toks[0], toks[1], 3 if b[:2] == b"P6" else 1
-    raise NotImplementedError("unrecognized header")
+    f = _identify(b)
+    if f is None:
+        raise NotImplementedError("unrecognized header")
+    return (f.name, *f.info(b))
 
 
 def psnr(a: np.ndarray, b: np.ndarray) -> float:

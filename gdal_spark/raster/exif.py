@@ -200,39 +200,22 @@ def _walk_ifd(buf: bytes, tiff0: int, ifd_off: int, e: str, names, out_raw):
     return pointers
 
 
-def find_app1_exif(jpeg: bytes):
-    """Offset/length of the APP1 Exif payload (after ``Exif\\0\\0``),
-    or ``None``. Marker scan identical in shape to the SOF sniffers."""
-    if len(jpeg) < 4 or jpeg[0:2] != b"\xff\xd8":
-        return None
-    off = 2
-    while off + 4 <= len(jpeg):
-        if jpeg[off] != 0xFF:
-            break
-        marker = jpeg[off + 1]
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            off += 2
-            continue
-        if marker == 0xDA:  # SOS — headers done
-            break
-        (seglen,) = struct.unpack_from(">H", jpeg, off + 2)
-        if marker == 0xE1 and jpeg[off + 4:off + 10] == b"Exif\x00\x00":
-            return off + 10, seglen - 8
-        off += 2 + seglen
-    return None
-
-
 def parse_exif_raw(jpeg: bytes) -> dict[str, tuple[int, object]]:
     """``EXIF_<Name>`` → (tiff_type, python values) from a JPEG buffer.
 
     Raw (unformatted) view — exact rationals as (num, den) tuples; the
     GDAL-string view is :func:`parse_exif`.
     """
-    loc = find_app1_exif(jpeg)
-    if loc is None:
-        return {}
-    start, length = loc
-    buf = jpeg[start:start + length]
+    return _parse_tiff_exif_raw(next(
+        (seg[6:] for marker, seg in _iter_segments(jpeg)
+         if marker == 0xE1 and seg[:6] == b"Exif\x00\x00"),
+        b"",
+    ))
+
+
+def _parse_tiff_exif_raw(buf: bytes) -> dict[str, tuple[int, object]]:
+    """:func:`parse_exif_raw` of a bare EXIF TIFF payload: an APP1 body
+    after ``Exif\\0\\0``, or a WebP ``EXIF`` chunk."""
     if len(buf) < 8:
         return {}
     if buf[0:2] == b"II":
@@ -295,15 +278,18 @@ def gps_decimal(raw: dict, which: str = "lat") -> float | None:
 
 
 def _iter_segments(jpeg: bytes):
-    """Yield (marker, payload) for every header segment before SOS."""
+    """Yield (marker, payload) for every header segment before SOS.
+    Stray bytes and 0xFF fill bytes before a marker are skipped, as
+    are the standalone markers TEM, RSTn, SOI and EOI (T.81 B.1.1)."""
     if len(jpeg) < 4 or jpeg[0:2] != b"\xff\xd8":
         return
     off = 2
     while off + 4 <= len(jpeg):
-        if jpeg[off] != 0xFF:
-            break
         marker = jpeg[off + 1]
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
+        if jpeg[off] != 0xFF or marker == 0xFF:
+            off += 1
+            continue
+        if marker == 0x01 or 0xD0 <= marker <= 0xD9:
             off += 2
             continue
         if marker == 0xDA:

@@ -244,13 +244,19 @@ def _lzw_encode(idx: bytes, min_code: int) -> bytes:
 
 
 def encode(
-    index: np.ndarray, palette: np.ndarray,
+    index: np.ndarray, palette: np.ndarray | None = None,
     transparent: int | None = None, interlace: bool = False,
     background: int = 0,
 ) -> bytes:
     """Indices + palette → GIF89a bytes (first-frame writer, the
-    CreateCopy surface of the reference driver)."""
+    CreateCopy surface of the reference driver: a single gray/palette
+    band). Without ``palette``, gray bytes become indices into an
+    identity gray ramp."""
     index = np.asarray(index, dtype=np.uint8)
+    if index.ndim != 2:
+        raise ValueError("gif encode expects a single (palette/gray) band")
+    if palette is None:
+        palette = np.repeat(np.arange(256, dtype=np.uint8)[:, None], 3, axis=1)
     h, w = index.shape
     palette = np.asarray(palette, dtype=np.uint8).reshape(-1, 3)
     bits = max(1, int(np.ceil(np.log2(max(len(palette), 2)))))

@@ -34,6 +34,8 @@ from array import array
 
 import numpy as np
 
+from gdal_spark.raster.exif import _iter_segments
+
 # ---------------------------------------------------------------------------
 # Constants (ITU-T T.81 Annex K — public spec tables)
 # ---------------------------------------------------------------------------
@@ -954,6 +956,14 @@ def _ac_records(win: np.ndarray, win16: np.ndarray, lut: np.ndarray) -> array:
     out = array("i")
     out.frombytes(rec.tobytes())
     return out
+
+
+def info(buf: bytes) -> tuple[int, int, int]:
+    """(w, h, components) from the SOFn segment alone (T.81 B.2.2)."""
+    for marker, seg in _iter_segments(buf):
+        if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
+            return int.from_bytes(seg[3:5], "big"), int.from_bytes(seg[1:3], "big"), seg[5]
+    raise ValueError("JPEG stream without SOF marker")
 
 
 def decode(

@@ -17,6 +17,10 @@ exposes as GDAL metadata domains —
 Parity is pinned by the reference's own cross-driver matrix
 (``autotest/gdrivers/xmp.py``) in ``tests/test_metadata.py``.
 
+:func:`image_xmp` and :func:`image_metadata` pick the collector from
+the ``xmp`` and ``metadata`` hooks of the ``fmt``'s row in
+:data:`gdal_spark.raster.codec.FORMATS`.
+
 All of it is header-scan work per image — a map-only column transform
 at corpus scale, same posture as :func:`gdal_spark.raster.exif
 .with_exif`.
@@ -27,25 +31,12 @@ from __future__ import annotations
 import struct
 import zlib
 
+from gdal_spark.raster import codec
 from gdal_spark.raster import exif as _exif
+from gdal_spark.raster.codec import png_chunks
 
 # ---------------------------------------------------------------------------
 # PNG
-
-
-def png_chunks(buf: bytes):
-    """Yield (type, data) for each PNG chunk."""
-    if buf[:8] != b"\x89PNG\r\n\x1a\n":
-        return
-    off = 8
-    while off + 8 <= len(buf):
-        (ln,) = struct.unpack_from(">I", buf, off)
-        ctype = buf[off + 4:off + 8]
-        data = buf[off + 8:off + 8 + ln]
-        yield ctype, data
-        off += 12 + ln  # length + type + data + crc
-        if ctype == b"IEND":
-            break
 
 
 def _munge_key(k: str) -> str:
@@ -142,29 +133,18 @@ def png_icc_profile(buf: bytes):
 
 def build_png_text_chunk(key: str, value: str) -> bytes:
     """A spec-shaped tEXt chunk (write side / fixtures)."""
-    data = key.encode("latin-1") + b"\x00" + value.encode("latin-1")
-    body = b"tEXt" + data
-    return (
-        struct.pack(">I", len(data)) + body
-        + struct.pack(">I", zlib.crc32(body) & 0xFFFFFFFF)
-    )
+    return codec._chunk(b"tEXt", key.encode("latin-1") + b"\x00" + value.encode("latin-1"))
 
 
 def build_png_itxt_xmp(xmp: str) -> bytes:
-    data = (
-        _PNG_XMP_KEYWORD + b"\x00\x00\x00" + b"\x00" + b"\x00"
-        + xmp.encode("utf-8")
-    )
-    body = b"iTXt" + data
-    return (
-        struct.pack(">I", len(data)) + body
-        + struct.pack(">I", zlib.crc32(body) & 0xFFFFFFFF)
+    return codec._chunk(
+        b"iTXt", _PNG_XMP_KEYWORD + b"\x00\x00\x00" + b"\x00" + b"\x00" + xmp.encode("utf-8")
     )
 
 
 def insert_png_chunks(png: bytes, chunks: list[bytes]) -> bytes:
     """Insert raw chunks right after IHDR."""
-    if png[:8] != b"\x89PNG\r\n\x1a\n":
+    if not codec.PNG.identify(png):
         raise ValueError("not a PNG")
     (ln,) = struct.unpack_from(">I", png, 8)
     end_ihdr = 8 + 12 + ln
@@ -175,24 +155,18 @@ def insert_png_chunks(png: bytes, chunks: list[bytes]) -> bytes:
 # WebP
 
 
-def _webp_chunks(buf: bytes):
-    if buf[:4] != b"RIFF" or buf[8:12] != b"WEBP":
-        return
-    off = 12
-    while off + 8 <= len(buf):
-        tag = buf[off:off + 4]
-        (ln,) = struct.unpack_from("<I", buf, off + 4)
-        yield tag, buf[off + 8:off + 8 + ln]
-        off += 8 + ln + (ln & 1)
+def _webp_chunk(buf: bytes, *tags: bytes) -> bytes | None:
+    """Payload of the first RIFF chunk whose fourcc is one of ``tags``."""
+    from gdal_spark.raster.webp import chunks
+
+    return next((data for tag, data in chunks(buf) if tag in tags), None)
 
 
 def webp_xmp(buf: bytes) -> str | None:
     """webpdataset.cpp:265: the ``META`` chunk is served as xml:XMP;
     modern libwebp mux writes ``XMP `` — both accepted."""
-    for tag, data in _webp_chunks(buf):
-        if tag in (b"META", b"XMP "):
-            return data.rstrip(b"\x00").decode("utf-8", "replace")
-    return None
+    data = _webp_chunk(buf, b"META", b"XMP ")
+    return None if data is None else data.rstrip(b"\x00").decode("utf-8", "replace")
 
 
 def webp_exif(buf: bytes) -> dict[str, str]:
@@ -200,33 +174,21 @@ def webp_exif(buf: bytes) -> dict[str, str]:
     APP1, with or without the ``Exif\\0\\0`` prefix. (The reference's
     WebP driver exposes only XMP; this extends the same parse to the
     container's standard EXIF chunk.)"""
-    for tag, data in _webp_chunks(buf):
-        if tag == b"EXIF":
-            if data[:6] == b"Exif\x00\x00":
-                data = data[6:]
-            return {
-                name: _exif._format_value(vtype, values)
-                for name, (vtype, values) in _exif_tiff_raw(data).items()
-            }
-    return {}
+    data = _webp_chunk(buf, b"EXIF")
+    if data is None:
+        return {}
+    if data[:6] == b"Exif\x00\x00":
+        data = data[6:]
+    return {
+        name: _exif._format_value(vtype, values)
+        for name, (vtype, values) in _exif._parse_tiff_exif_raw(data).items()
+    }
 
 
 def webp_icc_profile(buf: bytes) -> bytes | None:
     """``ICCP`` chunk of a VP8X container."""
-    for tag, data in _webp_chunks(buf):
-        if tag == b"ICCP":
-            return bytes(data)
-    return None
-
-
-def _exif_tiff_raw(tiff_buf: bytes):
-    """Raw EXIF dict from a bare TIFF payload (shared with exif.py)."""
-    fake = (
-        b"\xff\xd8\xff\xe1"
-        + struct.pack(">H", len(tiff_buf) + 8)
-        + b"Exif\x00\x00" + tiff_buf + b"\xff\xd9"
-    )
-    return _exif.parse_exif_raw(fake)
+    data = _webp_chunk(buf, b"ICCP")
+    return None if data is None else bytes(data)
 
 
 # ---------------------------------------------------------------------------
@@ -249,48 +211,41 @@ def tiff_xmp(buf: bytes) -> str | None:
 
 
 # ---------------------------------------------------------------------------
-# dispatch
+# ``metadata`` hooks of the codec.FORMATS rows:
+# (default-domain items, ICC profile bytes or None, ICC profile name)
+
+
+def _jpeg_metadata(buf: bytes):
+    return _exif.parse_exif(buf), _exif.parse_icc_profile(buf), "ICC Profile"
+
+
+def _png_metadata(buf: bytes):
+    name, icc = png_icc_profile(buf) or (None, None)
+    return png_text(buf), icc, name
+
+
+def _webp_metadata(buf: bytes):
+    return webp_exif(buf), webp_icc_profile(buf), "ICC Profile"
+
+
+# ---------------------------------------------------------------------------
+# lookups by fmt
 
 
 def image_xmp(buf: bytes, fmt: str) -> str | None:
     """XMP packet by format — the reference's cross-driver xml:XMP
     surface (autotest/gdrivers/xmp.py matrix)."""
-    f = fmt.lower()
-    if f in ("jpeg", "jpg"):
-        return _exif.parse_xmp(bytes(buf))
-    if f == "png":
-        return png_xmp(bytes(buf))
-    if f == "webp":
-        return webp_xmp(bytes(buf))
-    if f in ("tif", "tiff", "gtiff", "cog"):
-        return tiff_xmp(bytes(buf))
-    if f == "gif":
-        from gdal_spark.raster.gif import gif_xmp
-
-        return gif_xmp(bytes(buf))
-    return None
+    f = codec.format_of(fmt)
+    return f.xmp(bytes(buf)) if f and f.xmp else None
 
 
 def image_metadata(buf: bytes, fmt: str) -> dict[str, dict[str, str]]:
     """domain → items, GDAL-style: '' (EXIF for JPEG, text chunks for
     PNG), 'xml:XMP', 'COLOR_PROFILE'."""
     buf = bytes(buf)
-    f = fmt.lower()
+    f = codec.format_of(fmt)
+    default, icc, icc_name = f.metadata(buf) if f and f.metadata else ({}, None, None)
     out: dict[str, dict[str, str]] = {}
-    default: dict[str, str] = {}
-    icc = None
-    if f in ("jpeg", "jpg"):
-        default = _exif.parse_exif(buf)
-        icc = _exif.parse_icc_profile(buf)
-        icc_name = "ICC Profile"
-    elif f == "png":
-        default = png_text(buf)
-        got = png_icc_profile(buf)
-        icc, icc_name = (got[1], got[0]) if got else (None, None)
-    elif f == "webp":
-        default = webp_exif(buf)
-        icc = webp_icc_profile(buf)
-        icc_name = "ICC Profile"
     if default:
         out[""] = default
     xmp = image_xmp(buf, fmt)

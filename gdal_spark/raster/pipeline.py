@@ -7,7 +7,8 @@ image-table operators here and in the sibling raster modules share:
 
 - it clamps the Arrow batch size once, when the plan is built
   (``session.ensure_pixel_batch_size``);
-- it decodes each row's ``bytes`` once with ``codec.decode_image``;
+- it decodes each row's ``bytes`` once with ``codec.decode_image``,
+  which picks the ``codec.FORMATS`` row by magic bytes, not ``fmt``;
 - ``fn(r, arr)`` is a generator that yields output rows as tuples in
   the column order of the DDL ``schema``, so 1→1 and 1→N operators
   share one contract;
@@ -104,7 +105,7 @@ def translate(
     def fn(r, arr):
         from gdal_spark.raster import exif as _exif
 
-        if apply_orientation and r.fmt in ("jpeg", "jpg"):
+        if apply_orientation and codec.format_of(r.fmt) is codec.JPEG:
             md = _exif.parse_exif(bytes(r.bytes))
             o = int(md.get("EXIF_Orientation", "1"))
             arr = _exif.apply_exif_orientation(arr, o)

@@ -154,11 +154,9 @@ def pnm_encode(arr: np.ndarray) -> bytes:
     return head.encode("ascii") + body
 
 
-def pnm_decode(buf: bytes) -> np.ndarray:
-    b = bytes(buf)
-    if b[:2] not in (b"P5", b"P6"):
-        raise ValueError("not a binary PNM payload")
-    # header = magic, width, height, maxval tokens (comments allowed)
+def _pnm_header(b: bytes) -> tuple[int, int, int, int]:
+    """(w, h, maxval, offset of the first sample): the tokens after
+    the magic, ``#`` comments allowed, then one whitespace byte."""
     tokens, pos = [], 2
     while len(tokens) < 3:
         while pos < len(b) and b[pos:pos + 1].isspace():
@@ -170,8 +168,20 @@ def pnm_decode(buf: bytes) -> np.ndarray:
         while pos < len(b) and not b[pos:pos + 1].isspace():
             pos += 1
         tokens.append(int(b[start:pos]))
-    pos += 1  # single whitespace after maxval
-    w, h, maxval = tokens
+    return tokens[0], tokens[1], tokens[2], pos + 1
+
+
+def pnm_info(buf: bytes) -> tuple[int, int, int]:
+    """(w, h, bands) from the header alone."""
+    w, h, _, _ = _pnm_header(buf)
+    return w, h, 3 if buf[:2] == b"P6" else 1
+
+
+def pnm_decode(buf: bytes) -> np.ndarray:
+    b = bytes(buf)
+    if b[:2] not in (b"P5", b"P6"):
+        raise ValueError("not a binary PNM payload")
+    w, h, maxval, pos = _pnm_header(b)
     # 2-byte samples are big-endian per the Netpbm spec (pnm(5))
     dt = np.dtype(">u2") if maxval > 255 else np.dtype("u1")
     n = w * h * (3 if b[:2] == b"P6" else 1)

@@ -97,14 +97,17 @@ def _read_header(buf: bytes):
     raise ValueError(f"not a TIFF: magic {magic}")
 
 
+def _ifd_layout(buf: bytes, bo: str, big: bool, off: int):
+    """(entry count, first entry, entry size, count/offset format,
+    value-field size) of the IFD at ``off``."""
+    if big:
+        return struct.unpack_from(bo + "Q", buf, off)[0], off + 8, 20, "Q", 8
+    return struct.unpack_from(bo + "H", buf, off)[0], off + 2, 12, "I", 4
+
+
 def _read_ifd(buf: bytes, bo: str, big: bool, off: int):
     """Return ({tag: python value(s)}, next_ifd_offset)."""
-    if big:
-        (n,) = struct.unpack_from(bo + "Q", buf, off)
-        ent0, esz, cnt_fmt, inline = off + 8, 20, "Q", 8
-    else:
-        (n,) = struct.unpack_from(bo + "H", buf, off)
-        ent0, esz, cnt_fmt, inline = off + 2, 12, "I", 4
+    n, ent0, esz, cnt_fmt, inline = _ifd_layout(buf, bo, big, off)
     tags = {}
     for i in range(n):
         e = ent0 + i * esz
@@ -131,6 +134,24 @@ def _read_ifd(buf: bytes, bo: str, big: bool, off: int):
         tags[tag] = vals[0] if count == 1 else vals
     (nxt,) = struct.unpack_from(bo + cnt_fmt, buf, ent0 + n * esz)
     return tags, nxt
+
+
+def info(buf: bytes) -> tuple[int, int, int]:
+    """(w, h, samples per pixel) from the first IFD's size tags alone."""
+    bo, big, off = _read_header(buf)
+    n, ent0, esz, _, inline = _ifd_layout(buf, bo, big, off)
+    sizes = {}
+    for i in range(n):
+        e = ent0 + i * esz
+        tag, typ = struct.unpack_from(bo + "HH", buf, e)
+        # SHORT/LONG always; LONG8 only where the 8-byte value field
+        # exists (BigTIFF) — in classic TIFF it would read past the
+        # 4-byte offset slot into the next entry
+        if tag in (256, 257, 277) and (typ in (3, 4) or (big and typ == 16)):
+            (sizes[tag],) = struct.unpack_from(bo + _TYPES[typ][0], buf, e + esz - inline)
+    if 256 not in sizes or 257 not in sizes:
+        raise ValueError("TIFF header missing ImageWidth/ImageLength size tags")
+    return sizes[256], sizes[257], sizes.get(277, 1)
 
 
 def _as_list(v):

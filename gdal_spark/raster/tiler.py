@@ -31,7 +31,8 @@ stage over the raw ancestor canvases, three levels per round; only
 those rounds are persisted.
 
 Resume = anti-join against the tile manifest (replacing the
-reference's per-file existence checks, gdal2tiles.py:2852-2855);
+reference's per-file existence checks, gdal2tiles.py:2852-2855), of
+base tiles whose whole ancestry is done and of finished tiles;
 per-partition lineage + metrics rows are appended on every run
 (north-rule checkpointing). Writes are parquet partitioned by ``z``
 ((z, x) directory layout ≈ the XYZ disk layout; swap for Iceberg
@@ -114,6 +115,7 @@ _EMIT_BATCH = 32  # finished tiles per yielded Arrow batch
 
 def _render_partials(
     images: DataFrame,
+    min_zoom: int,
     zoom: int,
     tile_size: int,
     resampling: str,
@@ -161,9 +163,18 @@ def _render_partials(
             .withColumnRenamed("_ty", "wty")
         )
     if resume_manifest is not None:
-        done = resume_manifest.select(
-            F.col("z"), F.col("tx").alias("_mtx"), F.col("ty").alias("_mty")
-        ).filter(F.col("z") == zoom)
+        # a base tile whose ancestors down to min_zoom are all done
+        done = resume_manifest.filter(F.col("z") == zoom).select(
+            F.col("tx").alias("_mtx"), F.col("ty").alias("_mty")
+        )
+        for z in range(min_zoom, zoom):
+            up = resume_manifest.filter(F.col("z") == z)
+            done = done.join(
+                up,
+                (F.shiftright(done["_mtx"], zoom - z) == up["tx"])
+                & (F.shiftright(done["_mty"], zoom - z) == up["ty"]),
+                "left_semi",
+            )
         work = work.join(
             done,
             (work["wtx"] == done["_mtx"]) & (work["wty"] == done["_mty"]),
@@ -372,12 +383,15 @@ def build_pyramid(
     its partials; only those rounds are persisted (tracked), because
     they feed both the output union and the next round. The 4→1
     overview recurrence is profile-agnostic (both schemes halve both
-    tile axes per level)."""
+    tile axes per level).
+
+    With ``resume_manifest`` the result is the full pyramid anti-joined
+    with the manifest on (z, tx, ty), tile for tile the same bytes."""
     from gdal_spark.cache import release_all, track_persist
 
     release_all()
     parts = _render_partials(
-        images, max_zoom, tile_size, resampling, resume_manifest, profile
+        images, min_zoom, max_zoom, tile_size, resampling, resume_manifest, profile
     )
     top, done = max_zoom, None
     while True:
@@ -394,6 +408,10 @@ def build_pyramid(
             rnd = rnd.drop("raw")
         done = rnd if done is None else done.unionByName(rnd)
         if last:
+            if resume_manifest is not None:
+                done = done.join(
+                    resume_manifest.select("z", "tx", "ty"), ["z", "tx", "ty"], "left_anti"
+                )
             return done
         top = bottom
 

@@ -476,9 +476,9 @@ def _build_code_from_counts(
     return rev, lens
 
 
-def encode(arr: np.ndarray) -> bytes:
-    """Encode HxW (gray), HxWx3 (RGB) or HxWx4 (RGBA) uint8 as a
-    lossless WebP (VP8L) file. Gray is stored as R=G=B."""
+def _planes(arr: np.ndarray):
+    """(h, w, r, g, b, flat alpha, alpha used) of a gray, RGB or RGBA
+    uint8 image within VP8L's 14-bit sizes; gray is stored as R=G=B."""
     arr = np.ascontiguousarray(arr, dtype=np.uint8)
     if arr.ndim == 2:
         r = g = b = arr
@@ -495,6 +495,20 @@ def encode(arr: np.ndarray) -> bytes:
         raise ValueError(f"VP8L dimensions out of range: {w}x{h}")
     alpha_used = a is not None and bool((a != 255).any())
     av = (a if a is not None else np.full((h, w), 255, dtype=np.uint8)).ravel()
+    return h, w, r, g, b, av, alpha_used
+
+
+def _vp8l_file(bits: bytes) -> bytes:
+    """A VP8L bitstream (after its 0x2f signature) as a RIFF/WEBP file."""
+    payload = b"\x2f" + bits + b"\x00" * ((len(bits) + 1) & 1)
+    riff = b"WEBP" + b"VP8L" + struct.pack("<I", len(bits) + 1) + payload
+    return b"RIFF" + struct.pack("<I", len(riff)) + riff
+
+
+def encode(arr: np.ndarray) -> bytes:
+    """Encode HxW (gray), HxWx3 (RGB) or HxWx4 (RGBA) uint8 as a
+    lossless WebP (VP8L) file. Gray is stored as R=G=B."""
+    h, w, r, g, b, av, alpha_used = _planes(arr)
     gv, rv, bv = g.ravel(), r.ravel(), b.ravel()
 
     tw = _TokenWriter()
@@ -527,12 +541,7 @@ def encode(arr: np.ndarray) -> bytes:
     lens[:, 3] = a_len[av]
     tw.extend_arrays(vals.ravel(), lens.ravel())
 
-    payload = b"\x2f" + tw.pack()
-    chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
-    if len(payload) & 1:
-        chunk += b"\x00"
-    riff = b"WEBP" + chunk
-    return b"RIFF" + struct.pack("<I", len(riff)) + riff
+    return _vp8l_file(tw.pack())
 
 
 # ---------------------------------------------------------------------------
@@ -612,24 +621,9 @@ def encode_lz77(
     (``frmts/webp/webpdataset.cpp:1210`` decodes these via libwebp).
     Lossless: decode(encode_lz77(a)) == a exactly. Distances 1 and
     ``width`` exercise the 2-D distance plane-code table both ways."""
-    arr = np.ascontiguousarray(arr, dtype=np.uint8)
-    if arr.ndim == 2:
-        r = g = b = arr
-        a = None
-    elif arr.ndim == 3 and arr.shape[2] == 3:
-        r, g, b = arr[:, :, 0], arr[:, :, 1], arr[:, :, 2]
-        a = None
-    elif arr.ndim == 3 and arr.shape[2] == 4:
-        r, g, b, a = (arr[:, :, i] for i in range(4))
-    else:
-        raise ValueError(f"unsupported array shape {arr.shape}")
-    h, w = arr.shape[:2]
-    if not (0 < w <= 1 << 14 and 0 < h <= 1 << 14):
-        raise ValueError(f"VP8L dimensions out of range: {w}x{h}")
+    h, w, r, g, b, av, alpha_used = _planes(arr)
     if not 0 <= cache_bits <= 11:
         raise ValueError("cache_bits must be 0..11")
-    alpha_used = a is not None and bool((a != 255).any())
-    av = (a if a is not None else np.full((h, w), 255, dtype=np.uint8)).ravel()
     pixv = (
         (av.astype(np.uint32) << 24)
         | (r.ravel().astype(np.uint32) << 16)
@@ -713,12 +707,7 @@ def encode_lz77(
             gi = 280 + t[1]
             tw.put(int(g_rev[gi]), int(g_len[gi]))
 
-    payload = b"\x2f" + tw.pack()
-    chunk = b"VP8L" + struct.pack("<I", len(payload)) + payload
-    if len(payload) & 1:
-        chunk += b"\x00"
-    riff = b"WEBP" + chunk
-    return b"RIFF" + struct.pack("<I", len(riff)) + riff
+    return _vp8l_file(tw.pack())
 
 
 # ---------------------------------------------------------------------------
@@ -789,6 +778,37 @@ def _read_code(br: _BitReader, alphabet: int) -> _PrefixCode:
     return _PrefixCode(lengths)
 
 
+def chunks(buf: bytes):
+    """Yield (fourcc, payload) for each RIFF chunk of a WebP file."""
+    if buf[:4] != b"RIFF" or buf[8:12] != b"WEBP":
+        return
+    off = 12
+    while off + 8 <= len(buf):
+        tag = buf[off:off + 4]
+        (ln,) = struct.unpack_from("<I", buf, off + 4)
+        yield tag, buf[off + 8:off + 8 + ln]
+        off += 8 + ln + (ln & 1)
+
+
+def info(buf: bytes) -> tuple[int, int, int]:
+    """(w, h, bands) from the first chunk's header: VP8L, a lossy VP8
+    key frame (RFC 6386 §9.1) or the VP8X canvas."""
+    tag, d = next(chunks(buf), (None, b""))
+    if tag == b"VP8L":
+        v = int.from_bytes(d[1:5], "little")  # 14-bit w-1, h-1, alpha
+        return (v & 0x3FFF) + 1, ((v >> 14) & 0x3FFF) + 1, 4 if (v >> 28) & 1 else 3
+    if tag == b"VP8 ":
+        if d[3:6] != b"\x9d\x01\x2a":
+            raise ValueError("VP8 stream without start code")
+        w, h = struct.unpack_from("<HH", d, 6)
+        return w & 0x3FFF, h & 0x3FFF, 3
+    if tag == b"VP8X":  # flags, 3 reserved bytes, 24-bit w-1 and h-1
+        w = int.from_bytes(d[4:7], "little") + 1
+        h = int.from_bytes(d[7:10], "little") + 1
+        return w, h, 4 if d[0] & 0x10 else 3
+    raise NotImplementedError("WebP without a VP8, VP8L or VP8X chunk first")
+
+
 def decode(buf: bytes) -> np.ndarray:
     """Decode a lossless WebP (VP8L) file — the no-transform /
     no-cache / no-meta literal subset (everything :func:`encode`
@@ -796,19 +816,15 @@ def decode(buf: bytes) -> np.ndarray:
     b = bytes(buf)
     if b[:4] != b"RIFF" or b[8:12] != b"WEBP":
         raise ValueError("not a WebP (RIFF/WEBP) container")
-    off = 12
     payload = None
-    while off + 8 <= len(b):
-        tag = b[off : off + 4]
-        (ln,) = struct.unpack_from("<I", b, off + 4)
+    for tag, data in chunks(b):
         if tag == b"VP8L":
-            payload = b[off + 8 : off + 8 + ln]
+            payload = data
             break
         if tag in (b"VP8 ", b"VP8X"):
             # lossy VP8 / extended container: the cluster codec library
             # (capability-probed; frmts/webp/webpdataset.cpp:1210 path)
             return _decode_via_libwebp(b)
-        off += 8 + ln + (ln & 1)
     if payload is None:
         raise ValueError("no VP8L chunk found")
     if payload[0] != 0x2F:

@@ -4,10 +4,12 @@
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 import pytest
 
-from gdal_spark.raster import codec
+from gdal_spark.raster import codec, tiff
 
 
 @pytest.mark.parametrize(
@@ -46,6 +48,109 @@ def test_sniff_jpeg_skips_app_segments():
     patched = buf[:2] + app1 + buf[2:]
     drv, w, h, b = codec.sniff_info(patched)
     assert (drv, w, h, b) == ("jpeg", 6, 4, 3)
+
+
+_H, _W = 6, 11  # odd, non-square: catches w/h swaps
+
+
+def _px(*shape, dtype=np.uint8):
+    return np.random.default_rng(3).integers(0, np.iinfo(dtype).max, (_H, _W, *shape), dtype=dtype)
+
+
+def _libwebp():
+    from gdal_spark.native import webp_lib
+
+    if webp_lib.get_libwebp() is None:
+        pytest.skip("libwebp not available on this host")
+    return webp_lib
+
+
+def _vp8x() -> bytes:
+    """An RGBA VP8L file's chunk re-wrapped in an extended (VP8X)
+    container with the alpha flag set; decoding it takes libwebp."""
+    _libwebp()
+    vp8l = codec.encode_image(_px(4), "webp")
+    vp8x = bytes([0x10, 0, 0, 0])
+    vp8x += (_W - 1).to_bytes(3, "little") + (_H - 1).to_bytes(3, "little")
+    riff = b"WEBP" + b"VP8X" + struct.pack("<I", len(vp8x)) + vp8x + vp8l[12:]
+    return b"RIFF" + struct.pack("<I", len(riff)) + riff
+
+
+# (encoder, expected sniff_info, expected decode_image shape)
+_TABLE_CASES = {
+    "png-gray8": (lambda: codec.encode_image(_px(), "png"), ("png", _W, _H, 1), (_H, _W)),
+    "png-gray16": (
+        lambda: codec.encode_image(_px(dtype=np.uint16), "png"), ("png", _W, _H, 1), (_H, _W),
+    ),
+    "png-rgb": (lambda: codec.encode_image(_px(3), "png"), ("png", _W, _H, 3), (_H, _W, 3)),
+    "png-rgba": (lambda: codec.encode_image(_px(4), "png"), ("png", _W, _H, 4), (_H, _W, 4)),
+    "jpeg": (lambda: codec.encode_image(_px(3), "jpg"), ("jpeg", _W, _H, 3), (_H, _W, 3)),
+    "webp-vp8l": (lambda: codec.encode_image(_px(3), "webp"), ("webp", _W, _H, 3), (_H, _W, 3)),
+    "webp-vp8x": (_vp8x, ("webp", _W, _H, 4), (_H, _W, 4)),
+    "webp-vp8": (
+        lambda: _libwebp().encode_rgb(_px(3), quality=90), ("webp", _W, _H, 3), (_H, _W, 3),
+    ),
+    "tiff": (lambda: codec.encode_image(_px(3), "gtiff"), ("tiff", _W, _H, 3), (_H, _W, 3)),
+    "bigtiff": (
+        lambda: tiff.encode_geotiff(_px(3), bigtiff=True), ("tiff", _W, _H, 3), (_H, _W, 3),
+    ),
+    "pnm-p5": (lambda: codec.encode_image(_px(), "pgm"), ("pnm", _W, _H, 1), (_H, _W)),
+    "pnm-p6": (lambda: codec.encode_image(_px(3), "ppm"), ("pnm", _W, _H, 3), (_H, _W, 3)),
+    "gif": (lambda: codec.encode_image(_px(), "gif"), ("gif", _W, _H, 1), (_H, _W, 3)),
+    "bmp-8": (lambda: codec.encode_image(_px(), "bmp"), ("bmp", _W, _H, 1), (_H, _W, 3)),
+    "bmp-24": (lambda: codec.encode_image(_px(3), "bmp"), ("bmp", _W, _H, 3), (_H, _W, 3)),
+}
+
+
+def test_table_cases_cover_every_format():
+    assert {c[1][0] for c in _TABLE_CASES.values()} == {f.name for f in codec.FORMATS}
+
+
+@pytest.mark.parametrize("case", list(_TABLE_CASES))
+def test_format_table_sniff_and_decode(case):
+    """Every row of codec.FORMATS: the header sniff of an encoded
+    payload and the shape its decode returns."""
+    encode, info, shape = _TABLE_CASES[case]
+    buf = encode()
+    assert codec.sniff_info(buf) == info
+    assert codec.decode_image(buf).shape == shape
+
+
+def _unrecognized(fn, buf, message) -> bool:
+    try:
+        fn(buf)
+    except NotImplementedError as e:
+        return message in str(e)
+    except Exception:  # a format accepted the blob, then failed on it
+        pass
+    return False
+
+
+_BLOBS = {
+    "zeros": b"\x00" * 64,
+    # BM shorter than the bit count at bytes 28-30, then long enough
+    "bmp-19": b"BM" + b"\x00" * 17,
+    "bmp-29": b"BM" + b"\x00" * 27,
+    "bmp-30": b"BM" + b"\x00" * 28,
+    "tiff-II00*": b"II\x00*" + b"\x00" * 12,  # mixed byte-order magics
+    "tiff-MM*0": b"MM*\x00" + b"\x00" * 12,
+    "tiff-II*0": b"II*\x00" + b"\x00" * 12,
+    "pnm-p5": b"P5 2 2 255\n" + b"\x00" * 4,
+    "pnm-p5x": b"P5x",
+    "gif": b"GIF89a" + b"\x00" * 8,
+    "webp-alph-first": b"RIFF\x00\x00\x00\x00WEBPALPH\x00\x00\x00\x00",
+    "jpeg-soi-eoi": b"\xff\xd8\xff\xd9",
+    "png-sig-only": codec.PNG_SIG,
+}
+
+
+@pytest.mark.parametrize("blob", list(_BLOBS))
+def test_decode_and_sniff_accept_the_same_blobs(blob):
+    """Each magic test is written once, in its codec.FORMATS row."""
+    buf = _BLOBS[blob]
+    assert _unrecognized(codec.decode_image, buf, "payload is not") == _unrecognized(
+        codec.sniff_info, buf, "unrecognized header"
+    )
 
 
 def test_layer_summary(spark):

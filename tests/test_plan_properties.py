@@ -1,11 +1,15 @@
 """Plan properties of the tile pyramid: the shape of the physical plan
-and the task count of its Python stages, not just its output."""
+and the task count of its Python stages, not just its output. Also
+the header-only ``raster_info`` scan."""
+
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
+import __spark_entry__ as E
 from gdal_spark import cache
-from gdal_spark.plans.inspect import simple_plan
+from gdal_spark.plans.inspect import formatted_plan, simple_plan
 from gdal_spark.raster import tiler
 from gdal_spark.sources import synth
 
@@ -77,3 +81,12 @@ def test_persisted_round_is_coalesced(spark, images):
     assert len(cached) == 1
     assert 0 < cached[0].numCachedPartitions() < n, (cached[0].numCachedPartitions(), n)
     cache.release_all()
+
+
+def test_raster_info_header_sniff_is_map_only(spark, sf_dir):
+    """The header sniff neither joins nor shuffles: the only Exchanges
+    are the two the synth source adds (its deterministic spread and
+    the post-filter load-balancing repartition)."""
+    plan = formatted_plan(E.queries()["raster_info"](spark, sf_dir))
+    assert "Join" not in plan, plan
+    assert len(re.findall(r"^\(\d+\) Exchange", plan, flags=re.M)) <= 2, plan

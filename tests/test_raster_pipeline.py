@@ -148,6 +148,25 @@ def test_pyramid_and_resume(imgs, spark, tmp_path):
     assert {"run_id", "n_tiles", "bytes", "wall_sec"} <= set(metrics.columns)
 
 
+def test_partial_resume_is_full_pyramid_minus_manifest(imgs):
+    """A manifest holding part of the base level (the z=11 tiles with
+    even tx): the resumed pyramid is the full one anti-joined with the
+    manifest, each tile once and byte-identical — overviews above the
+    remaining base tiles are composed from all their base tiles."""
+    def key(t):
+        return t.z, t.tx, t.ty
+
+    full = tiler.build_pyramid(imgs, 9, 11).collect()
+    done = {key(t) for t in full if t.z == 11 and t.tx % 2 == 0}
+    want = {key(t): t for t in full if key(t) not in done}
+    manifest = imgs.sparkSession.createDataFrame(sorted(done), "z int, tx int, ty int")
+    got = tiler.build_pyramid(imgs, 9, 11, resume_manifest=manifest).collect()
+    assert done and {9, 10} <= {z for z, _, _ in want}
+    assert len(got) == len({key(t) for t in got}) == len(want)
+    for t in got:
+        assert t == want[key(t)], key(t)
+
+
 def test_geodetic_tiles_vs_oracle(imgs):
     """Geodetic profile render (plate carrée): distributed tiles equal
     the single-node warp of the same GlobalGeodetic tile bounds."""

@@ -246,15 +246,6 @@ def main():
                 assert _n_exchanges(p) <= 2, "partial->final agg exchanges only"
                 assert "Join" not in p
                 checks.append("ogr_info: UDF-free single-pass agg OK")
-            if name == "raster_info":
-                # header sniff is map-only past the synth re-spread
-                p = PI.formatted_plan(df)
-                assert "Join" not in p, "header sniff must not join"
-                # the two exchanges are synth's deterministic spread +
-                # the post-filter load-balancing repartition; the sniff
-                # itself adds none
-                assert _n_exchanges(p) <= 2, "only the synth re-spreads"
-                checks.append("raster_info: map-only header sniff OK")
             if name == "st_spatialite_misc":
                 p = PI.formatted_plan(df)
                 assert "Join" not in p, "ST_ misc is per-row, no joins"
