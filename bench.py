@@ -6,9 +6,8 @@ per-query wall seconds for the operator suite at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]``.
 
-Scaling-efficiency evidence (two-cluster-size criterion) is produced
-by ``tools/scaling_bench.py`` (local[8] vs local[32]) and recorded in
-``BENCH.md``.
+The repo's comparable benchmark is ``perfbench/`` (``BENCHMARK.json``);
+the scaling figures in ``BENCH.md`` are round records from 32 vCPUs.
 """
 
 from __future__ import annotations

@@ -28,10 +28,12 @@ from __future__ import annotations
 
 import io
 import os
+from typing import TYPE_CHECKING
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
 
 # ---------------------------------------------------------------------------
 # AAIGrid
@@ -248,6 +250,8 @@ def read_envi_window(spark: SparkSession, base: str, band: int,
     requested band's bytes; BIL/BIP necessarily read their block's
     interleaved band data (inherent to the layout — same bytes GDAL's
     RawRasterBand touches) and slice the band out in NumPy."""
+    import pandas as pd
+
     h = read_envi_header(base)
     if not (0 <= row0 < row1 <= h["lines"] and 0 <= col0 < col1 <= h["samples"]):
         raise ValueError("window out of bounds")

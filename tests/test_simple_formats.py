@@ -7,6 +7,8 @@ Reference drivers: ``frmts/aaigrid/aaigriddataset.cpp``,
 """
 
 import os
+import subprocess
+import sys
 import tempfile
 
 import numpy as np
@@ -141,3 +143,22 @@ def test_pnm_16bit_roundtrip():
         assert np.array_equal(out, a)
     # header declares the 16-bit maxval and big-endian body
     assert b"65535" in SF.pnm_encode(g16)[:20]
+
+
+def test_pnm_decode_imports_neither_pandas_nor_pyspark():
+    """Decoding a PNM blob loads ``simple_formats`` but not the Spark
+    stack: pandas and pyspark are imported by the ENVI window reader
+    only, so a codec-only worker stays light."""
+    code = (
+        "import sys; from gdal_spark.raster import codec;"
+        "a = codec.decode_image(b'P5\\n4 3\\n255\\n' + bytes(range(12)));"
+        "assert a.shape[:2] == (3, 4), a.shape;"
+        "assert 'gdal_spark.raster.simple_formats' in sys.modules;"
+        "sys.exit(sorted({'pandas', 'pyspark'} & set(sys.modules)) or None)"
+    )
+    subprocess.run(
+        [sys.executable, "-c", code],
+        check=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        timeout=120,
+    )

@@ -38,12 +38,13 @@ def test_pip_join_matches_bruteforce(spark, pts, aoi):
     assert len(exp) > 0
 
 
-def test_pip_join_salted_same_result(spark, pts, aoi):
-    p_cells = SJ.with_point_cell(pts)
-    hot = SJ.hot_cells(p_cells, threshold=2)
-    got = SJ.point_in_polygon_join(pts, aoi, salt=4, hot=hot)
+def test_pip_join_salted_same_result(spark, skewed_points, aoi):
+    n = skewed_points.count()
+    hot = SJ.hot_cells(SJ.with_point_cell(skewed_points), threshold=n // 20)
+    assert hot, "no hot cell: the join would not salt"
+    got = SJ.point_in_polygon_join(skewed_points, aoi, salt=4, hot=hot)
     got_pairs = {(r.pt_id, r.poly_id) for r in got.select("pt_id", "poly_id").collect()}
-    exp = brute_pip(pts.collect(), aoi.collect())
+    exp = brute_pip(skewed_points.collect(), aoi.collect())
     assert got_pairs == exp
 
 
