@@ -1401,6 +1401,40 @@ FROM (SELECT n_nationkey AS nk, 1.0 + n_nationkey * 0.25 AS r FROM nation)
 """
 
 
+# --- cached file fixtures --------------------------------------------------
+
+
+def _fixture(name: str, build: Callable[[str], object]) -> str:
+    """Path of the file fixture ``name``, built on first use and reused
+    by every later run. ``build(path)`` writes the fixture (a file, a
+    directory, or a base name with sibling files) at ``path`` inside a
+    private staging directory, which is then renamed into place in one
+    step: a run killed mid-write leaves only its staging directory, so
+    no later run can reuse a half-written fixture."""
+    import shutil
+    import tempfile
+
+    root = _os.path.join(tempfile.gettempdir(), "gdal_spark_fixtures")
+    final = _os.path.join(root, name)
+    if not _os.path.exists(final):
+        _os.makedirs(root, exist_ok=True)
+        stage = tempfile.mkdtemp(prefix=f".{name}.", dir=root)
+        try:
+            build(_os.path.join(stage, name))
+            _os.replace(stage, final)
+        except OSError:
+            if not _os.path.exists(final):
+                raise
+            # another process published the same fixture first
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+    return _os.path.join(final, name)
+
+
+def _sf_tag(sf_dir: str) -> str:
+    return _os.path.basename(_os.path.normpath(sf_dir))
+
+
 # --- Zarr N-D hypercube ----------------------------------------------------
 
 _ZARR3D_SHAPE = (12, 50, 60)  # (time, y, x)
@@ -1408,22 +1442,19 @@ _ZARR3D_CHUNKS = (4, 16, 16)
 _ZARR3D_WIN = [(3, 6), (10, 30), (20, 30)]
 
 
+def _zarr3d_cube() -> _np.ndarray:
+    t, y, x = _np.meshgrid(*[_np.arange(s) for s in _ZARR3D_SHAPE], indexing="ij")
+    return ((t * 7 + y * 3 + x) % 101).astype(_np.float64)
+
+
 def _zarr3d_fixture() -> str:
     """Deterministic 3-D Zarr v2 store: arr[t,y,x] = (7t+3y+x) mod 101
     — closed form, so the DuckDB oracle regenerates it from
     generate_series with zero file dependence."""
-    import tempfile
-
     from gdal_spark.sources import zarr as Z
 
-    p = _os.path.join(tempfile.gettempdir(), "gdal_spark_zarr3d_v1")
-    if not _os.path.exists(_os.path.join(p, ".zarray")):
-        t, y, x = _np.meshgrid(
-            *[_np.arange(s) for s in _ZARR3D_SHAPE], indexing="ij"
-        )
-        arr = ((t * 7 + y * 3 + x) % 101).astype(_np.float64)
-        Z.write_zarr_nd(p, arr, _ZARR3D_CHUNKS)
-    return p
+    return _fixture("zarr3d_v1", lambda p: Z.write_zarr_nd(
+        p, _zarr3d_cube(), _ZARR3D_CHUNKS))
 
 
 def _q_zarr_3d_window(spark, sf_dir):
@@ -1450,36 +1481,20 @@ FROM generate_series(3, 8) s1(t),
 def _zarr3d_v3_fixture() -> str:
     """Same closed-form cube as the v2 fixture, stored as a Zarr v3
     array (zarr.json + c/<t>/<y>/<x> chunk keys, bytes+gzip codecs)."""
-    import tempfile
-
     from gdal_spark.sources import zarr as Z
 
-    p = _os.path.join(tempfile.gettempdir(), "gdal_spark_zarr3d_v3_1")
-    if not _os.path.exists(_os.path.join(p, "zarr.json")):
-        t, y, x = _np.meshgrid(
-            *[_np.arange(s) for s in _ZARR3D_SHAPE], indexing="ij"
-        )
-        arr = ((t * 7 + y * 3 + x) % 101).astype(_np.float64)
-        Z.write_zarr_v3(p, arr, _ZARR3D_CHUNKS)
-    return p
+    return _fixture("zarr3d_v3_1", lambda p: Z.write_zarr_v3(
+        p, _zarr3d_cube(), _ZARR3D_CHUNKS))
 
 
 def _zarr3d_zstd_fixture() -> str:
     """Same closed-form cube, Zarr v2 with the numcodecs **zstd**
     compressor (the modern Zarr default; chunks compressed by the
     capability-probed libzstd, native/zstd_lib.py)."""
-    import tempfile
-
     from gdal_spark.sources import zarr as Z
 
-    p = _os.path.join(tempfile.gettempdir(), "gdal_spark_zarr3d_zstd_1")
-    if not _os.path.exists(_os.path.join(p, ".zarray")):
-        t, y, x = _np.meshgrid(
-            *[_np.arange(s) for s in _ZARR3D_SHAPE], indexing="ij"
-        )
-        arr = ((t * 7 + y * 3 + x) % 101).astype(_np.float64)
-        Z.write_zarr_nd(p, arr, _ZARR3D_CHUNKS, compressor="zstd", level=3)
-    return p
+    return _fixture("zarr3d_zstd_1", lambda p: Z.write_zarr_nd(
+        p, _zarr3d_cube(), _ZARR3D_CHUNKS, compressor="zstd", level=3))
 
 
 def _q_zarr_zstd_window(spark, sf_dir):
@@ -1534,21 +1549,23 @@ _NC3_SHAPE = (10, 40, 50)  # (time, y, x) — time is the unlimited dim
 _NC3_WIN = [(2, 4), (8, 16), (10, 20)]
 
 
+def _nc3_cube() -> tuple[_np.ndarray, _np.ndarray]:
+    t, y, x = _np.meshgrid(*[_np.arange(s) for s in _NC3_SHAPE], indexing="ij")
+    temp = ((t * 5 + y * 2 + x) % 89).astype(_np.float64)
+    elev = ((y[0] * 3 + x[0]) % 53).astype(_np.int32)
+    return temp, elev
+
+
 def _nc3_fixture() -> str:
     """Deterministic netCDF-3 classic file: temp[t,y,x] =
     (5t+2y+x) mod 89 as a RECORD variable over the unlimited time dim
     (the format's interleaved-slab layout), plus a fixed elev var —
     closed form, so the DuckDB oracle regenerates it from
     generate_series with zero file dependence."""
-    import tempfile
-
     from gdal_spark.sources import netcdf as NC
 
-    p = _os.path.join(tempfile.gettempdir(), "gdal_spark_nc3_v1.nc")
-    if not _os.path.exists(p):
-        t, y, x = _np.meshgrid(*[_np.arange(s) for s in _NC3_SHAPE], indexing="ij")
-        temp = ((t * 5 + y * 2 + x) % 89).astype(_np.float64)
-        elev = ((y[0] * 3 + x[0]) % 53).astype(_np.int32)
+    def build(p):
+        temp, elev = _nc3_cube()
         NC.write_netcdf(
             p,
             dims={"time": None, "y": _NC3_SHAPE[1], "x": _NC3_SHAPE[2]},
@@ -1558,7 +1575,8 @@ def _nc3_fixture() -> str:
             },
             gatts={"title": "gdal_spark nc3 fixture", "version": 3},
         )
-    return p
+
+    return _fixture("nc3_v1.nc", build)
 
 
 def _q_netcdf_window(spark, sf_dir):
@@ -1589,21 +1607,14 @@ def _nc4_fixture() -> str:
     DuckDB oracle. The reader itself is additionally pinned against
     the reference autotest's real libnetcdf files (GDAL checksum 4672
     for byte_chunked_not_multiple.nc etc.) in tests/test_hdf5.py."""
-    import tempfile
-
     from gdal_spark.sources.hdf5 import write_h5
 
-    p = _os.path.join(tempfile.gettempdir(), "gdal_spark_nc4_v1.nc")
-    if not _os.path.exists(p):
-        t, y, x = _np.meshgrid(*[_np.arange(s) for s in _NC3_SHAPE], indexing="ij")
-        temp = ((t * 5 + y * 2 + x) % 89).astype(_np.float64)
-        elev = ((y[0] * 3 + x[0]) % 53).astype(_np.int32)
-        write_h5(
-            p,
-            {"temp": (temp, (2, 16, 20)), "elev": (elev, (16, 20))},
-            deflate=6,
-        )
-    return p
+    def build(p):
+        temp, elev = _nc3_cube()
+        write_h5(p, {"temp": (temp, (2, 16, 20)), "elev": (elev, (16, 20))},
+                 deflate=6)
+
+    return _fixture("nc4_v1.nc", build)
 
 
 def _q_netcdf4_window(spark, sf_dir):
@@ -5006,23 +5017,19 @@ def _shp_fixture_base(spark, sf_dir: str, kind: str) -> str:
     """Deterministic shapefile fixture derived from the driver parquet
     tables (written once per sf_dir; .shp stores IEEE doubles directly
     so the round-trip is bit-exact vs the shared scatter SQL)."""
-    import tempfile
-
     from gdal_spark.functions.st import register_st_functions
     from gdal_spark.sources import shapefile as SHPD
 
-    tag = _os.path.basename(_os.path.normpath(sf_dir))
-    base = _os.path.join(tempfile.gettempdir(), f"gdal_spark_{kind}_{tag}_v1")
-    if _os.path.exists(base + ".shp"):
-        return base
-    register_st_functions(spark)
-    if kind == "shp_pts":
-        df = _customer_points(spark, sf_dir)
-    else:  # shp_aoi: polygon layer
-        df = synth.aoi(spark, sf_dir, with_wkb=True).select(
-            "geom", "poly_id", "category", "population")
-    SHPD.write_shapefile(df, base)
-    return base
+    def build(base):
+        register_st_functions(spark)
+        if kind == "shp_pts":
+            df = _customer_points(spark, sf_dir)
+        else:  # shp_aoi: polygon layer
+            df = synth.aoi(spark, sf_dir, with_wkb=True).select(
+                "geom", "poly_id", "category", "population")
+        SHPD.write_shapefile(df, base)
+
+    return _fixture(f"{kind}_{_sf_tag(sf_dir)}_v1", build)
 
 
 def _q_shapefile_roundtrip(spark, sf_dir):
@@ -5108,18 +5115,13 @@ def _q_geojson_roundtrip(spark, sf_dir):
     exists for), then the line-split reader parses it back in Arrow
     batches. Doubles survive bit-exactly via repr() shortest-form
     JSON numbers; area/centroid recomputed from the returned WKB."""
-    import tempfile
-
     from gdal_spark.functions.st import register_st_functions
     from gdal_spark.sources import geojson as GJ
 
     register_st_functions(spark)
-    tag = _os.path.basename(_os.path.normpath(sf_dir))
-    path = _os.path.join(tempfile.gettempdir(), f"gdal_spark_gjseq_{tag}_v1")
-    if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        df = synth.aoi(spark, sf_dir, with_wkb=True).select(
-            "geom", "poly_id", "category", "population")
-        GJ.write_geojsonseq(df, path)
+    path = _fixture(f"gjseq_{_sf_tag(sf_dir)}_v1", lambda p: GJ.write_geojsonseq(
+        synth.aoi(spark, sf_dir, with_wkb=True).select(
+            "geom", "poly_id", "category", "population"), p))
     got = GJ.read_geojsonseq(
         spark, path, "poly_id long, category string, population long")
     return got.select(
@@ -5131,18 +5133,12 @@ def _q_geojson_roundtrip(spark, sf_dir):
 
 
 def _fgb_fixture_path(spark, sf_dir):
-    import tempfile
-
     from gdal_spark.functions.st import register_st_functions
     from gdal_spark.sources import flatgeobuf as FGB
 
     register_st_functions(spark)
-    tag = _os.path.basename(_os.path.normpath(sf_dir))
-    path = _os.path.join(tempfile.gettempdir(), f"gdal_spark_fgb_{tag}_v1.fgb")
-    if not _os.path.exists(path):
-        df = _customer_points(spark, sf_dir)
-        FGB.write_fgb(df, path, geometry_type=FGB.GT_POINT)
-    return path
+    return _fixture(f"fgb_{_sf_tag(sf_dir)}_v1.fgb", lambda p: FGB.write_fgb(
+        _customer_points(spark, sf_dir), p, geometry_type=FGB.GT_POINT))
 
 
 def _q_fgb_roundtrip(spark, sf_dir):
@@ -5191,17 +5187,12 @@ def _q_gpkg_roundtrip(spark, sf_dir):
     rowid-range-parallel reader (each task opens the SQLite file
     read-only and B-tree scans only its slice) reconstructs every
     double bit-exactly from the embedded WKB."""
-    import tempfile
-
     from gdal_spark.functions.st import register_st_functions
     from gdal_spark.sources import gpkg as GP
 
     register_st_functions(spark)
-    tag = _os.path.basename(_os.path.normpath(sf_dir))
-    path = _os.path.join(tempfile.gettempdir(), f"gdal_spark_gpkg_{tag}_v1.gpkg")
-    if not _os.path.exists(path):
-        df = _customer_points(spark, sf_dir)
-        GP.write_gpkg(df, path, "customer_pts")
+    path = _fixture(f"gpkg_{_sf_tag(sf_dir)}_v1.gpkg", lambda p: GP.write_gpkg(
+        _customer_points(spark, sf_dir), p, "customer_pts"))
     got = GP.read_gpkg(spark, path, "customer_pts")
     return got.select(
         "custkey", "name", "nat",
@@ -5217,17 +5208,12 @@ def _q_csv_wkt_roundtrip(spark, sf_dir):
     Integer64/Real columns from the sidecar, and ST_GeomFromText
     rebuilds WKB. %.15g WKT coordinates are compared at the 1e-6 noise floor
     (15-significant-digit print precision)."""
-    import tempfile
-
     from gdal_spark.functions.st import register_st_functions
     from gdal_spark.sources import csv_wkt as CSVF
 
     register_st_functions(spark)
-    tag = _os.path.basename(_os.path.normpath(sf_dir))
-    path = _os.path.join(tempfile.gettempdir(), f"gdal_spark_csvf_{tag}_v1")
-    if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
-        df = _customer_points(spark, sf_dir)
-        CSVF.write_csv_features(df, path)
+    path = _fixture(f"csvf_{_sf_tag(sf_dir)}_v1", lambda p: CSVF.write_csv_features(
+        _customer_points(spark, sf_dir), p))
     got = CSVF.read_csv_features(spark, path)
     # %.15g WKT keeps 15 significant digits (the reference's print
     # precision) — compare past the last-ulp print noise, like every
@@ -6619,17 +6605,15 @@ _ENVI_WIN = (1, 4, 28, 7, 43)  # band, row0, row1, col0, col1
 
 def _envi_fixture() -> str:
     """Closed-form ENVI BSQ cube: v[b,r,c] = b*1000 + (3r+7c) % 89."""
-    import tempfile
-
     from gdal_spark.raster import simple_formats as SFMT
 
-    base = _os.path.join(tempfile.gettempdir(), "gdal_spark_envi_v1")
-    if not _os.path.exists(base + ".hdr"):
+    def build(base):
         b, r, c = _np.meshgrid(*[_np.arange(s) for s in _ENVI_SHAPE],
                                indexing="ij")
         cube = (b * 1000 + (3 * r + 7 * c) % 89).astype(_np.int32)
         SFMT.write_envi(base, cube, interleave="bsq")
-    return base
+
+    return _fixture("envi_v1", build)
 
 
 def _q_envi_window(spark, sf_dir):
@@ -6658,18 +6642,14 @@ def _q_kml_roundtrip(spark, sf_dir):
     bit-exact. Whole-XML-document format: single-hop write, per-file
     task read (the presentation-format parity path — GeoJSONSeq and
     parquet are the bulk layers)."""
-    import tempfile
-
     from gdal_spark.functions.st import register_st_functions
     from gdal_spark.sources import kml as KMLD
 
     register_st_functions(spark)
-    tag = _os.path.basename(_os.path.normpath(sf_dir))
-    path = _os.path.join(tempfile.gettempdir(), f"gdal_spark_kml_{tag}_v1.kml")
-    if not _os.path.exists(path):
-        df = synth.aoi(spark, sf_dir, with_wkb=True).select(
-            "geom", "name", "poly_id", "category", "population")
-        KMLD.write_kml(df, path, name_col="name")
+    path = _fixture(f"kml_{_sf_tag(sf_dir)}_v1.kml", lambda p: KMLD.write_kml(
+        synth.aoi(spark, sf_dir, with_wkb=True).select(
+            "geom", "name", "poly_id", "category", "population"),
+        p, name_col="name"))
     got = KMLD.read_kml(
         spark, path, "poly_id long, category string, population long")
     return got.select(
@@ -6686,18 +6666,12 @@ def _q_arrow_export_roundtrip(spark, sf_dir):
     per-partition Arrow IPC streams (RecordBatches ≤65,536 rows, WKB
     geometry column) and re-import one task per file — bit-exact,
     since Arrow is the repo wire format end to end."""
-    import tempfile
-
     from gdal_spark.functions.st import register_st_functions
     from gdal_spark.sources import arrow_ipc as ARW
 
     register_st_functions(spark)
-    tag = _os.path.basename(_os.path.normpath(sf_dir))
-    path = _os.path.join(tempfile.gettempdir(), f"gdal_spark_arrows_{tag}_v1")
-    if not (_os.path.isdir(path) and any(
-            f.endswith(".arrows") for f in _os.listdir(path))):
-        df = _customer_points(spark, sf_dir)
-        ARW.write_arrow_stream(df, path)
+    path = _fixture(f"arrows_{_sf_tag(sf_dir)}_v1", lambda p: ARW.write_arrow_stream(
+        _customer_points(spark, sf_dir), p))
     got = ARW.read_arrow_stream(spark, path)
     return got.select(
         "custkey", "name", "nat",

@@ -252,6 +252,8 @@ def read_envi_window(spark: SparkSession, base: str, band: int,
     RawRasterBand touches) and slice the band out in NumPy."""
     import pandas as pd
 
+    from gdal_spark.sources.scan import scan_manifest
+
     h = read_envi_header(base)
     if not (0 <= row0 < row1 <= h["lines"] and 0 <= col0 < col1 <= h["samples"]):
         raise ValueError("window out of bounds")
@@ -273,30 +275,25 @@ def read_envi_window(spark: SparkSession, base: str, band: int,
         {"r0": int(r), "r1": int(min(r + rows_per_task, row1))}
         for r in range(row0, row1, rows_per_task)
     ]
-    man = spark.createDataFrame(pd.DataFrame(blocks))
-    if len(blocks) > 1:
-        man = man.repartition(len(blocks))
     samples, c0, c1 = h["samples"], col0, col1
 
-    def scan(batches):
-        for pdf in batches:
-            for blk in pdf.itertuples(index=False):
-                n = blk.r1 - blk.r0
-                with open(base, "rb") as f:
-                    f.seek(base_off + blk.r0 * stride)
-                    raw = np.frombuffer(f.read(n * stride), dtype=dt)
-                if interleave == "bsq":
-                    data = raw.reshape(n, samples)
-                elif interleave == "bil":
-                    data = raw.reshape(n, bands, samples)[:, band, :]
-                else:  # bip
-                    data = raw.reshape(n, samples, bands)[:, :, band]
-                win = data[:, c0:c1]
-                rr, cc = np.meshgrid(
-                    np.arange(blk.r0, blk.r1), np.arange(c0, c1), indexing="ij")
-                yield pd.DataFrame({
-                    "row": rr.ravel().astype(np.int32),
-                    "col": cc.ravel().astype(np.int32),
-                    "value": win.ravel().astype(np.float64)})
+    def decode(blk, f):
+        n = blk.r1 - blk.r0
+        f.seek(base_off + blk.r0 * stride)
+        raw = np.frombuffer(f.read(n * stride), dtype=dt)
+        if interleave == "bsq":
+            data = raw.reshape(n, samples)
+        elif interleave == "bil":
+            data = raw.reshape(n, bands, samples)[:, band, :]
+        else:  # bip
+            data = raw.reshape(n, samples, bands)[:, :, band]
+        win = data[:, c0:c1]
+        rr, cc = np.meshgrid(
+            np.arange(blk.r0, blk.r1), np.arange(c0, c1), indexing="ij")
+        yield pd.DataFrame({
+            "row": rr.ravel().astype(np.int32),
+            "col": cc.ravel().astype(np.int32),
+            "value": win.ravel().astype(np.float64)})
 
-    return man.mapInPandas(scan, schema="row int, col int, value double")
+    return scan_manifest(spark, blocks, "row int, col int, value double",
+                         decode, base)

@@ -33,6 +33,8 @@ import os
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from gdal_spark.sources.scan import scan_files
+
 DEFAULT_BATCH_ROWS = 65536  # ogrlayerarrow.cpp:2079
 
 
@@ -95,16 +97,8 @@ def read_arrow_stream(spark: SparkSession, path: str) -> DataFrame:
 
     ddl = ", ".join(f"`{f.name}` {_ddl(f)}" for f in arrow_schema)
 
-    scan = (spark.read.format("binaryFile")
-            .option("pathGlobFilter", "*.arrows")
-            .load(path)
-            .select("content"))
+    def parse(_, content):
+        for batch in pa.ipc.open_stream(io.BytesIO(content)):
+            yield batch.to_pandas()
 
-    def parse(batches):
-        for pdf in batches:
-            for content in pdf["content"]:
-                rdr = pa.ipc.open_stream(io.BytesIO(bytes(content)))
-                for batch in rdr:
-                    yield batch.to_pandas()
-
-    return scan.mapInPandas(parse, schema=ddl)
+    return scan_files(spark, path, ddl, parse, "*.arrows")

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gdal_spark.functions import geometry as G
+from gdal_spark.sources.scan import scan_manifest
 
 MAGIC = bytes([0x66, 0x67, 0x62, 0x03, 0x66, 0x67, 0x62, 0x01])
 NODE_SIZE_DEFAULT = 16
@@ -765,13 +766,20 @@ def read_fgb(
     import os
 
     fsize = os.path.getsize(path)
+    n_tasks = spark.sparkContext.defaultParallelism * 2
+    # manifest row = runs of (off, ln, fid0); ln = -1 marks one
+    # size-prefixed feature at off
     if count and h["index_node_size"]:
         with open(path, "rb") as f:
             f.seek(h["tree_start"])
             tree = f.read(_rtree_size(count, h["index_node_size"]))
         if bbox is not None:
             hits = _rtree_search(tree, count, h["index_node_size"], bbox)
-            ranges = [(data_start + off, -1, idx) for off, idx in hits]
+            step = max(1, -(-len(hits) // n_tasks))
+            parts = [hits[i : i + step] for i in range(0, len(hits), step)]
+            ranges = [{"off": [data_start + off for off, _ in part],
+                       "ln": [-1] * len(part),
+                       "fid": [idx for _, idx in part]} for part in parts]
         else:
             bounds = _level_bounds(count, h["index_node_size"])
             leaf_start = bounds[0][1] - count
@@ -781,7 +789,7 @@ def read_fgb(
                 .astype(np.int64)
             )
             # contiguous runs of features per task (shapefile-style)
-            n_chunks = min(count, spark.sparkContext.defaultParallelism * 2)
+            n_chunks = min(count, n_tasks)
             cuts = np.linspace(0, count, n_chunks + 1).astype(np.int64)
             ranges = []
             for k in range(n_chunks):
@@ -790,9 +798,10 @@ def read_fgb(
                     continue
                 start_off = data_start + int(offs[a])
                 end_off = data_start + int(offs[b]) if b < count else fsize
-                ranges.append((start_off, end_off - start_off, a))
+                ranges.append({"off": [start_off], "ln": [end_off - start_off],
+                               "fid": [a]})
     else:
-        ranges = [(data_start, fsize - data_start, 0)]
+        ranges = [{"off": [data_start], "ln": [fsize - data_start], "fid": [0]}]
 
     schema_fields = ["fid long", "geom binary"]
     _CT_SPARK = {
@@ -804,43 +813,27 @@ def read_fgb(
     schema = ", ".join(schema_fields)
     names = [c for c, _ in cols]
 
-    man = spark.createDataFrame(
-        pd.DataFrame(ranges, columns=["off", "ln", "fid"])
-    )
-    if len(ranges) > 1:
-        man = man.repartition(
-            min(len(ranges), spark.sparkContext.defaultParallelism * 2)
-        )
-
-    def scan(it):
-        with open(path, "rb") as f:
-            for pdf in it:
-                rows = []
-                for r in pdf.itertuples():
-                    f.seek(int(r.off))
-                    if int(r.ln) < 0:  # single size-prefixed feature
-                        (sz,) = struct.unpack("<I", f.read(4))
-                        fbuf = struct.pack("<I", sz) + f.read(sz)
-                        blobs = [fbuf]
-                    else:
-                        raw = f.read(int(r.ln))
-                        blobs = []
-                        o = 0
-                        while o + 4 <= len(raw):
-                            (sz,) = struct.unpack_from("<I", raw, o)
-                            blobs.append(raw[o : o + 4 + sz])
-                            o += 4 + sz
-                    fid = int(r.fid)
-                    for wkb, props in _feature_rows(blobs, cols, header_gt):
-                        rows.append(
-                            {"fid": fid, "geom": wkb,
-                             **{n: props.get(n) for n in names}}
-                        )
-                        fid += 1
-                yield pd.DataFrame(
-                    rows, columns=["fid", "geom"] + names
-                ) if rows else pd.DataFrame(
-                    {c: [] for c in ["fid", "geom"] + names}
+    def decode(r, f):
+        rows = []
+        for off, ln, fid in zip(r.off, r.ln, r.fid):
+            f.seek(int(off))
+            if int(ln) < 0:  # single size-prefixed feature
+                (sz,) = struct.unpack("<I", f.read(4))
+                blobs = [struct.pack("<I", sz) + f.read(sz)]
+            else:
+                raw = f.read(int(ln))
+                blobs = []
+                o = 0
+                while o + 4 <= len(raw):
+                    (sz,) = struct.unpack_from("<I", raw, o)
+                    blobs.append(raw[o : o + 4 + sz])
+                    o += 4 + sz
+            fid = int(fid)
+            for wkb, props in _feature_rows(blobs, cols, header_gt):
+                rows.append(
+                    {"fid": fid, "geom": wkb, **{n: props.get(n) for n in names}}
                 )
+                fid += 1
+        yield pd.DataFrame(rows, columns=["fid", "geom"] + names)
 
-    return man.mapInPandas(scan, schema=schema)
+    return scan_manifest(spark, ranges, schema, decode, path)

@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from gdal_spark.functions import geometry as G
+from gdal_spark.sources.scan import scan_files
 
 _TYPE_NAMES = {
     G.WKB_POINT: "Point",
@@ -223,24 +224,17 @@ def read_geojson(spark: SparkSession, path: str,
     whole-document parse inside the task — a directory of .geojson
     files parallelizes per file; a single file is inherently one task
     (same as the reference's whole-file reader)."""
-    reader = spark.read.format("binaryFile")
-    if os.path.isdir(path):
-        reader = reader.option("pathGlobFilter", "*.*json")
-    files = reader.load(path).select("path", "content")
+    keys = [c.strip().split(" ", 1)[0].strip("`")
+            for c in props_schema.split(",")]
 
-    def parse(batches):
-        for pdf in batches:
-            for content in pdf["content"]:
-                doc = json.loads(bytes(content).decode("utf-8"))
-                feats = doc.get("features", [])
-                out = pd.DataFrame({
-                    "geom": [geojson_to_wkb(f["geometry"])
-                             if f.get("geometry") else None for f in feats]})
-                keys = [c.strip().split(" ", 1)[0].strip("`")
-                        for c in props_schema.split(",")]
-                for k in keys:
-                    out[k] = [(f.get("properties") or {}).get(k)
-                              for f in feats]
-                yield out
+    def parse(_, content):
+        feats = json.loads(content.decode("utf-8")).get("features", [])
+        out = pd.DataFrame({
+            "geom": [geojson_to_wkb(f["geometry"])
+                     if f.get("geometry") else None for f in feats]})
+        for k in keys:
+            out[k] = [(f.get("properties") or {}).get(k) for f in feats]
+        yield out
 
-    return files.mapInPandas(parse, schema=f"geom binary, {props_schema}")
+    return scan_files(spark, path, f"geom binary, {props_schema}", parse,
+                      "*.*json" if os.path.isdir(path) else None)

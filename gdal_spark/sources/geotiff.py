@@ -2,9 +2,9 @@
 
 The reference opens a directory/glob of `.tif` files as datasets
 (``frmts/gtiff/gtiffdataset.cpp``; tile-index mosaics ``frmts/gti/``).
-Spark-first equivalent: ``spark.read.format("binaryFile")`` lists the
-files as splits (one row per file, content read lazily per partition),
-and the in-repo TIFF codec (``gdal_spark/raster/tiff.py``, externally
+Spark-first equivalent: a ``binaryFile`` listing (``sources/scan.py``)
+turns the files into splits (one row per file, content read lazily per
+partition), and the in-repo TIFF codec (``gdal_spark/raster/tiff.py``, externally
 oracle-tested) decodes header metadata or pixels inside Arrow batches.
 
 Two read modes mirror GDAL's two access patterns:
@@ -29,11 +29,11 @@ from __future__ import annotations
 
 import os
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from gdal_spark.raster import tiff
+from gdal_spark.sources.scan import scan_files
 
 _META_SCHEMA = (
     "path string, image_id string, w int, h int, bands int, dtype string, "
@@ -48,55 +48,35 @@ _IMAGE_SCHEMA = (
 )
 
 
-def _scan(spark: SparkSession, path: str, glob: str = "*.tif*") -> DataFrame:
-    return (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-        .select("path", "content")
-    )
-
-
 def read_geotiff_metadata(
     spark: SparkSession, path: str, glob: str = "*.tif*"
 ) -> DataFrame:
     """gdalinfo-style footprint scan: IFD tags only, no pixel decode."""
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                buf = bytes(r.content)
-                bo, big, off = tiff._read_header(buf)
-                tags, _ = tiff._read_ifd(buf, bo, big, off)
-                info = tiff._geo(tags)
-                gt = info["geotransform"] or (None,) * 6
-                bits = tiff._as_list(tags.get(258, 8))[0]
-                fmt = tiff._as_list(tags.get(339, 1))[0]
-                kind = {1: "u", 2: "i", 3: "f"}.get(fmt, "?")
-                rows.append(
-                    (
-                        r.path,
-                        os.path.splitext(os.path.basename(r.path))[0],
-                        int(tags[256]), int(tags[257]), int(tags.get(277, 1)),
-                        f"{kind}{bits // 8}",
-                        int(tags.get(259, 1)), 322 in tags, int(tags.get(284, 1)),
-                        len(tiff.ifd_offsets(buf)),
-                        gt[0], gt[1], gt[3], gt[5],
-                        info["epsg"], info["nodata"],
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "path", "image_id", "w", "h", "bands", "dtype",
-                        "compression", "tiled", "planar", "n_ifds",
-                        "gt_x0", "gt_px", "gt_y0", "gt_py", "epsg", "nodata",
-                    ],
-                )
+    def decode(fpath, buf):
+        bo, big, off = tiff._read_header(buf)
+        tags, _ = tiff._read_ifd(buf, bo, big, off)
+        info = tiff._geo(tags)
+        gt = info["geotransform"] or (None,) * 6
+        bits = tiff._as_list(tags.get(258, 8))[0]
+        fmt = tiff._as_list(tags.get(339, 1))[0]
+        kind = {1: "u", 2: "i", 3: "f"}.get(fmt, "?")
+        yield pd.DataFrame([(
+            fpath,
+            os.path.splitext(os.path.basename(fpath))[0],
+            int(tags[256]), int(tags[257]), int(tags.get(277, 1)),
+            f"{kind}{bits // 8}",
+            int(tags.get(259, 1)), 322 in tags, int(tags.get(284, 1)),
+            len(tiff.ifd_offsets(buf)),
+            gt[0], gt[1], gt[3], gt[5],
+            info["epsg"], info["nodata"],
+        )], columns=[
+            "path", "image_id", "w", "h", "bands", "dtype",
+            "compression", "tiled", "planar", "n_ifds",
+            "gt_x0", "gt_px", "gt_y0", "gt_py", "epsg", "nodata",
+        ])
 
-    return _scan(spark, path, glob).mapInPandas(run, schema=_META_SCHEMA)
+    return scan_files(spark, path, _META_SCHEMA, decode, glob)
 
 
 def read_geotiffs(
@@ -110,31 +90,20 @@ def read_geotiffs(
     overview level, mirroring ``GDALRasterBand::GetOverview``.
     """
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                buf = bytes(r.content)
-                bo, big, off = tiff._read_header(buf)
-                for _ in range(ifd_index):
-                    _, off = tiff._read_ifd(buf, bo, big, off)
-                tags, _ = tiff._read_ifd(buf, bo, big, off)
-                info = tiff._geo(tags)
-                gt = info["geotransform"] or (None,) * 6
-                rows.append(
-                    (
-                        os.path.splitext(os.path.basename(r.path))[0],
-                        buf, int(tags[256]), int(tags[257]), "gtiff",
-                        gt[0], gt[1], gt[3], gt[5], info["epsg"],
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "image_id", "bytes", "w", "h", "fmt",
-                        "gt_x0", "gt_px", "gt_y0", "gt_py", "epsg",
-                    ],
-                )
+    def decode(fpath, buf):
+        bo, big, off = tiff._read_header(buf)
+        for _ in range(ifd_index):
+            _, off = tiff._read_ifd(buf, bo, big, off)
+        tags, _ = tiff._read_ifd(buf, bo, big, off)
+        info = tiff._geo(tags)
+        gt = info["geotransform"] or (None,) * 6
+        yield pd.DataFrame([(
+            os.path.splitext(os.path.basename(fpath))[0],
+            buf, int(tags[256]), int(tags[257]), "gtiff",
+            gt[0], gt[1], gt[3], gt[5], info["epsg"],
+        )], columns=[
+            "image_id", "bytes", "w", "h", "fmt",
+            "gt_x0", "gt_px", "gt_y0", "gt_py", "epsg",
+        ])
 
-    return _scan(spark, path, glob).mapInPandas(run, schema=_IMAGE_SCHEMA)
+    return scan_files(spark, path, _IMAGE_SCHEMA, decode, glob)

@@ -38,6 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from gdal_spark.functions import geometry as G
+from gdal_spark.sources.scan import scan_manifest
 
 _APPLICATION_ID = 0x47504B47  # 'GPKG'
 _USER_VERSION = 10300  # GeoPackage 1.3.0
@@ -220,37 +221,33 @@ def read_gpkg(spark: SparkSession, path: str, layer: str,
 
     schema = "fid long, geom binary" + "".join(
         f", `{out_names[c]}` {_spark_type(t)}" for c, t in attr_cols)
-    if n == 0:
-        return spark.createDataFrame([], schema)
-    if chunks is None:
-        chunks = max(1, min(spark.sparkContext.defaultParallelism * 2,
-                            (n + 63) // 64))
-    bounds = np.linspace(lo, hi + 1, chunks + 1).astype(np.int64)
-    manifest = [{"lo": int(a), "hi": int(b) - 1}
-                for a, b in zip(bounds[:-1], bounds[1:]) if b > a]
-    man_df = spark.createDataFrame(pd.DataFrame(manifest)).repartition(
-        len(manifest))
+    manifest = []
+    if n:
+        if chunks is None:
+            chunks = max(1, min(spark.sparkContext.defaultParallelism * 2,
+                                (n + 63) // 64))
+        bounds = np.linspace(lo, hi + 1, chunks + 1).astype(np.int64)
+        manifest = [{"lo": int(a), "hi": int(b) - 1}
+                    for a, b in zip(bounds[:-1], bounds[1:]) if b > a]
     sel_cols = ", ".join(f'"{c}"' for c, _ in attr_cols)
     sql = (f'SELECT rowid, "{geom_col}"{", " + sel_cols if sel_cols else ""} '
            f'FROM "{layer}" WHERE rowid BETWEEN ? AND ?')
     bool_cols = {c for c, t in attr_cols if t == "BOOLEAN"}
 
-    def scan(batches):
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                c = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
-                try:
-                    rows = c.execute(sql, (int(row.lo), int(row.hi))).fetchall()
-                finally:
-                    c.close()
-                out = {"fid": [r[0] for r in rows],
-                       "geom": [gpkg_blob_to_wkb(r[1])
-                                if r[1] is not None else None for r in rows]}
-                for j, (cname, _) in enumerate(attr_cols):
-                    vals = [r[2 + j] for r in rows]
-                    if cname in bool_cols:
-                        vals = [None if v is None else bool(v) for v in vals]
-                    out[out_names[cname]] = vals
-                yield pd.DataFrame(out)
+    def decode(row):
+        c = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
+        try:
+            rows = c.execute(sql, (int(row.lo), int(row.hi))).fetchall()
+        finally:
+            c.close()
+        out = {"fid": [r[0] for r in rows],
+               "geom": [gpkg_blob_to_wkb(r[1])
+                        if r[1] is not None else None for r in rows]}
+        for j, (cname, _) in enumerate(attr_cols):
+            vals = [r[2 + j] for r in rows]
+            if cname in bool_cols:
+                vals = [None if v is None else bool(v) for v in vals]
+            out[out_names[cname]] = vals
+        yield pd.DataFrame(out)
 
-    return man_df.mapInPandas(scan, schema=schema)
+    return scan_manifest(spark, manifest, schema, decode)

@@ -37,6 +37,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from gdal_spark.sources.scan import scan_manifest
+
 UNDEF = 0xFFFFFFFFFFFFFFFF
 
 
@@ -858,13 +860,7 @@ class H5File:
         cdims = lay[2][:-1] if lay[0] == "chunked_single" else (
             lay[2] if lay[0] == "chunked" else lay[2][:-1]
         )
-        out = np.zeros(out_shape, dtype=dt)
-        fill = ds.get("attrs", {}).get("_FillValue")
-        if fill is not None and np.ndim(fill) == 0:
-            try:
-                out[...] = fill
-            except (ValueError, OverflowError):
-                pass
+        out = _filled(out_shape, dt, ds)
         manifest = h.chunk_manifest(name)
         filters = ds.get("filters", [])
         for entry in manifest:
@@ -892,6 +888,20 @@ class H5File:
         return out
 
 
+def _filled(shape, dt: np.dtype, ds: dict) -> np.ndarray:
+    """An array of the dataset's scalar ``_FillValue`` (zeros when it
+    has none or the value does not fit ``dt``) — what unallocated
+    chunks read as."""
+    out = np.zeros(shape, dtype=dt)
+    fill = ds.get("attrs", {}).get("_FillValue")
+    if fill is not None and np.ndim(fill) == 0:
+        try:
+            out[...] = fill
+        except (ValueError, OverflowError):
+            pass
+    return out
+
+
 def read_h5_window_distributed(
     spark: SparkSession,
     path: str,
@@ -901,112 +911,74 @@ def read_h5_window_distributed(
 ) -> DataFrame:
     """Distributed windowed read → long-form (dim0.., value) rows.
 
-    Driver parses the header graph once and prunes the chunk manifest
-    against the window; each task ranged-reads + decodes only its
-    chunks (the Zarr chunk-scan shape over one HDF5 container)."""
+    Driver parses the header graph once and plans the chunk grid cells
+    the window intersects; each task ranged-reads + decodes only its
+    chunks (the Zarr chunk-scan shape over one HDF5 container). A cell
+    the chunk index does not list (never written) reads as the
+    dataset's fill value, as in :meth:`H5File.read`."""
+    import itertools
+
     f = H5File(path)
     h = f._h
     ds = h.datasets[dataset]
     shape = ds["shape"]
-    dt = ds["dtype"]
+    dt = np.dtype(ds["dtype"])
     lay = ds["layout"]
     filters = ds.get("filters", [])
     names = dim_names or f.netcdf_dims(dataset)
+    rank = len(shape)
+    schema = ", ".join(f"d{k} long" for k in range(rank)) + ", value double"
+
+    def long_form(sub, base):
+        idx = np.indices(sub.shape).reshape(len(sub.shape), -1)
+        d = {f"d{k}": idx[k] + base[k] for k in range(rank)}
+        d["value"] = sub.reshape(-1).astype(np.float64)
+        return pd.DataFrame(d)
+
     if lay[0] == "contiguous":
         # plan row-major outer-dim slabs like the classic reader
-        rows = []
-        itemsize = int(np.dtype(dt).itemsize)
-        inner = int(np.prod(shape[1:])) if len(shape) > 1 else 1
-        for i0 in range(*window[0]):
-            rows.append((i0, lay[1] + i0 * inner * itemsize))
-        man = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["i0", "off"])
-        ).repartition(min(len(rows), spark.sparkContext.defaultParallelism * 2))
-        inner_window = window[1:]
+        inner = int(np.prod(shape[1:])) if rank > 1 else 1
+        slabs = [{"i0": i0, "off": lay[1] + i0 * inner * dt.itemsize}
+                 for i0 in range(*window[0])]
+        inner_sel = tuple(slice(a, b) for a, b in window[1:])
 
-        def scan_slab(it):
-            for pdf in it:
-                out = []
-                with open(path, "rb") as fh:
-                    for r in pdf.itertuples():
-                        fh.seek(int(r.off))
-                        raw = fh.read(inner * itemsize)
-                        arr = np.frombuffer(raw, dtype=np.dtype(dt)).reshape(
-                            shape[1:] or (1,)
-                        )
-                        if inner_window:
-                            sl = tuple(slice(a, b) for a, b in inner_window)
-                            sub = arr[sl]
-                            idx = np.indices(sub.shape).reshape(
-                                len(sub.shape), -1
-                            )
-                            d = {"d0": int(r.i0)}
-                            for k in range(len(sub.shape)):
-                                d[f"d{k + 1}"] = idx[k] + inner_window[k][0]
-                            d["value"] = sub.reshape(-1).astype(np.float64)
-                        else:  # 1-D dataset: one value per slab
-                            d = {
-                                "d0": [int(r.i0)],
-                                "value": [float(arr.reshape(-1)[0])],
-                            }
-                        out.append(pd.DataFrame(d))
-                yield pd.concat(out) if out else pd.DataFrame(
-                    {f"d{k}": [] for k in range(len(shape))} | {"value": []}
-                )
+        def decode(r, fh):
+            fh.seek(int(r.off))
+            arr = np.frombuffer(fh.read(inner * dt.itemsize), dtype=dt)
+            slab = arr.reshape([1] + list(shape[1:]))
+            yield long_form(slab[(slice(None),) + inner_sel],
+                            [int(r.i0)] + [a for a, _ in window[1:]])
 
-        schema = ", ".join(f"d{k} long" for k in range(len(shape))) + ", value double"
-        df = man.mapInPandas(scan_slab, schema=schema)
+        df = scan_manifest(spark, slabs, schema, decode, path)
     else:
         cdims = lay[2] if lay[0] == "chunked" else lay[2][:-1]
-        man_rows = []
-        for entry in f._h.chunk_manifest(dataset):
-            offs = entry[: len(shape)]
-            if any(
-                offs[i] >= window[i][1] or offs[i] + cdims[i] <= window[i][0]
-                for i in range(len(shape))
-            ):
-                continue  # pruned before any data I/O
-            man_rows.append((*offs, entry[len(shape)], entry[len(shape) + 1]))
-        cols = [f"o{i}" for i in range(len(shape))] + ["addr", "csize"]
-        man = spark.createDataFrame(pd.DataFrame(man_rows, columns=cols))
-        if len(man_rows) > 1:
-            man = man.repartition(
-                min(len(man_rows), spark.sparkContext.defaultParallelism * 2)
-            )
+        stored = {tuple(e[:rank]): (e[rank], e[rank + 1])
+                  for e in h.chunk_manifest(dataset)}
+        grid = [range(a // c * c, min(b, n), c)
+                for (a, b), c, n in zip(window, cdims, shape)]
+        chunks = []
+        for offs in itertools.product(*grid):
+            addr, csize = stored.get(offs, (-1, 0))
+            chunks.append({"offs": list(offs), "addr": addr, "csize": csize})
 
-        def scan_chunk(it):
-            for pdf in it:
-                out = []
-                with open(path, "rb") as fh:
-                    for r in pdf.itertuples():
-                        offs = [int(getattr(r, f"o{i}")) for i in range(len(shape))]
-                        fh.seek(int(r.addr))
-                        raw = fh.read(int(r.csize))
-                        data = _apply_filters(
-                            raw, filters, np.dtype(dt).itemsize
-                        )
-                        chunk = np.frombuffer(
-                            data, dtype=np.dtype(dt), count=int(np.prod(cdims))
-                        ).reshape(cdims)
-                        src, base = [], []
-                        for i in range(len(shape)):
-                            a = max(window[i][0], offs[i])
-                            bnd = min(window[i][1], offs[i] + cdims[i], shape[i])
-                            src.append(slice(a - offs[i], bnd - offs[i]))
-                            base.append(a)
-                        sub = chunk[tuple(src)]
-                        idx = np.indices(sub.shape).reshape(len(sub.shape), -1)
-                        d = {}
-                        for k in range(len(shape)):
-                            d[f"d{k}"] = idx[k] + base[k]
-                        d["value"] = sub.reshape(-1).astype(np.float64)
-                        out.append(pd.DataFrame(d))
-                yield pd.concat(out) if out else pd.DataFrame(
-                    {f"d{k}": [] for k in range(len(shape))} | {"value": []}
-                )
+        def decode(r, fh):
+            offs = [int(o) for o in r.offs]
+            if r.addr < 0:  # unallocated: uniformly the fill value
+                chunk = _filled(cdims, dt, ds)
+            else:
+                fh.seek(int(r.addr))
+                data = _apply_filters(fh.read(int(r.csize)), filters, dt.itemsize)
+                chunk = np.frombuffer(
+                    data, dtype=dt, count=int(np.prod(cdims))).reshape(cdims)
+            src, base = [], []
+            for i in range(rank):
+                a = max(window[i][0], offs[i])
+                bnd = min(window[i][1], offs[i] + cdims[i], shape[i])
+                src.append(slice(a - offs[i], bnd - offs[i]))
+                base.append(a)
+            yield long_form(chunk[tuple(src)], base)
 
-        schema = ", ".join(f"d{k} long" for k in range(len(shape))) + ", value double"
-        df = man.mapInPandas(scan_chunk, schema=schema)
+        df = scan_manifest(spark, chunks, schema, decode, path)
     ren = df
     for k, nm in enumerate(names):
         ren = ren.withColumnRenamed(f"d{k}", nm)

@@ -28,6 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from gdal_spark.functions import geometry as G
+from gdal_spark.sources.scan import scan_files
 
 _KML_NS = "http://www.opengis.net/kml/2.2"
 
@@ -160,10 +161,6 @@ def read_kml(spark: SparkSession, path: str, props_schema: str,
     """Per-file-parallel KML reader → DataFrame(geom WKB, name?, attrs).
 
     ``props_schema`` types the ExtendedData columns (Spark DDL)."""
-    reader = spark.read.format("binaryFile")
-    if os.path.isdir(path):
-        reader = reader.option("pathGlobFilter", "*.kml")
-    files = reader.load(path).select("path", "content")
     keys = [c.strip().split(" ", 1)[0].strip("`")
             for c in props_schema.split(",")]
     types = {k: c.strip().split(" ", 1)[1].strip().lower()
@@ -180,32 +177,29 @@ def read_kml(spark: SparkSession, path: str, props_schema: str,
             return v.lower() in ("1", "true", "t")
         return v
 
-    def parse(batches):
-        for pdf in batches:
-            for content in pdf["content"]:
-                root = ET.fromstring(bytes(content))
-                out = {"geom": []}
-                if name_col:
-                    out[name_col] = []
-                for k in keys:
-                    out[k] = []
-                for pm in root.iter(_q("Placemark")):
-                    geom_el = None
-                    for tag in ("Point", "LineString", "Polygon",
-                                "MultiGeometry"):
-                        geom_el = pm.find(_q(tag))
-                        if geom_el is not None:
-                            break
-                    out["geom"].append(
-                        kml_to_wkb(geom_el) if geom_el is not None else None)
-                    if name_col:
-                        out[name_col].append(pm.findtext(_q("name")))
-                    vals = {d.get("name"): d.findtext(_q("value"))
-                            for d in pm.iter(_q("Data"))}
-                    for k in keys:
-                        out[k].append(_cast(vals.get(k), types[k]))
-                yield pd.DataFrame(out)
+    def parse(_, content):
+        root = ET.fromstring(content)
+        out = {"geom": []}
+        if name_col:
+            out[name_col] = []
+        for k in keys:
+            out[k] = []
+        for pm in root.iter(_q("Placemark")):
+            geom_el = None
+            for tag in ("Point", "LineString", "Polygon", "MultiGeometry"):
+                geom_el = pm.find(_q(tag))
+                if geom_el is not None:
+                    break
+            out["geom"].append(
+                kml_to_wkb(geom_el) if geom_el is not None else None)
+            if name_col:
+                out[name_col].append(pm.findtext(_q("name")))
+            vals = {d.get("name"): d.findtext(_q("value"))
+                    for d in pm.iter(_q("Data"))}
+            for k in keys:
+                out[k].append(_cast(vals.get(k), types[k]))
+        yield pd.DataFrame(out)
 
     name_part = f"{name_col} string, " if name_col else ""
-    return files.mapInPandas(
-        parse, schema=f"geom binary, {name_part}{props_schema}")
+    return scan_files(spark, path, f"geom binary, {name_part}{props_schema}",
+                      parse, "*.kml" if os.path.isdir(path) else None)

@@ -30,12 +30,13 @@ from __future__ import annotations
 import itertools
 import json
 import os
-import zlib
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from gdal_spark.sources import zarr as Z
 
 
 def piece_fanout(
@@ -137,18 +138,7 @@ def mdim_translate(
     pieces = piece_fanout(blocks, window, transpose, dst_chunks)
 
     os.makedirs(dst_path, exist_ok=True)
-    meta = {
-        "zarr_format": 2,
-        "shape": list(dst_shape),
-        "chunks": list(csz),
-        "dtype": "<f8",
-        "order": "C",
-        "compressor": (
-            {"id": "zlib", "level": int(level)} if compressor == "zlib" else None
-        ),
-        "fill_value": fill_value,
-        "filters": None,
-    }
+    meta = Z._zarray(dst_shape, csz, "<f8", compressor, level, fill_value)
 
     def assemble(key, pdf):
         ci = [int(v) for v in pdf.iloc[0]["idx"]]
@@ -158,14 +148,8 @@ def mdim_translate(
             pdims = [int(v) for v in row["pdims"]]
             piece = np.asarray(row["values"], dtype=np.float64).reshape(pdims)
             block[tuple(slice(o, o + d) for o, d in zip(off, pdims))] = piece
-        raw = block.tobytes(order="C")
-        if compressor == "zlib":
-            raw = zlib.compress(raw, level)
-        final = os.path.join(dst_path, ".".join(str(i) for i in ci))
-        tmp = final + f".tmp{os.getpid()}"
-        with open(tmp, "wb") as f:
-            f.write(raw)
-        os.replace(tmp, final)  # atomic: resume-safe
+        Z._put_chunk(dst_path, ci, Z._encode_chunk(
+            block.tobytes(order="C"), compressor, level))
         return pd.DataFrame({"ck": [key[0]], "n": [len(pdf)]})
 
     written = (

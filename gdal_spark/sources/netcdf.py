@@ -46,6 +46,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gdal_spark.sources.scan import scan_manifest
+
 NC_DIMENSION = 0x0A
 NC_VARIABLE = 0x0B
 NC_ATTRIBUTE = 0x0C
@@ -396,38 +398,25 @@ def read_netcdf_slabs(
     shape = [int(s) for s in v["shape"]]
     slabs = plan_slabs(header, var, window)
     schema = "origin array<int>, dims array<int>, values array<double>"
-    if not slabs:
-        return spark.createDataFrame([], schema)
     inner_win = (
         [(max(0, o), min(s, o + z) - max(0, o)) for (o, z), s in zip(window[1:], shape[1:])]
         if window is not None
         else [(0, s) for s in shape[1:]]
     )
-    plan = spark.createDataFrame(pd.DataFrame(slabs)).repartition(
-        min(len(slabs), spark.sparkContext.defaultParallelism * 2)
-    )
+    dt = np.dtype(dtype)
+    sel = tuple(slice(o, o + z) for o, z in inner_win)
 
-    def decode(it):
-        dt = np.dtype(dtype)
-        with open(path, "rb") as fh:
-            for pdf in it:
-                rows = []
-                for r in pdf.itertuples():
-                    fh.seek(int(r.offset))
-                    raw = fh.read(int(r.nbytes))
-                    block = np.frombuffer(raw, dtype=dt).reshape(shape[1:])
-                    sel = tuple(slice(o, o + z) for o, z in inner_win)
-                    part = block[sel]
-                    rows.append(
-                        {
-                            "origin": [int(r.i0)] + [o for o, _ in inner_win],
-                            "dims": [1] + list(part.shape),
-                            "values": part.astype(np.float64).ravel().tolist(),
-                        }
-                    )
-                yield pd.DataFrame(rows)
+    def decode(r, fh):
+        fh.seek(int(r.offset))
+        block = np.frombuffer(fh.read(int(r.nbytes)), dtype=dt).reshape(shape[1:])
+        part = block[sel]
+        yield pd.DataFrame({
+            "origin": [[int(r.i0)] + [o for o, _ in inner_win]],
+            "dims": [[1] + list(part.shape)],
+            "values": [part.astype(np.float64).ravel().tolist()],
+        })
 
-    return plan.mapInPandas(decode, schema=schema)
+    return scan_manifest(spark, slabs, schema, decode, path)
 
 
 def read_netcdf_strings(spark: SparkSession, path: str, var: str) -> DataFrame:
@@ -456,41 +445,25 @@ def read_netcdf_strings(spark: SparkSession, path: str, var: str) -> DataFrame:
             for i in range(shape[0])
         ]
         lead_shape = shape[1:-1]
-    plan = spark.createDataFrame(pd.DataFrame(slabs))
-    if len(slabs) > 1:
-        plan = plan.repartition(
-            min(len(slabs), spark.sparkContext.defaultParallelism * 2)
-        )
     rank_gt1 = len(shape) > 1
 
-    def decode(it):
-        with open(path, "rb") as fh:
-            for pdf in it:
-                rows = []
-                for r in pdf.itertuples():
-                    fh.seek(int(r.offset))
-                    raw = fh.read(int(r.nbytes))
-                    mat = np.frombuffer(raw, dtype="S1").reshape(-1, strlen)
-                    for j in range(mat.shape[0]):
-                        s = (
-                            b"".join(mat[j])
-                            .rstrip(b"\x00 ")
-                            .decode("ascii", "replace")
-                        )
-                        idx = (
-                            [int(x) for x in np.unravel_index(j, lead_shape)]
-                            if lead_shape
-                            else []
-                        )
-                        rows.append(
-                            {
-                                "origin": ([int(r.i0)] if rank_gt1 else []) + idx,
-                                "value": s,
-                            }
-                        )
-                yield pd.DataFrame(rows, columns=["origin", "value"])
+    def decode(r, fh):
+        fh.seek(int(r.offset))
+        mat = np.frombuffer(fh.read(int(r.nbytes)), dtype="S1").reshape(-1, strlen)
+        rows = []
+        for j in range(mat.shape[0]):
+            s = b"".join(mat[j]).rstrip(b"\x00 ").decode("ascii", "replace")
+            idx = (
+                [int(x) for x in np.unravel_index(j, lead_shape)]
+                if lead_shape
+                else []
+            )
+            rows.append({"origin": ([int(r.i0)] if rank_gt1 else []) + idx,
+                         "value": s})
+        yield pd.DataFrame(rows, columns=["origin", "value"])
 
-    return plan.mapInPandas(decode, schema="origin array<int>, value string")
+    return scan_manifest(
+        spark, slabs, "origin array<int>, value string", decode, path)
 
 
 def netcdf_window(

@@ -40,6 +40,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gdal_spark.sources.scan import scan_manifest
+
 MAGIC = b"PMTiles"
 HEADER_SIZE = 127
 COMPRESSION_NONE = 1
@@ -384,32 +386,19 @@ def read_pmtiles(spark: SparkSession, path: str) -> DataFrame:
             f"PMTiles tile_compression={tile_comp} (brotli/zstd) unsupported; "
             "swap in a cluster codec library"
         )
-    ents = read_entries(path)
-    man = spark.createDataFrame(
-        pd.DataFrame(ents, columns=["z", "x", "y", "off", "ln"])
-    )
-    if len(ents) > 1:
-        man = man.repartition(
-            min(len(ents), spark.sparkContext.defaultParallelism * 2)
-        )
+    ents = [dict(zip(("z", "x", "y", "off", "ln"), e)) for e in read_entries(path)]
 
-    def fetch(it):
-        with open(path, "rb") as f:
-            for pdf in it:
-                rows = []
-                for r in pdf.itertuples():
-                    f.seek(data_off + int(r.off))
-                    blob = f.read(int(r.ln))
-                    if tile_comp == COMPRESSION_GZIP:
-                        blob = gzip.decompress(blob)
-                    rows.append(
-                        {
-                            "z": int(r.z),
-                            "tx": int(r.x),
-                            "ty": (1 << int(r.z)) - 1 - int(r.y),
-                            "tile": blob,
-                        }
-                    )
-                yield pd.DataFrame(rows, columns=["z", "tx", "ty", "tile"])
+    def fetch(r, f):
+        f.seek(data_off + int(r.off))
+        blob = f.read(int(r.ln))
+        if tile_comp == COMPRESSION_GZIP:
+            blob = gzip.decompress(blob)
+        yield pd.DataFrame({
+            "z": [int(r.z)],
+            "tx": [int(r.x)],
+            "ty": [(1 << int(r.z)) - 1 - int(r.y)],
+            "tile": [blob],
+        })
 
-    return man.mapInPandas(fetch, schema="z int, tx int, ty int, tile binary")
+    return scan_manifest(
+        spark, ents, "z int, tx int, ty int, tile binary", fetch, path)

@@ -47,6 +47,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from gdal_spark.functions import geometry as G
+from gdal_spark.sources.scan import scan_manifest
 
 SHP_NULL = 0
 SHP_POINT = 1
@@ -406,50 +407,42 @@ def read_shapefile(spark: SparkSession, base: str,
         else:
             spark_fields.append(f"`{name}` string")
     schema = "fid long, geom binary, " + ", ".join(spark_fields)
-    if not manifest:
-        return spark.createDataFrame([], schema)
-    man_df = spark.createDataFrame(pd.DataFrame(manifest)).repartition(
-        len(manifest))
 
-    def scan(batches):
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                with open(shp_path, "rb") as f:
-                    f.seek(row.shp_off)
-                    blob = f.read(row.shp_end - row.shp_off)
-                n = row.fid1 - row.fid0
-                with open(dbf_path, "rb") as f:
-                    f.seek(dbf_hdr + row.fid0 * dbf_rec)
-                    dblob = f.read(n * dbf_rec)
-                out = {"fid": np.arange(row.fid0, row.fid1, dtype=np.int64)}
-                geoms, o = [], 0
-                for _ in range(n):
-                    clen = struct.unpack_from(">i", blob, o + 4)[0] * 2
-                    geoms.append(_payload_to_wkb(blob[o + 8:o + 8 + clen]))
-                    o += 8 + clen
-                out["geom"] = geoms
-                arr = np.frombuffer(dblob, dtype=f"S{dbf_rec}", count=n)
-                arr = arr.view("S1").reshape(n, dbf_rec)
-                pos = 1
-                for name, ftype, width, dec in fields:
-                    raw = arr[:, pos:pos + width].view(f"S{width}").ravel()
-                    txt = np.char.strip(np.char.decode(raw, "utf-8"))
-                    if ftype == "N" and dec == 0:
-                        vals = pd.array(
-                            [int(t) if t else None for t in txt],
-                            dtype="Int64")
-                    elif ftype in ("N", "F"):
-                        vals = pd.array(
-                            [float(t) if t else None for t in txt],
-                            dtype="Float64")
-                    elif ftype == "L":
-                        vals = pd.array(
-                            [t in ("T", "t", "Y", "y") if t else None
-                             for t in txt], dtype="boolean")
-                    else:
-                        vals = txt
-                    out[name] = vals
-                    pos += width
-                yield pd.DataFrame(out)
+    def decode(row):
+        with open(shp_path, "rb") as f:
+            f.seek(row.shp_off)
+            blob = f.read(row.shp_end - row.shp_off)
+        n = row.fid1 - row.fid0
+        with open(dbf_path, "rb") as f:
+            f.seek(dbf_hdr + row.fid0 * dbf_rec)
+            dblob = f.read(n * dbf_rec)
+        out = {"fid": np.arange(row.fid0, row.fid1, dtype=np.int64)}
+        geoms, o = [], 0
+        for _ in range(n):
+            clen = struct.unpack_from(">i", blob, o + 4)[0] * 2
+            geoms.append(_payload_to_wkb(blob[o + 8:o + 8 + clen]))
+            o += 8 + clen
+        out["geom"] = geoms
+        arr = np.frombuffer(dblob, dtype=f"S{dbf_rec}", count=n)
+        arr = arr.view("S1").reshape(n, dbf_rec)
+        pos = 1
+        for name, ftype, width, dec in fields:
+            raw = arr[:, pos:pos + width].view(f"S{width}").ravel()
+            txt = np.char.strip(np.char.decode(raw, "utf-8"))
+            if ftype == "N" and dec == 0:
+                vals = pd.array(
+                    [int(t) if t else None for t in txt], dtype="Int64")
+            elif ftype in ("N", "F"):
+                vals = pd.array(
+                    [float(t) if t else None for t in txt], dtype="Float64")
+            elif ftype == "L":
+                vals = pd.array(
+                    [t in ("T", "t", "Y", "y") if t else None for t in txt],
+                    dtype="boolean")
+            else:
+                vals = txt
+            out[name] = vals
+            pos += width
+        yield pd.DataFrame(out)
 
-    return man_df.mapInPandas(scan, schema=schema)
+    return scan_manifest(spark, manifest, schema, decode)

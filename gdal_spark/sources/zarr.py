@@ -1,20 +1,21 @@
-"""Zarr v2 multidim source — the `GDALGroup`/`GDALMDArray` model.
+"""Zarr v2/v3 multidim source — the `GDALGroup`/`GDALMDArray` model.
 
 Reference surface: ``gcore/multidim/gdal_multidim.h`` (GDALGroup /
-GDALMDArray) and ``frmts/zarr/`` (GDAL's Zarr driver, Zarr v2
-encoding). SURVEY §1.1 declared multidim out of scope v1; this closes
-the common 2-D case the image workload actually meets: a chunked 2-D
-array read as a DataFrame of chunks, decoded in Arrow batches, with
-**chunk pruning as the partition-pruning analogue** — a window read
-lists only the chunk files it intersects, exactly like GDAL's
-``GetBlockRef`` and Spark's parquet partition pruning.
+GDALMDArray) and ``frmts/zarr/`` (GDAL's Zarr driver, Zarr v2 and v3
+encodings): a chunked array of any rank read as a DataFrame of chunks,
+decoded in Arrow batches, with **chunk pruning as the
+partition-pruning analogue** — a window read lists only the chunk
+files it intersects, exactly like GDAL's ``GetBlockRef`` and Spark's
+parquet partition pruning.
 
 Format notes (public Zarr v2 spec):
 - ``.zarray`` JSON: shape, chunks, dtype (NumPy endian-coded str),
   order ('C'/'F'), compressor (null or {"id": "zlib", "level": n}),
-  fill_value; chunk files named ``"<i>.<j>"`` (dot-separated, one
+  fill_value; chunk files named ``"<i>.<j>..."`` (dot-separated, one
   index per dimension).
 - Edge chunks are stored FULL-SIZE (padded with fill_value).
+- A chunk file that does not exist is uniformly ``fill_value``
+  (zarr-python omits all-fill chunks by default).
 
 Scope: any NumPy numeric dtype, C or F chunk order, compressors
 null / zlib / gzip / **zstd** (capability-probed libzstd,
@@ -24,15 +25,11 @@ null / zlib / gzip / **zstd** (capability-probed libzstd,
 library (its block/split container is only safely decoded by the
 real library).
 
-Scale design: ``read_zarr_chunks`` parallelizes over chunk files via
-``spark.read.format("binaryFile")`` (each chunk decodes independently
-inside ``mapInPandas``); a 100 TB array is just more chunk files.
-``window`` prunes with a pathGlobFilter-free filter on the chunk
-indices parsed from the file name — the filter reaches the file scan
-(binaryFile lists then filters by path column before reading content
-at 0 I/O cost for pruned rows thanks to lazy content loading... in
-practice we pre-compute the matching file list and pass it to load(),
-so pruned chunks are never even listed as splits).
+Scale design: ``read_zarr_chunks_nd`` parallelizes over chunk files
+through the ``binaryFile`` scan of ``sources/scan.py`` (each chunk
+decodes independently); a 100 TB array is just more chunk files.
+``window`` prunes on the chunk grid before the file list is built, so
+pruned chunks are never even listed as splits.
 """
 
 from __future__ import annotations
@@ -45,6 +42,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from gdal_spark.sources.scan import scan_files, scan_manifest
 
 
 _BLOSC_MSG = (
@@ -88,6 +87,31 @@ def _encode_chunk(raw: bytes, compressor: str | None, level: int) -> bytes:
     raise NotImplementedError(f"writer compressor {compressor!r}")
 
 
+def _zarray(shape, chunks, dtype, compressor: str | None, level: int,
+            fill_value) -> dict:
+    """The ``.zarray`` document of a C-order store this module writes."""
+    return {
+        "zarr_format": 2,
+        "shape": [int(v) for v in shape],
+        "chunks": [int(c) for c in chunks],
+        "dtype": np.dtype(dtype).str,
+        "order": "C",
+        "compressor": _comp_meta(compressor, level),
+        "fill_value": fill_value,
+        "filters": None,
+    }
+
+
+def _put_chunk(store: str, idx, raw: bytes) -> None:
+    """Executor-side chunk write through a temp file + atomic rename,
+    so a re-run or resume can never leave a torn chunk."""
+    final = os.path.join(store, ".".join(str(int(i)) for i in idx))
+    tmp = final + f".tmp{os.getpid()}"
+    with open(tmp, "wb") as f:
+        f.write(raw)
+    os.replace(tmp, final)
+
+
 def _decode_chunk(raw: bytes, comp_id: str | None, nbytes: int) -> bytes:
     """One chunk file's bytes → uncompressed buffer of `nbytes`."""
     if comp_id is None:
@@ -116,130 +140,9 @@ def _decode_chunk(raw: bytes, comp_id: str | None, nbytes: int) -> bytes:
 _KNOWN_COMP = (None, "zlib", "gzip", "zstd", "lz4")
 
 
-def write_zarr(
-    path: str,
-    arr: np.ndarray,
-    chunks: tuple[int, int],
-    compressor: str | None = "zlib",
-    level: int = 1,
-    fill_value=0,
-) -> None:
-    """Write a 2-D NumPy array as a Zarr v2 store (test/fixture
-    helper — the engine's sinks stay parquet/Iceberg; this exists so
-    the reader can be exercised hermetically)."""
-    if arr.ndim != 2:
-        raise ValueError("2-D arrays only")
-    os.makedirs(path, exist_ok=True)
-    cy, cx = chunks
-    meta = {
-        "zarr_format": 2,
-        "shape": list(arr.shape),
-        "chunks": [cy, cx],
-        "dtype": arr.dtype.str,
-        "order": "C",
-        "compressor": _comp_meta(compressor, level),
-        "fill_value": fill_value,
-        "filters": None,
-    }
-    with open(os.path.join(path, ".zarray"), "w") as f:
-        json.dump(meta, f)
-    h, w = arr.shape
-    for i in range(-(-h // cy)):
-        for j in range(-(-w // cx)):
-            block = np.full((cy, cx), fill_value, dtype=arr.dtype)
-            part = arr[i * cy : min((i + 1) * cy, h), j * cx : min((j + 1) * cx, w)]
-            block[: part.shape[0], : part.shape[1]] = part
-            raw = _encode_chunk(block.tobytes(order="C"), compressor, level)
-            with open(os.path.join(path, f"{i}.{j}"), "wb") as f:
-                f.write(raw)
-
-
-def read_zarray_meta(path: str) -> dict:
-    with open(os.path.join(path, ".zarray")) as f:
-        meta = json.load(f)
-    if len(meta["shape"]) != 2:
-        raise NotImplementedError("only 2-D arrays in this reader")
-    if meta.get("order", "C") not in ("C", "F"):
-        raise ValueError(f"bad order {meta.get('order')!r}")
-    comp = meta.get("compressor")
-    if comp is not None and comp.get("id") not in _KNOWN_COMP:
-        if comp.get("id") == "blosc":
-            raise NotImplementedError(_BLOSC_MSG)
-        raise NotImplementedError(
-            f"compressor {comp.get('id')!r} needs its codec library"
-        )
-    return meta
-
-
-def read_zarr_chunks(
-    spark: SparkSession,
-    path: str,
-    window: tuple[int, int, int, int] | None = None,
-) -> DataFrame:
-    """Chunked scan → (cy, cx, y0, x0, h, w, values array<double>)
-    per chunk, edge chunks trimmed to the array shape. ``window`` =
-    (y_off, x_off, h, w) prunes chunk FILES before Spark ever lists
-    them (the RasterIO window-read / partition-pruning analogue)."""
-    meta = read_zarray_meta(path)
-    H, W = meta["shape"]
-    CY, CX = meta["chunks"]
-    dtype = np.dtype(meta["dtype"])
-    comp_id = (meta.get("compressor") or {}).get("id")
-    order = meta.get("order", "C")
-
-    ny, nx = -(-H // CY), -(-W // CX)
-    if window is not None:
-        wy, wx, wh, ww = window
-        i0, i1 = wy // CY, min(ny - 1, (wy + wh - 1) // CY)
-        j0, j1 = wx // CX, min(nx - 1, (wx + ww - 1) // CX)
-    else:
-        i0, i1, j0, j1 = 0, ny - 1, 0, nx - 1
-    files = [
-        os.path.join(path, f"{i}.{j}")
-        for i in range(i0, i1 + 1)
-        for j in range(j0, j1 + 1)
-        if os.path.exists(os.path.join(path, f"{i}.{j}"))
-    ]
-    if not files:
-        return spark.createDataFrame(
-            [], "cy int, cx int, y0 int, x0 int, h int, w int, values array<double>"
-        )
-    scan = spark.read.format("binaryFile").load(files)
-
-    def decode(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                name = os.path.basename(r.path)
-                i, j = (int(v) for v in name.split("."))
-                raw = _decode_chunk(
-                    bytes(r.content), comp_id, CY * CX * dtype.itemsize)
-                block = np.frombuffer(raw, dtype=dtype).reshape(
-                    (CY, CX), order=order)
-                h = min(CY, H - i * CY)
-                w = min(CX, W - j * CX)
-                rows.append(
-                    {
-                        "cy": i,
-                        "cx": j,
-                        "y0": i * CY,
-                        "x0": j * CX,
-                        "h": h,
-                        "w": w,
-                        "values": block[:h, :w].astype(np.float64).ravel().tolist(),
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return scan.mapInPandas(
-        decode, schema="cy int, cx int, y0 int, x0 int, h int, w int, values array<double>"
-    )
-
-
 # ---------------------------------------------------------------------------
-# N-D hypercubes (round 4, VERDICT r03 item 9): time/band cubes of the
-# GDALMDArray model (gcore/multidim/gdal_multidim.h), arbitrary rank,
-# same chunk-file-pruning scan shape as the 2-D path.
+# N-D hypercubes: time/band cubes of the GDALMDArray model
+# (gcore/multidim/gdal_multidim.h), arbitrary rank.
 # ---------------------------------------------------------------------------
 
 
@@ -256,16 +159,7 @@ def write_zarr_nd(
     if len(chunks) != arr.ndim:
         raise ValueError("chunks rank must match array rank")
     os.makedirs(path, exist_ok=True)
-    meta = {
-        "zarr_format": 2,
-        "shape": list(arr.shape),
-        "chunks": list(int(c) for c in chunks),
-        "dtype": arr.dtype.str,
-        "order": "C",
-        "compressor": _comp_meta(compressor, level),
-        "fill_value": fill_value,
-        "filters": None,
-    }
+    meta = _zarray(arr.shape, chunks, arr.dtype, compressor, level, fill_value)
     with open(os.path.join(path, ".zarray"), "w") as f:
         json.dump(meta, f)
     grids = [range(-(-s // c)) for s, c in zip(arr.shape, chunks)]
@@ -407,6 +301,7 @@ def read_zarr_meta_v3(path: str) -> dict:
             {"id": "gzip"} if "gzip" in names
             else {"id": "zstd"} if "zstd" in names else None
         ),
+        "fill_value": m.get("fill_value"),
         "v3": True,
         "sep": sep,
     }
@@ -430,11 +325,12 @@ def read_zarr_chunks_nd(
     values array<double> row-major, edge-trimmed).
 
     ``window`` = [(off, size)] per dimension; the per-dimension
-    chunk-index ranges are intersected BEFORE the file list is built —
-    the N-D generalization of the 2-D path's partition pruning (GDAL
-    ``GetBlockRef`` / parquet partition pruning analogue): a window
-    over a (time, band, y, x) hypercube touches only the chunk files
-    of its time/band/space sub-grid."""
+    chunk-index ranges are intersected BEFORE the file list is built
+    (GDAL ``GetBlockRef`` / parquet partition pruning analogue): a
+    window over a (time, band, y, x) hypercube touches only the chunk
+    files of its time/band/space sub-grid. A planned chunk whose file
+    is absent reads as a ``fill_value`` block; with a null
+    ``fill_value`` the read raises ``ValueError`` naming the chunk."""
     import itertools
 
     meta = _read_meta_any(path)
@@ -454,48 +350,55 @@ def read_zarr_chunks_nd(
         ]
     else:
         ranges = [range(n) for n in ngrid]
-    files = []
+
+    def key(idx) -> str:
+        parts = [str(i) for i in idx]
+        return os.path.join("c", *parts) if v3 else ".".join(parts)
+
+    present, absent = [], []
     for idx in itertools.product(*ranges):
-        if v3:
-            p = os.path.join(path, "c", *[str(i) for i in idx])
+        f = os.path.join(path, key(idx))
+        if os.path.exists(f):
+            present.append(f)
         else:
-            p = os.path.join(path, ".".join(str(i) for i in idx))
-        if os.path.exists(p):
-            files.append(p)
+            absent.append(idx)
     schema = "idx array<int>, origin array<int>, dims array<int>, values array<double>"
-    if not files:
-        return spark.createDataFrame([], schema)
-    scan = spark.read.format("binaryFile").load(files)
     rank = len(shape)
 
-    def decode(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                if v3:  # .../c/<i>/<j>/<k> — last `rank` path parts
-                    parts = r.path.split("/")[-rank:]
-                    idx = [int(v) for v in parts]
-                else:
-                    idx = [int(v) for v in os.path.basename(r.path).split(".")]
-                nbytes = int(np.prod(csz)) * dtype.itemsize
-                raw = _decode_chunk(bytes(r.content), comp_id, nbytes)
-                block = np.frombuffer(raw, dtype=dtype).reshape(
-                    csz, order=order)
-                dims = [
-                    min(c, s - i * c) for i, c, s in zip(idx, csz, shape)
-                ]
-                trimmed = block[tuple(slice(0, d) for d in dims)]
-                rows.append(
-                    {
-                        "idx": idx,
-                        "origin": [i * c for i, c in zip(idx, csz)],
-                        "dims": dims,
-                        "values": trimmed.astype(np.float64).ravel().tolist(),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def chunk_row(idx, block):
+        dims = [min(c, s - i * c) for i, c, s in zip(idx, csz, shape)]
+        trimmed = block[tuple(slice(0, d) for d in dims)]
+        return pd.DataFrame({
+            "idx": [idx],
+            "origin": [[i * c for i, c in zip(idx, csz)]],
+            "dims": [dims],
+            "values": [trimmed.astype(np.float64).ravel().tolist()],
+        })
 
-    return scan.mapInPandas(decode, schema=schema)
+    def decode(fpath, content):
+        if v3:  # .../c/<i>/<j>/<k> — last `rank` path parts
+            idx = [int(v) for v in fpath.split("/")[-rank:]]
+        else:
+            idx = [int(v) for v in os.path.basename(fpath).split(".")]
+        nbytes = int(np.prod(csz)) * dtype.itemsize
+        raw = _decode_chunk(content, comp_id, nbytes)
+        yield chunk_row(idx, np.frombuffer(raw, dtype=dtype).reshape(csz, order=order))
+
+    df = scan_files(spark, present, schema, decode)
+    if not absent:
+        return df
+    fill = meta.get("fill_value")
+    if fill is None:
+        raise ValueError(
+            f"Zarr chunk {key(absent[0])!r} of {path} is absent and the "
+            "array's fill_value is null")
+    fill = float(fill) if isinstance(fill, str) else fill  # "NaN", "Infinity"
+
+    def decode_fill(row):
+        yield chunk_row([int(i) for i in row.idx], np.full(csz, fill, dtype=dtype))
+
+    return df.unionByName(scan_manifest(
+        spark, [{"idx": list(i)} for i in absent], schema, decode_fill))
 
 
 def zarr_hypercube_window(
@@ -587,7 +490,7 @@ def zarr_band_stats(spark: SparkSession, path: str) -> DataFrame:
     ``gcore/multidim/gdal_multidim.h``): per-chunk partial aggregates
     combined by Spark — one row (count, vmin, vmax, vsum, mean).
     Map-side partials: no per-pixel rows ever shuffle."""
-    chunks = read_zarr_chunks(spark, path)
+    chunks = read_zarr_chunks_nd(spark, path)
     per = chunks.select(
         F.size("values").alias("n"),
         F.array_min("values").alias("mn"),
@@ -608,33 +511,19 @@ def zarr_band_stats(spark: SparkSession, path: str) -> DataFrame:
 def zarr_window_values(
     spark: SparkSession, path: str, window: tuple[int, int, int, int]
 ) -> DataFrame:
-    """Window read → long-form (y, x, value) rows clipped to the
-    window; only intersecting chunk files are ever read."""
+    """2-D window read → long-form (y, x, value) rows clipped to the
+    window (y_off, x_off, h, w); only intersecting chunk files are
+    ever read."""
     wy, wx, wh, ww = window
-    chunks = read_zarr_chunks(spark, path, window)
-    exploded = chunks.select(
-        "y0",
-        "x0",
-        "w",
-        F.posexplode("values").alias("pos", "value"),
-    ).select(
-        (F.col("y0") + F.expr("pos DIV w")).cast("int").alias("y"),
-        (F.col("x0") + F.col("pos") % F.col("w")).cast("int").alias("x"),
-        "value",
-    )
-    return exploded.filter(
-        (F.col("y") >= wy)
-        & (F.col("y") < wy + wh)
-        & (F.col("x") >= wx)
-        & (F.col("x") < wx + ww)
-    )
+    return zarr_hypercube_window(spark, path, [(wy, wh), (wx, ww)]).select(
+        F.col("d0").alias("y"), F.col("d1").alias("x"), "value")
 
 
 def write_zarr_distributed(
     chunks: DataFrame,
     path: str,
-    shape: tuple[int, int],
-    chunk_shape: tuple[int, int],
+    shape: tuple[int, ...],
+    chunk_shape: tuple[int, ...],
     dtype: str = "<f8",
     compressor: str | None = "zlib",
     level: int = 1,
@@ -647,50 +536,28 @@ def write_zarr_distributed(
     distributed sink: every executor writes its partition's chunk
     files straight to the store (object-store pattern — one PUT per
     chunk, no driver funnel, no shuffle), and the driver writes the
-    tiny ``.zarray`` metadata document once.  Writes go through a
-    temp-file + atomic rename so a re-run/resume can never leave a
-    torn chunk (the tiler-manifest idempotency rule applied to the
-    multidim model).
+    tiny ``.zarray`` metadata document once.  Chunk writes are atomic
+    (``_put_chunk``), so a re-run/resume never leaves a torn chunk.
 
-    ``chunks`` must carry ``cy, cx`` (chunk indices) and ``values``
-    (row-major doubles, trimmed edge chunks allowed — padded back to
-    full chunk size with ``fill_value`` per the Zarr spec's
-    full-size-edge-chunk rule).
+    ``chunks`` carries the block rows ``read_zarr_chunks_nd`` emits:
+    ``idx`` (chunk index), ``dims`` and ``values`` (row-major doubles;
+    trimmed edge chunks are padded back to full chunk size with
+    ``fill_value`` per the Zarr spec's full-size-edge-chunk rule).
     """
     os.makedirs(path, exist_ok=True)
     dt = np.dtype(dtype)
-    meta = {
-        "zarr_format": 2,
-        "shape": [int(shape[0]), int(shape[1])],
-        "chunks": [int(chunk_shape[0]), int(chunk_shape[1])],
-        "dtype": dt.str,
-        "order": "C",
-        "compressor": (
-            {"id": "zlib", "level": int(level)} if compressor == "zlib" else None
-        ),
-        "fill_value": fill_value,
-        "filters": None,
-    }
+    csz = tuple(int(c) for c in chunk_shape)
+    meta = _zarray(shape, csz, dt, compressor, level, fill_value)
     with open(os.path.join(path, ".zarray"), "w") as f:
         json.dump(meta, f)
-    CY, CX = int(chunk_shape[0]), int(chunk_shape[1])
-    H, W = int(shape[0]), int(shape[1])
 
     def write_partition(rows):
         for r in rows:
-            i, j = int(r.cy), int(r.cx)
-            block = np.full((CY, CX), fill_value, dtype=dt)
-            h = min(CY, H - i * CY)
-            w = min(CX, W - j * CX)
-            vals = np.asarray(r.values, dtype=np.float64).reshape(h, w)
-            block[:h, :w] = vals.astype(dt)
-            raw = block.tobytes(order="C")
-            if compressor == "zlib":
-                raw = zlib.compress(raw, level)
-            final = os.path.join(path, f"{i}.{j}")
-            tmp = final + ".tmp"
-            with open(tmp, "wb") as f:
-                f.write(raw)
-            os.replace(tmp, final)  # atomic: resume-safe
+            dims = [int(d) for d in r.dims]
+            block = np.full(csz, fill_value, dtype=dt)
+            vals = np.asarray(r.values, dtype=np.float64).reshape(dims)
+            block[tuple(slice(0, d) for d in dims)] = vals.astype(dt)
+            _put_chunk(path, r.idx, _encode_chunk(
+                block.tobytes(order="C"), compressor, level))
 
     chunks.foreachPartition(write_partition)

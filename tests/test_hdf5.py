@@ -262,3 +262,26 @@ def test_dense_group_sweep():
     ]:
         inv = H5File(f"{REF}/{name}").inventory()
         assert len(inv) > 0, name
+
+
+def test_distributed_window_reads_unallocated_chunks_as_fill(spark, tmp_path, monkeypatch):
+    """A chunk the B-tree does not list (never written) is uniformly
+    the fill value; the distributed read must cover it like
+    ``H5File.read`` does instead of dropping its cells."""
+    from gdal_spark.sources import hdf5 as H5
+    from gdal_spark.sources.hdf5 import read_h5_window_distributed
+
+    cube = (np.arange(4 * 6 * 8) % 17 + 1).astype(np.float64).reshape(4, 6, 8)
+    p = str(tmp_path / "sparse.h5")
+    write_h5(p, {"v": (cube, (2, 3, 4))})
+    listed = H5._H5.chunk_manifest
+    monkeypatch.setattr(H5._H5, "chunk_manifest", lambda self, name: [
+        e for e in listed(self, name) if tuple(e[:3]) != (2, 3, 4)])
+    win = [(1, 4), (2, 6), (3, 8)]
+    want = H5File(p).read("v", win)
+    assert (want == 0).sum() == 2 * 3 * 4  # the unallocated chunk's cells
+    df = read_h5_window_distributed(spark, p, "v", win)
+    got = {(r[0], r[1], r[2]): r[3] for r in df.collect()}
+    assert len(got) == want.size
+    for (d0, d1, d2), v in got.items():
+        assert v == want[d0 - 1, d1 - 2, d2 - 3]

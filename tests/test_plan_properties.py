@@ -13,7 +13,6 @@ from typing import Callable, NamedTuple
 
 import pytest
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 import __spark_entry__ as E
 from gdal_spark import cache
@@ -219,7 +218,7 @@ def images(spark, sf_dir, tmp_path_factory):
     stages in a pyramid plan are the tiler's own and the render stage
     runs only a task per scan split of that file."""
     path = str(tmp_path_factory.mktemp("plan_props") / "images")
-    imgs = synth.images(spark, sf_dir).filter(F.col("image_id") < "img000000000050")
+    imgs = synth.images(spark, sf_dir, where="image_id < 'img000000000050'")
     imgs.coalesce(1).write.parquet(path)
     return spark.read.parquet(path)
 

@@ -15,7 +15,7 @@ def make_arr(h=37, w=53):
 def test_write_read_roundtrip(spark, tmp_path):
     arr = make_arr()
     p = str(tmp_path / "z1")
-    Z.write_zarr(p, arr, chunks=(16, 16))
+    Z.write_zarr_nd(p, arr, chunks=(16, 16))
     rows = Z.zarr_window_values(spark, p, (0, 0, 37, 53)).collect()
     assert len(rows) == 37 * 53
     got = np.zeros_like(arr, dtype=np.float64)
@@ -27,7 +27,7 @@ def test_write_read_roundtrip(spark, tmp_path):
 def test_uncompressed_and_dtypes(spark, tmp_path):
     arr = (np.arange(100, dtype=np.float32).reshape(10, 10)) / 4.0
     p = str(tmp_path / "z2")
-    Z.write_zarr(p, arr, chunks=(4, 4), compressor=None)
+    Z.write_zarr_nd(p, arr, chunks=(4, 4), compressor=None)
     stats = Z.zarr_band_stats(spark, p).collect()[0]
     assert stats["count"] == 100
     assert stats.vmin == 0.0 and stats.vmax == pytest.approx(99 / 4.0)
@@ -37,12 +37,12 @@ def test_uncompressed_and_dtypes(spark, tmp_path):
 def test_window_prunes_chunk_files(spark, tmp_path):
     arr = make_arr(64, 64)
     p = str(tmp_path / "z3")
-    Z.write_zarr(p, arr, chunks=(16, 16))  # 4x4 = 16 chunk files
+    Z.write_zarr_nd(p, arr, chunks=(16, 16))  # 4x4 = 16 chunk files
     # window entirely inside chunk (1,1)..(2,2) → at most 4 files scanned
-    df = Z.read_zarr_chunks(spark, p, window=(20, 20, 20, 20))
+    df = Z.read_zarr_chunks_nd(spark, p, window=[(20, 20), (20, 20)])
     chunk_rows = df.collect()
     assert len(chunk_rows) == 4
-    assert {(r.cy, r.cx) for r in chunk_rows} == {(1, 1), (1, 2), (2, 1), (2, 2)}
+    assert {tuple(r.idx) for r in chunk_rows} == {(1, 1), (1, 2), (2, 1), (2, 2)}
     # window values correct
     vals = Z.zarr_window_values(spark, p, (20, 20, 20, 20)).collect()
     assert len(vals) == 400
@@ -53,7 +53,7 @@ def test_window_prunes_chunk_files(spark, tmp_path):
 def test_edge_chunks_trimmed(spark, tmp_path):
     arr = make_arr(18, 18)  # chunks 16 → edge chunks 2 wide
     p = str(tmp_path / "z4")
-    Z.write_zarr(p, arr, chunks=(16, 16), fill_value=-999)
+    Z.write_zarr_nd(p, arr, chunks=(16, 16), fill_value=-999)
     stats = Z.zarr_band_stats(spark, p).collect()[0]
     assert stats["count"] == 18 * 18
     assert stats.vmin == float(arr.min())  # fill padding never leaks
@@ -72,7 +72,7 @@ def test_unsupported_compressor_raises(tmp_path):
              "compressor": {"id": "blosc"}, "fill_value": 0}, f
         )
     with pytest.raises(NotImplementedError, match="blosc"):
-        Z.read_zarray_meta(p)
+        Z.read_zarray_meta_nd(p)
 
 
 def test_distributed_zarr_writer_roundtrip(spark, tmp_path):
@@ -82,18 +82,18 @@ def test_distributed_zarr_writer_roundtrip(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from gdal_spark.sources.zarr import (
-        read_zarr_chunks,
-        write_zarr,
+        read_zarr_chunks_nd,
         write_zarr_distributed,
+        write_zarr_nd,
     )
 
     rng = np.random.default_rng(17)
     arr = (rng.random((70, 53)) * 100).astype("<f8")  # non-divisible by chunks
     src = str(tmp_path / "src.zarr")
     dst = str(tmp_path / "dst.zarr")
-    write_zarr(src, arr, chunks=(32, 16))
+    write_zarr_nd(src, arr, chunks=(32, 16))
 
-    chunks = read_zarr_chunks(spark, src)
+    chunks = read_zarr_chunks_nd(spark, src)
     doubled = chunks.withColumn(
         "values", F.transform("values", lambda v: v * F.lit(2.0))
     )
@@ -101,29 +101,54 @@ def test_distributed_zarr_writer_roundtrip(spark, tmp_path):
         doubled, dst, shape=arr.shape, chunk_shape=(32, 16), dtype="<f8"
     )
 
-    back = read_zarr_chunks(spark, dst).collect()
+    back = read_zarr_chunks_nd(spark, dst).collect()
     out = np.zeros_like(arr)
     for r in back:
-        out[r.y0 : r.y0 + r.h, r.x0 : r.x0 + r.w] = np.asarray(r.values).reshape(
-            r.h, r.w
-        )
+        (y0, x0), (h, w) = r.origin, r.dims
+        out[y0 : y0 + h, x0 : x0 + w] = np.asarray(r.values).reshape(h, w)
     assert np.array_equal(out, arr * 2.0)
 
     # window read on the written store still prunes to the right values
-    win = read_zarr_chunks(spark, dst, window=(40, 20, 10, 10)).collect()
-    assert all(r.y0 + r.h > 32 for r in win)  # only bottom chunk rows listed
+    win = read_zarr_chunks_nd(spark, dst, window=[(40, 10), (20, 10)]).collect()
+    assert all(r.origin[0] + r.dims[0] > 32 for r in win)  # only bottom chunk rows listed
 
     # re-write is idempotent (atomic replace, same bytes)
     write_zarr_distributed(
         doubled, dst, shape=arr.shape, chunk_shape=(32, 16), dtype="<f8"
     )
-    back2 = read_zarr_chunks(spark, dst).collect()
+    back2 = read_zarr_chunks_nd(spark, dst).collect()
     out2 = np.zeros_like(arr)
     for r in back2:
-        out2[r.y0 : r.y0 + r.h, r.x0 : r.x0 + r.w] = np.asarray(r.values).reshape(
-            r.h, r.w
-        )
+        (y0, x0), (h, w) = r.origin, r.dims
+        out2[y0 : y0 + h, x0 : x0 + w] = np.asarray(r.values).reshape(h, w)
     assert np.array_equal(out2, arr * 2.0)
+
+
+def test_absent_chunk_reads_as_fill_value(spark, tmp_path):
+    """A chunk file that is absent is uniformly fill_value (the Zarr v2
+    spec; zarr-python omits all-fill chunks by default): stats and
+    window reads count it, and a null fill_value names the chunk."""
+    import json
+    import os
+
+    arr = np.arange(64, dtype=np.float64).reshape(8, 8)
+    arr[:4, :4] = 0.0  # chunk 0.0 is all fill
+    p = str(tmp_path / "sparse")
+    Z.write_zarr_nd(p, arr, chunks=(4, 4), compressor=None, fill_value=0)
+    os.remove(os.path.join(p, "0.0"))
+    stats = Z.zarr_band_stats(spark, p).collect()[0]
+    assert stats["count"] == 64
+    assert stats.mean == pytest.approx(float(arr.mean()))
+    vals = Z.zarr_window_values(spark, p, (0, 0, 8, 8)).collect()
+    assert len(vals) == 64
+    assert all(r.value == arr[r.y, r.x] for r in vals)
+
+    meta_path = os.path.join(p, ".zarray")
+    meta = json.load(open(meta_path))
+    meta["fill_value"] = None
+    json.dump(meta, open(meta_path, "w"))
+    with pytest.raises(ValueError, match="'0.0'"):
+        Z.read_zarr_chunks_nd(spark, p)
 
 
 # ---------------------------------------------------------------------------

@@ -27,11 +27,11 @@ needs_lz4 = pytest.mark.skipif(get_liblz4() is None,
 
 
 def _collect_2d(spark, path, shape):
-    df = Z.read_zarr_chunks(spark, path)
+    df = Z.read_zarr_chunks_nd(spark, path)
     out = np.zeros(shape)
     for r in df.collect():
-        vals = np.array(r.values).reshape(r.h, r.w)
-        out[r.y0:r.y0 + r.h, r.x0:r.x0 + r.w] = vals
+        (y0, x0), (h, w) = r.origin, r.dims
+        out[y0:y0 + h, x0:x0 + w] = np.array(r.values).reshape(h, w)
     return out
 
 
@@ -40,7 +40,7 @@ def test_zstd_2d_roundtrip(spark, tmp_path):
     rng = np.random.default_rng(1)
     a = rng.integers(0, 1000, (37, 53)).astype(np.int32)
     p = str(tmp_path / "zs")
-    Z.write_zarr(p, a, (16, 16), compressor="zstd", level=3)
+    Z.write_zarr_nd(p, a, (16, 16), compressor="zstd", level=3)
     meta = json.load(open(os.path.join(p, ".zarray")))
     assert meta["compressor"]["id"] == "zstd"
     assert np.array_equal(_collect_2d(spark, p, a.shape), a)
@@ -51,10 +51,25 @@ def test_lz4_2d_roundtrip(spark, tmp_path):
     rng = np.random.default_rng(2)
     a = (rng.random((29, 41)) * 100).astype(np.float32)
     p = str(tmp_path / "l4")
-    Z.write_zarr(p, a, (16, 16), compressor="lz4")
+    Z.write_zarr_nd(p, a, (16, 16), compressor="lz4")
     meta = json.load(open(os.path.join(p, ".zarray")))
     assert meta["compressor"]["id"] == "lz4"
     assert np.allclose(_collect_2d(spark, p, a.shape), a)
+
+
+@needs_zstd
+def test_distributed_writer_zstd(spark, tmp_path):
+    # the distributed sink writes the compressor its .zarray names
+    a = np.arange(37 * 53, dtype=np.float64).reshape(37, 53)
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    Z.write_zarr_nd(src, a, (16, 16), compressor=None)
+    Z.write_zarr_distributed(Z.read_zarr_chunks_nd(spark, src), dst, a.shape,
+                             (16, 16), compressor="zstd", level=3)
+    meta = json.load(open(os.path.join(dst, ".zarray")))
+    assert meta["compressor"] == {"id": "zstd", "level": 3}
+    raw = open(os.path.join(dst, "0.0"), "rb").read()
+    assert raw[:4] == b"\x28\xb5\x2f\xfd"  # zstd frame magic
+    assert np.array_equal(_collect_2d(spark, dst, a.shape), a)
 
 
 @needs_lz4
@@ -113,4 +128,4 @@ def test_unknown_compressor_still_raises(tmp_path):
                "compressor": {"id": "lzfoo"}, "fill_value": 0},
               open(os.path.join(p, ".zarray"), "w"))
     with pytest.raises(NotImplementedError, match="lzfoo"):
-        Z.read_zarray_meta(p)
+        Z.read_zarray_meta_nd(p)
